@@ -670,7 +670,7 @@ def _calibrate(spark) -> dict[str, float]:
 PLAN_FP_VERSION = 4
 
 
-def _plan_fingerprint(df, version: int = PLAN_FP_VERSION) -> str | None:
+def _plan_fingerprint(df) -> str | None:
     """sha of the executed-plan string with run-varying ids normalized.
 
     Purpose (round-6 judge directive): a >20% timing flag on untouched
@@ -679,18 +679,9 @@ def _plan_fingerprint(df, version: int = PLAN_FP_VERSION) -> str | None:
     expression ids (#123), plan/stage/RDD ids, broadcast exchange ids —
     everything that differs between two executions of the SAME plan.
 
-    ``version``: v3 (current) rewrites ONLY names the analyzer provably
-    generates — ``lambda <var>_<n>`` (higher-order-function variables,
-    which the plan printer ALWAYS renders with the ``lambda `` prefix,
-    verified against every recorded plan in PLANS.md) and
-    ``_common_expr_<n>`` (CSE slots).  v2 (r8) additionally collapsed
-    bare ``col_<n>#`` / ``x_<n>#``, which would hash two genuinely
-    different plans identically if a user column were literally named
-    that (ADVICE r8); v1 (r7) blanket-rewrote any ``_<digits>#`` suffix.
-    Older formulas are kept so cross-round comparison against an
-    artifact recorded under them does not spuriously flag every query;
-    the artifact carries ``plan_fp_version`` so the next round picks
-    the right formula.
+    The artifact carries ``plan_fp_version``; a previous artifact
+    recorded under another version is not compared (see
+    _normalize_plan_str for the current formula).
     """
     import hashlib
     import re
@@ -703,11 +694,11 @@ def _plan_fingerprint(df, version: int = PLAN_FP_VERSION) -> str | None:
         s = executed_plan_str(df, stripped=False)
     except Exception:
         return None
-    s = _normalize_plan_str(s, version)
+    s = _normalize_plan_str(s)
     return hashlib.sha256(s.encode()).hexdigest()[:12]
 
 
-def _normalize_plan_str(s: str, version: int) -> str:
+def _normalize_plan_str(s: str) -> str:
     """The run-varying-id rewrite behind _plan_fingerprint, exposed as a
     pure function so tests exercise the REAL normalizer (an inline copy
     in the test cannot catch a regression here)."""
@@ -720,16 +711,10 @@ def _normalize_plan_str(s: str, version: int) -> str:
     # same plan.  Rewrite ONLY those known generated patterns — a blanket
     # `_\d+#` also collapses genuinely distinct user columns that end in
     # _<digits> (d_1 vs d_2 lag columns), which could hash two DIFFERENT
-    # plans identically and hide a real plan change.
-    if version >= 3:
-        s = re.sub(r"\b(lambda [A-Za-z]+|_common_expr)_\d+#", r"\1_n#", s)
-    elif version == 2:
-        s = re.sub(
-            r"\b(lambda [A-Za-z]+|_common_expr|col|x)_\d+#", r"\1_n#", s
-        )
-    else:
-        s = re.sub(r"_\d+#", "_n#", s)
-    # v4 (r14): excise the FileScan DataFilters span entirely.  The plan
+    # plans identically and hide a real plan change.  Lambda variables
+    # are always printed with the ``lambda `` prefix.
+    s = re.sub(r"\b(lambda [A-Za-z]+|_common_expr)_\d+#", r"\1_n#", s)
+    # Excise the FileScan DataFilters span entirely.  The plan
     # printer TRUNCATES that list at a fixed character budget, and the
     # raw (pre-normalization) expression-id widths (#123 vs #1234) shift
     # the cut point — two byte-identical plans then hash differently,
@@ -738,10 +723,7 @@ def _normalize_plan_str(s: str, version: int) -> str:
     # mechanism behind the phantom cross-round docscale plan-change
     # entries.  No semantic loss: the same predicates appear untruncated
     # in PushedFilters (id-free) and the scan columns in ReadSchema.
-    if version >= 4:
-        s = re.sub(
-            r"DataFilters: \[.*?(?=, Format:)", "DataFilters: [..]", s
-        )
+    s = re.sub(r"DataFilters: \[.*?(?=, Format:)", "DataFilters: [..]", s)
     s = re.sub(r"plan_id=\d+", "plan_id=x", s)
     s = re.sub(r"\[id=\d+\]", "[id=x]", s)
     s = re.sub(r"QueryStage \d+", "QueryStage x", s)
@@ -808,9 +790,6 @@ def main() -> None:
     spreads: dict[str, float] = {}
     samples: dict[str, list[float]] = {}
     plan_fps: dict[str, list[str | None]] = {}
-    # final-run fingerprints under OLDER normalizer formulas, kept only
-    # for comparison against artifacts recorded under those versions
-    plan_fps_old: dict[int, dict[str, str | None]] = {1: {}, 2: {}, 3: {}}
     def _drop_dead_blocks() -> None:
         """Unpin defunct checkpoint/broadcast blocks between queries.
 
@@ -927,10 +906,6 @@ def main() -> None:
             df.count()
             runs.append(round(time.perf_counter() - t0, 3))
             fps.append(_plan_fingerprint(df))
-        # older-formula fingerprints of the final plan, kept only for
-        # comparison against artifacts recorded under those versions
-        for ver in plan_fps_old:
-            plan_fps_old[ver][name] = _plan_fingerprint(df, version=ver)
         samples[name] = runs
         plan_fps[name] = fps
         timings[name] = round(statistics.median(runs), 3)
@@ -1324,23 +1299,20 @@ def main() -> None:
     }
     # plan-fingerprint drift vs previous round: a flagged regression with
     # a CHANGED fingerprint is a plan regression; unchanged fingerprint +
-    # min-over-min stability = environmental.  Compare under the FORMULA
-    # VERSION the previous artifact was recorded with (v1 artifacts get
-    # the v1 fingerprint of this round's plan) so a normalizer upgrade
-    # can never masquerade as a fleet-wide plan change.
-    def _cur_fp_for_ver(name: str, ver: int):
-        if ver >= PLAN_FP_VERSION:
-            return plan_fps[name][-1]
-        return plan_fps_old.get(ver, {}).get(name)
-
+    # min-over-min stability = environmental.  A previous artifact
+    # recorded under another FORMULA VERSION is not comparable (no
+    # changes reported) so a normalizer upgrade can never masquerade as
+    # a fleet-wide plan change.
     def _changed_vs(fp_map: dict, ver: int) -> list[str]:
+        if ver != PLAN_FP_VERSION:
+            return []
         return [
             n
             for n in plan_fps
             if n in fp_map
             and fp_map[n] not in (None, "FLAP")
-            and _cur_fp_for_ver(n, ver) is not None
-            and _cur_fp_for_ver(n, ver) != fp_map[n]
+            and plan_fps[n][-1] is not None
+            and plan_fps[n][-1] != fp_map[n]
         ]
 
     # Since r12 prev_fp IS the previous round's committed fingerprints

@@ -5882,10 +5882,13 @@ FROM truth t LEFT JOIN lsh l USING (doc_lo, doc_hi)
     "left-joined against the 8x2-banded LSH candidate set — per pair: "
     "exact Jaccard and whether the index caught it.  The audit a user "
     "runs before trusting banded LSH as the only dedup pass.  Scale "
-    "shape: the exact side is bounded by the sample contract (inverted "
-    "shingle index join, sample x corpus candidates), the LSH side is "
-    "the production banded pipeline reused verbatim, and sizes join "
-    "back broadcast.",
+    "shape: the exact side is bounded by the sample contract (sample x "
+    "corpus candidates); it joins on a 60-bit md5-prefix hash of each "
+    "shingle, not on the shingle string, so two distinct shingles merge "
+    "with probability <= 2^-60 per pair (both engines hash the same "
+    "way, and every local fixture has distinct hashes == distinct "
+    "shingles).  The LSH side is the production banded pipeline reused "
+    "verbatim, and sizes join back broadcast.",
 )
 def q_minhash_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs_wide(spark, sf_dir)

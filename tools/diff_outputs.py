@@ -1,11 +1,11 @@
-"""Compare query outputs between two repo trees (e.g. the working tree
-and the .ab_base round-start worktree) on one fixture dir — the
-result-identity gate for restructured queries.
+"""Compare query outputs between two repo trees (a base tree, e.g. a
+`git archive` of the parent commit, and this working tree) on one
+fixture dir — the result-identity gate for restructured queries.
 
 Runs in TWO subprocesses (one per tree) so each tree's modules import
 cleanly, writes sorted row dumps, diffs them here.
 
-Usage: python tools/diff_outputs.py <sf_dir> <query> [query ...]
+Usage: python tools/diff_outputs.py <base_tree> <sf_dir> <query> [query ...]
 """
 
 from __future__ import annotations
@@ -55,10 +55,9 @@ def run(root: str, sf_dir: str, names: list[str]) -> dict:
 
 
 def main() -> None:
-    sf_dir = sys.argv[1]
-    names = sys.argv[2:]
+    base, sf_dir = sys.argv[1], sys.argv[2]
+    names = sys.argv[3:]
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    base = os.path.join(here, ".ab_base")
     new = run(here, sf_dir, names)
     old = run(base, sf_dir, names)
     ok = True

@@ -1,10 +1,11 @@
 """Capture .explain("formatted") output for named queries into
-plans/r14/<query>_<tag>.txt — the optimization round's before/after
-plan evidence.
+plans/<round_dir>/<query>_<tag>.txt — an optimization round's
+before/after plan evidence.
 
 Usage:
-    python tools/explain_r14.py <tag> [sf_dir] <query> [query ...]
+    python tools/explain_capture.py <round_dir> <tag> [sf_dir] <query> [query ...]
 
+``round_dir`` names the directory under ``plans/`` (e.g. ``r15``);
 ``tag`` is typically ``before`` or ``after``.  The plan is the ANALYZED
 physical plan (pre-execution, AdaptiveSparkPlan isFinalPlan=false) —
 deterministic w.r.t. the code, unlike the AQE-final executed plan, so a
@@ -20,8 +21,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    rest = sys.argv[2:]
+    round_dir, tag = sys.argv[1], sys.argv[2]
+    rest = sys.argv[3:]
     if rest and os.path.isdir(rest[0]):
         sf_dir, names = rest[0], rest[1:]
     else:
@@ -30,14 +31,14 @@ def main() -> None:
     from quant_market_data_pipeline_spark.queries import load_all
     from quant_market_data_pipeline_spark.session import get_spark
 
-    spark = get_spark(app_name="explain_r14")
+    spark = get_spark(app_name="explain_capture")
     spark.sparkContext.setLogLevel("ERROR")
     registry = load_all()
 
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans",
-        "r14",
+        round_dir,
     )
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
