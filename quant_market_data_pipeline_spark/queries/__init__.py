@@ -77,6 +77,23 @@ TOUCHED = [
     "ann_ivfpq_recall_audit",
     "ann_ivfpq_adaptive_recall_audit",
     "ann_ivfpq_residual_recall_audit",
+    # started through session.start_stream (per-core state partitions);
+    # the five sketch sinks also write one file per batch leaf
+    "stream_attribution_e2e",
+    "stream_bars_5min_e2e",
+    "stream_bloom_e2e",
+    "stream_countmin_e2e",
+    "stream_crash_recovery_e2e",
+    "stream_hll_distinct_e2e",
+    "stream_kmv_e2e",
+    "stream_minhash_e2e",
+    "stream_quantile_e2e",
+    "stream_rsi_e2e",
+    "stream_sessionize_e2e",
+    "stream_vector_index_e2e",
+    "stream_vpin_e2e",
+    "stream_zscore_crash_e2e",
+    "stream_zscore_e2e",
 ]
 
 _REPO_ROOT = os.path.dirname(

@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from quant_market_data_pipeline_spark.queries import register
-from quant_market_data_pipeline_spark.session import configure_runtime
+from quant_market_data_pipeline_spark.session import configure_runtime, start_stream
 from quant_market_data_pipeline_spark.sources.tables import load_table
 from quant_market_data_pipeline_spark.streaming.bars_stream import TICK_SCHEMA
 from quant_market_data_pipeline_spark.streaming.pipeline import run_live_bars
@@ -235,13 +235,13 @@ def q_stream_attribution_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = stream_stream_attribution(
         views, purchases, key="user_id", ts="ts", horizon="1 hour"
     )
-    query = (
+    query = start_stream(
+        spark,
         joined.writeStream.format("parquet")
         .option("path", out)
         .option("checkpointLocation", ckpt)
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
     )
     query.awaitTermination()
 
@@ -328,13 +328,13 @@ def q_stream_sessionize_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     stream = read_tick_stream(spark, landing, schema=schema, fmt="parquet")
     sessions = sessionize_with_state(stream, gap="30 minutes")
-    query = (
+    query = start_stream(
+        spark,
         sessions.writeStream.format("parquet")
         .option("path", out)
         .option("checkpointLocation", ckpt)
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
     )
     query.awaitTermination()
 
@@ -436,13 +436,13 @@ def q_stream_zscore_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         ts="bar_ts",
         value="close",
     )
-    query = (
+    query = start_stream(
+        spark,
         z.writeStream.format("parquet")
         .option("path", out)
         .option("checkpointLocation", ckpt)
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
     )
     query.awaitTermination()
 
@@ -717,7 +717,7 @@ def _run_zscore_crash_recovery(spark: SparkSession, sf_dir: str):
         )
         if available_now:
             writer = writer.trigger(availableNow=True)
-        return writer.start()
+        return start_stream(spark, writer)
 
     q1 = start(available_now=False)
     phase1_batches = _kill_after_batches(q1)
@@ -873,13 +873,13 @@ def q_stream_rsi_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     rsi = wilder_rsi_stream(
         stream, period=14, key="symbol", ts="bar_ts", close="close"
     )
-    query = (
+    query = start_stream(
+        spark,
         rsi.writeStream.format("parquet")
         .option("path", out)
         .option("checkpointLocation", ckpt)
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
     )
     query.awaitTermination()
 
@@ -984,13 +984,13 @@ def q_stream_vpin_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         tiebreak="event_id",
         value="value",
     )
-    query = (
+    query = start_stream(
+        spark,
         vpin.writeStream.format("parquet")
         .option("path", out)
         .option("checkpointLocation", ckpt)
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
     )
     query.awaitTermination()
 
@@ -1122,17 +1122,19 @@ def q_stream_hll_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("batch_id", F.lit(batch_id))
         )
         (
-            partial.write.mode("overwrite")
+            # sketch-sized partial: one file per batch_id leaf
+            partial.coalesce(1)
+            .write.mode("overwrite")
             .partitionBy("batch_id")
             .option("partitionOverwriteMode", "dynamic")
             .parquet(regs_out)
         )
 
-    query = (
+    query = start_stream(
+        spark,
         stream.writeStream.foreachBatch(fold_batch)
         .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
     )
     query.awaitTermination()
 
@@ -1304,17 +1306,19 @@ def q_stream_quantile_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("batch_id", F.lit(batch_id))
         )
         (
-            partial.write.mode("overwrite")
+            # sketch-sized partial: one file per batch_id leaf
+            partial.coalesce(1)
+            .write.mode("overwrite")
             .partitionBy("batch_id")
             .option("partitionOverwriteMode", "dynamic")
             .parquet(hist_out)
         )
 
-    query = (
+    query = start_stream(
+        spark,
         stream.writeStream.foreachBatch(fold_batch)
         .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
     )
     query.awaitTermination()
 
@@ -1536,17 +1540,19 @@ def q_stream_countmin_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("batch_id", F.lit(batch_id))
         )
         (
-            partial.write.mode("overwrite")
+            # sketch-sized partial: one file per batch_id leaf
+            partial.coalesce(1)
+            .write.mode("overwrite")
             .partitionBy("batch_id")
             .option("partitionOverwriteMode", "dynamic")
             .parquet(cms_out)
         )
 
-    query = (
+    query = start_stream(
+        spark,
         stream.writeStream.foreachBatch(fold_batch)
         .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
     )
     query.awaitTermination()
 
@@ -1750,17 +1756,19 @@ def q_stream_bloom_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("batch_id", F.lit(batch_id))
         )
         (
-            partial.write.mode("overwrite")
+            # sketch-sized partial: one file per batch_id leaf
+            partial.coalesce(1)
+            .write.mode("overwrite")
             .partitionBy("batch_id")
             .option("partitionOverwriteMode", "dynamic")
             .parquet(bf_out)
         )
 
-    query = (
+    query = start_stream(
+        spark,
         stream.writeStream.foreachBatch(fold_batch)
         .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
     )
     query.awaitTermination()
 
@@ -1963,11 +1971,11 @@ def q_stream_minhash_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(sig_out)
         )
 
-    query = (
+    query = start_stream(
+        spark,
         stream.writeStream.foreachBatch(fold_batch)
         .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
     )
     query.awaitTermination()
 
@@ -2099,17 +2107,19 @@ def q_stream_kmv_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("batch_id", F.lit(batch_id))
         )
         (
-            partial.write.mode("overwrite")
+            # sketch-sized partial: one file per batch_id leaf
+            partial.coalesce(1)
+            .write.mode("overwrite")
             .partitionBy("batch_id")
             .option("partitionOverwriteMode", "dynamic")
             .parquet(kmv_out)
         )
 
-    query = (
+    query = start_stream(
+        spark,
         stream.writeStream.foreachBatch(fold_batch)
         .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
     )
     query.awaitTermination()
 
@@ -2361,11 +2371,11 @@ def q_stream_vector_index_e2e(
             .parquet(codes_out)
         )
 
-    query = (
+    query = start_stream(
+        spark,
         stream.writeStream.foreachBatch(fold_batch)
         .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
     )
     query.awaitTermination()
 

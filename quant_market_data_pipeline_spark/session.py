@@ -17,6 +17,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 # Static (must be set before the JVM starts) and runtime-mutable confs are
 # kept separate: `configure_runtime` can be applied to a session we did not
@@ -46,8 +47,12 @@ _STATIC_CONF: dict[str, str] = {
 _RUNTIME_CONF: dict[str, str] = {
     # Naive-UTC canonical timestamps (audit_pipeline.py:81-82).
     "spark.sql.session.timeZone": "UTC",
-    # Local harness: 32 cores -> 32 shuffle partitions; AQE coalesces below
-    # this when maps are small.  On a cluster this is set to 2-3x cores.
+    # Batch queries: 32 initial shuffle partitions (the bench host's core
+    # count); AQE coalesces below this when maps are small.  On a cluster
+    # this is set to 2-3x cores.  Streams do not use this value: a
+    # stateful operator keeps one state store per shuffle partition and
+    # AQE cannot coalesce them, so `start_stream` sizes every stream from
+    # the core count when it starts.
     "spark.sql.shuffle.partitions": os.environ.get(
         "SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"
     ),
@@ -103,12 +108,44 @@ def get_spark(
     return configure_runtime(spark)
 
 
+import threading as _threading
+
+# Serializes the set-and-restore in `start_stream`, so two threads
+# starting streams on one session cannot restore each other's value.
+_STREAM_START_LOCK = _threading.Lock()
+
+
+def start_stream(spark: SparkSession, writer: DataStreamWriter) -> StreamingQuery:
+    """Start ``writer`` with one shuffle partition per core.
+
+    Every stateful operator keeps one versioned state store per shuffle
+    partition, and every micro-batch opens and commits each of them, so
+    the session's batch value (32) costs 32 store commits per operator
+    per batch on a 4-core host.  The count is set to
+    ``defaultParallelism`` only around ``writer.start()``: Spark clones
+    the session's conf into the query when it starts and records the
+    count in a new checkpoint's offset log, and the session's own value
+    is restored before this returns.  A query that resumes an existing
+    checkpoint keeps the count recorded there, whatever the core count
+    now, because a checkpoint's state cannot be repartitioned.  A batch
+    query planned on another thread while ``start()`` runs also sees the
+    per-core count: its partition count changes, its result does not.
+    """
+    key = "spark.sql.shuffle.partitions"
+    with _STREAM_START_LOCK:
+        own = spark.conf.get(key)
+        spark.conf.set(key, str(spark.sparkContext.defaultParallelism))
+        try:
+            return writer.start()
+        finally:
+            spark.conf.set(key, own)
+
+
 # --- dimension-frame materialization ---------------------------------------
 # Bounded FIFO of frames materialize_dim has persisted: dimension frames
 # are tiny (|sources|, (source, bin) grids), but a long-lived session
 # (the correctness driver runs 200+ queries in one session) should not
 # accumulate cache entries forever.
-import threading as _threading
 
 _DIM_CACHE: list = []
 _DIM_CACHE_MAX = 16

@@ -202,6 +202,10 @@ def parquet_bar_sink(
     exactly-once at the batch level — while other batches' output is
     untouched.  Readers prune on ``trading_date`` (and ``partition_by``)
     as before; ``batch_id`` is just the idempotence scope.
+
+    Start the returned writer with ``session.start_stream``: the shuffle
+    partition count it sets is fixed into a new checkpoint, and a query
+    that resumes an existing checkpoint keeps the count recorded there.
     """
 
     part_cols = ["trading_date"] + ([partition_by] if partition_by else [])

@@ -17,6 +17,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
+from quant_market_data_pipeline_spark.session import start_stream
 from quant_market_data_pipeline_spark.streaming.bars_stream import (
     dedup_stream,
     parquet_bar_sink,
@@ -44,6 +45,11 @@ def run_live_bars(
     ``max_files_per_trigger`` splits the drain into multiple micro-batches
     (smaller state high-water marks; also how the multi-batch no-loss
     property of the sink is exercised in tests).
+
+    The query starts through ``session.start_stream``: a new checkpoint
+    fixes one shuffle partition (one state store per stateful operator)
+    per core, and a run that resumes an existing ``checkpoint_dir`` keeps
+    the count recorded in it.
     """
     ticks = read_tick_stream(
         spark,
@@ -61,4 +67,4 @@ def run_live_bars(
     writer = parquet_bar_sink(bars, out_dir, checkpoint_dir)
     if available_now:
         writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_stream(spark, writer)

@@ -10,11 +10,13 @@
 3. Artifact schema and lane gates: env-normalized fields, warm <= cold
    lane walls, unclamped warm-min gating, and slim-line headroom.
 4. Streaming scratch: per-process roots, one creation helper for every
-   query, and the age backstop on the stale-scratch sweep.
+   query, and the age backstop on the stale-scratch sweep; every engine
+   stream starts through ``session.start_stream``.
 """
 
 from __future__ import annotations
 
+import ast
 import json
 import os
 import re
@@ -259,6 +261,36 @@ def test_every_stream_query_creates_scratch_via_helper():
     names = re.findall(r'@register\(\s*\n?\s*"([^"]+)"', src)
     assert names
     assert src.count("= _query_scratch(sf_dir") == len(names)
+
+
+def test_every_engine_stream_starts_via_helper():
+    """The only zero-argument ``.start()`` in the package, thread starts
+    aside, is the one inside ``session.start_stream``: no engine stream
+    starts with the batch shuffle-partition count (one state store per
+    partition) instead of one per core."""
+    pkg = os.path.join(REPO, "quant_market_data_pipeline_spark")
+    sites = []
+    for root, _, files in os.walk(pkg):
+        for fn in sorted(files):
+            if not fn.endswith(".py"):
+                continue
+            path = os.path.join(root, fn)
+            with open(path) as f:
+                tree = ast.parse(f.read())
+            for node in ast.walk(tree):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "start"
+                    and not node.args
+                    and not node.keywords
+                    and "Thread(" not in ast.unparse(node.func.value)
+                ):
+                    rel = os.path.relpath(path, REPO)
+                    sites.append((rel, node.lineno, ast.unparse(node)))
+    assert [(rel, call) for rel, _, call in sites] == [
+        ("quant_market_data_pipeline_spark/session.py", "writer.start()")
+    ], f"start streams with session.start_stream: {sites}"
 
 
 def test_scratch_sweep_age_backstop(tmp_path, monkeypatch):

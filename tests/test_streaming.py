@@ -9,11 +9,15 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from quant_market_data_pipeline_spark.operators.bars import build_bars
+from quant_market_data_pipeline_spark.session import start_stream
 from quant_market_data_pipeline_spark.streaming.bars_stream import (
+    TICK_SCHEMA,
     dedup_stream,
+    parquet_bar_sink,
     read_tick_stream,
     stream_bars,
 )
+from quant_market_data_pipeline_spark.streaming.pipeline import run_live_bars
 
 
 def _write_landing(spark, events, landing):
@@ -541,3 +545,154 @@ def test_crash_recovery_exactly_once(spark):
     want = twin.toPandas().sort_values(["symbol", "bar_ts"]).reset_index(drop=True)
     assert len(got) == len(want) > 0, (len(got), len(want), stats)
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
+
+
+def _land_ticks(spark, landing, minute0):
+    """One parquet file of 40 ticks a minute apart, from ``minute0``."""
+    import datetime as dt
+
+    t0 = dt.datetime(2024, 1, 2, 9, 30) + dt.timedelta(minutes=minute0)
+    rows = [
+        (minute0 + i, t0 + dt.timedelta(minutes=i), "A", 100.0 + i)
+        for i in range(40)
+    ]
+    spark.createDataFrame(rows, TICK_SCHEMA).coalesce(1).write.mode(
+        "append"
+    ).parquet(landing)
+
+
+def _state_partitions(query):
+    """Every stateful operator's shuffle-partition count, over every
+    progress event of ``query``."""
+    counts = {
+        op.numShufflePartitions
+        for p in query.recentProgress
+        for op in p.stateOperators
+    }
+    assert counts, "no stateful operator reported progress"
+    return counts
+
+
+def test_start_stream_sizes_new_checkpoint_per_core(spark, tmp_path):
+    """A new checkpoint started through the engine gets one state store
+    per core in every stateful operator (dedup and window aggregate),
+    and the session's own batch value reads the same once ``start()``
+    has returned."""
+    key = "spark.sql.shuffle.partitions"
+    own = spark.conf.get(key)
+    assert own != str(spark.sparkContext.defaultParallelism)
+    landing = str(tmp_path / "landing")
+    _land_ticks(spark, landing, 0)
+    q = run_live_bars(
+        spark, landing, str(tmp_path / "out"), str(tmp_path / "ckpt"),
+        schema=TICK_SCHEMA, available_now=True,
+    )
+    assert spark.conf.get(key) == own
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert _state_partitions(q) == {spark.sparkContext.defaultParallelism}
+
+
+def test_start_stream_resume_keeps_checkpoint_partitions(spark, tmp_path):
+    """A checkpoint first started with a plain ``writer.start()`` at the
+    session's 32 partitions keeps 32 when it resumes through
+    ``start_stream``: its state cannot be repartitioned."""
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "32"
+    landing, out, ckpt = (str(tmp_path / d) for d in ("landing", "out", "ckpt"))
+
+    def writer():
+        ticks = read_tick_stream(spark, landing, fmt="parquet")
+        clean = dedup_stream(ticks, keys=["symbol", "event_id"])
+        bars = stream_bars(clean, width="5 minutes", watermark_delay=None)
+        return parquet_bar_sink(bars, out, ckpt).trigger(availableNow=True)
+
+    _land_ticks(spark, landing, 0)
+    q1 = writer().start()
+    q1.awaitTermination(120)
+    assert _state_partitions(q1) == {32}
+
+    _land_ticks(spark, landing, 40)
+    q2 = start_stream(spark, writer())
+    q2.awaitTermination(120)
+    assert q2.exception() is None
+    assert any(p.numInputRows > 0 for p in q2.recentProgress)
+    assert _state_partitions(q2) == {32}
+
+
+def test_sketch_sinks_write_one_file_per_batch_leaf(spark):
+    """The five sketch queries write each micro-batch's partial as one
+    parquet file under its ``batch_id=`` leaf, not one per shuffle
+    partition.  AQE partition coalescing is off for the runs: at this
+    scale it merges the partials' shuffle partitions into one anyway, and
+    the sink must not depend on it (at larger scale it keeps several)."""
+    from pathlib import Path
+
+    from quant_market_data_pipeline_spark.queries import load_all
+    from quant_market_data_pipeline_spark.queries.streaming_e2e import (
+        _SCRATCH,
+    )
+
+    sf_dir = "/root/testdata/sf0.001"
+    registry = load_all()
+    sinks = {  # query -> (scratch suffix, partials dir)
+        "stream_hll_distinct_e2e": ("_hll", "regs"),
+        "stream_quantile_e2e": ("_qh", "hist"),
+        "stream_countmin_e2e": ("_cms", "cms"),
+        "stream_bloom_e2e": ("_bloom", "bloom"),
+        "stream_kmv_e2e": ("_kmv", "kmv"),
+    }
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    own = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        for name in sinks:
+            registry[name].spark(spark, sf_dir).count()
+    finally:
+        spark.conf.set(key, own)
+    for name, (suffix, out) in sinks.items():
+        leaves = sorted((_SCRATCH / (Path(sf_dir).name + suffix) / out).glob(
+            "batch_id=*"
+        ))
+        assert len(leaves) > 1, (name, leaves)
+        files = {
+            leaf.name: len(list(leaf.glob("part-*.parquet"))) for leaf in leaves
+        }
+        assert set(files.values()) == {1}, (name, files)
+
+
+def test_start_stream_concurrent_starts_restore_session(spark):
+    """Threads starting streams on one session at once each start under
+    the per-core count, and the session's own value survives: without the
+    lock, one thread reads another's temporary value as the one to
+    restore."""
+    import sys
+    import threading
+    import time
+
+    key = "spark.sql.shuffle.partitions"
+    own = spark.conf.get(key)
+    per_core = str(spark.sparkContext.defaultParallelism)
+    seen = []
+
+    class Writer:
+        def start(self):
+            seen.append(spark.conf.get(key))
+            time.sleep(0.005)
+
+    def worker():
+        for _ in range(5):
+            start_stream(spark, Writer())
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=worker) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert seen == [per_core] * 40
+    assert spark.conf.get(key) == own

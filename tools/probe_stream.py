@@ -5,44 +5,28 @@ scheduling, state-store commits, checkpoint fsyncs, landing-dir setup),
 not data work — the per-operator table that says whether batch-side
 tuning can matter at all.
 
-Usage: python tools/probe_stream.py [query ...]
+Usage: python tools/probe_stream.py [query ...]   (default: every
+registered stream_* query).  Imports the package of the checkout the
+script lives in, so a copy of another tree times that tree.
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-
-STREAM_QUERIES = [
-    "stream_bars_5min_e2e",
-    "stream_attribution_e2e",
-    "stream_sessionize_e2e",
-    "stream_zscore_e2e",
-    "stream_crash_recovery_e2e",
-    "stream_zscore_crash_e2e",
-    "stream_rsi_e2e",
-    "stream_vpin_e2e",
-    "stream_hll_distinct_e2e",
-    "stream_quantile_e2e",
-    "stream_countmin_e2e",
-    "stream_bloom_e2e",
-    "stream_minhash_e2e",
-    "stream_kmv_e2e",
-    "stream_vector_index_e2e",
-]
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    names = sys.argv[1:] or STREAM_QUERIES
-
     from quant_market_data_pipeline_spark.queries import load_all
     from quant_market_data_pipeline_spark.session import get_spark
 
     spark = get_spark(app_name="probe_stream")
     spark.sparkContext.setLogLevel("ERROR")
     registry = load_all()
+    names = sys.argv[1:] or sorted(n for n in registry if n.startswith("stream_"))
 
     def calib() -> float:
         t0 = time.perf_counter()
