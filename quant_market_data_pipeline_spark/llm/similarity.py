@@ -26,6 +26,7 @@ results are reproducible across engines and runs.
 from __future__ import annotations
 
 import hashlib
+import math
 
 import numpy as np
 
@@ -863,14 +864,30 @@ def ivf_topk(
     )
 
 
-# --- product quantization (r12) ---------------------------------------------
-# The memory tier of production ANN: a 64-float vector (256 B) becomes
-# M=4 one-byte codes by quantizing each 16-dim subvector to its nearest
-# of K=16 codebook entries.  Codebooks here are the first K vectors'
-# subvectors (deterministic, the ivf_topk centroid convention — a
-# production deployment plugs k-means codebooks into the same plan).
+# --- vector-index recall audits ----------------------------------------------
+# One index pipeline with pluggable stages, composed by the PQ / IVF-PQ /
+# SQ8 / OPQ / LSH audits in queries/llm.py (their DuckDB twins are the
+# _sql_* CTE fragment functions there):
+#   filter:  ivf_probe + ivf_candidates (coarse cells), or the whole corpus;
+#   encode:  pq_encode against id-sliced or lloyd_train codebooks, on raw,
+#            residual (ivf_residuals) or rotated (opq_rotate) vectors;
+#   rank:    adc_ranked over the corpus or an IVF candidate set;
+#   refine:  rerank_topk, exact L2 over a candidate set;
+#   score:   recall_report against the exact top-AUDIT_K of the
+#            vec_id < AUDIT_QUERIES sample (l2_topk or exact_cosine_topk).
+# Every ranking orders by (rounded distance, neighbor id), so each stage is
+# deterministic on both engines.
+EMB_DIM = 64  # embedding width of every fixture (pinned by a test)
+AUDIT_QUERIES = 20  # audit query sample: vec_id < AUDIT_QUERIES
+AUDIT_K = 3  # recall@AUDIT_K
+
+# Product quantization (r12), the memory tier of production ANN: a 64-float
+# vector (256 B) becomes PQ_M one-byte codes by quantizing each PQ_SUB-dim
+# subvector to its nearest of PQ_K codebook entries.  The id-sliced
+# codebooks are the first PQ_K vectors' subvectors (the ivf_topk centroid
+# convention); lloyd_train derives the k-means ones from the same seed.
 PQ_M = 4  # subspaces
-PQ_SUB = 16  # dims per subspace
+PQ_SUB = EMB_DIM // PQ_M  # dims per subspace
 PQ_K = 16  # codebook entries per subspace
 
 
@@ -889,9 +906,10 @@ def l2_sq(
     Measured: ~3x faster on the n x sqrt(n) cell-assign cross joins
     (x16 corpus, same-session ABAB), but each unrolled site adds
     ~0.3-0.6 s of driver planning/codegen time, so ONLY the
-    million-pair sites pass ``dim`` — small-volume sites (PQ encode
-    legs, 20-query exact legs, the Lloyd training loop, which re-plans
-    per iteration) measured net-slower unrolled and keep the fold.
+    million-pair sites pass ``dim`` (:func:`ivf_probe`) — small-volume
+    sites (PQ encode legs, 20-query exact legs, the Lloyd training
+    loop, which re-plans per iteration) measured net-slower unrolled
+    and keep the fold.
     Caller contract: the arrays are EXACTLY ``dim`` wide — a shorter
     array yields NULL here (out-of-range get) where the fold would
     return a partial sum."""
@@ -911,13 +929,146 @@ def l2_sq(
     )
 
 
-def pq_subvectors(
-    vecs: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
+def audit_vectors(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(vecs, qv): the corpus as (vec_id, v) doubles and the audit query
+    sample as (query_id, qv) — the frames every L2 stage reads."""
+    vecs = emb.select("vec_id", as_double(F.col("embedding")).alias("v"))
+    qv = vecs.filter(F.col("vec_id") < AUDIT_QUERIES).select(
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
+    )
+    return vecs, qv
+
+
+def ranked(scored: DataFrame, order_col: str) -> DataFrame:
+    """Per-query ``rn`` over (order_col, neighbor_id)."""
+    w = Window.partitionBy("query_id").orderBy(order_col, "neighbor_id")
+    return scored.withColumn("rn", F.row_number().over(w))
+
+
+def top_ids(ranked_pairs: DataFrame, k: int = AUDIT_K) -> DataFrame:
+    """(query_id, neighbor_id) of the first ``k`` ranks."""
+    return ranked_pairs.filter(F.col("rn") <= k).select(
+        "query_id", "neighbor_id"
+    )
+
+
+def l2_topk(corpus: DataFrame, qv: DataFrame, vec_col: str = "v") -> DataFrame:
+    """Top-AUDIT_K by rounded L2 of every corpus row against the broadcast
+    query sample, self excluded: the exact ground truth over raw vectors,
+    or the SQ8 tier over its reconstructions (``vec_col="rv"``).  A
+    broadcast-nested-loop bounded by the sample contract."""
+    scored = (
+        corpus.crossJoin(F.broadcast(qv))
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            F.col("vec_id").alias("neighbor_id"),
+            l2_sq(F.col("qv"), F.col(vec_col)).alias("d2"),
+        )
+    )
+    return top_ids(ranked(scored, "d2"))
+
+
+def exact_cosine_topk(emb: DataFrame) -> DataFrame:
+    """Exact cosine top-AUDIT_K of the query sample — the LSH/IVF audits'
+    ground truth (:func:`cosine_topk`)."""
+    sample = emb.filter(F.col("vec_id") < AUDIT_QUERIES)
+    return cosine_topk(sample, emb, k=AUDIT_K).select(
+        "query_id", "neighbor_id"
+    )
+
+
+def rerank_topk(pairs: DataFrame, qv: DataFrame, vecs: DataFrame) -> DataFrame:
+    """Exact re-rank of (query_id, neighbor_id) candidates: raw vectors are
+    fetched at candidate-set size (output-sized joins), never the corpus."""
+    scored = (
+        pairs.select("query_id", "neighbor_id")
+        .join(F.broadcast(qv), "query_id")
+        .join(
+            vecs.select(
+                F.col("vec_id").alias("neighbor_id"), F.col("v").alias("nv")
+            ),
+            "neighbor_id",
+        )
+        .select(
+            "query_id",
+            "neighbor_id",
+            l2_sq(F.col("qv"), F.col("nv")).alias("d2"),
+        )
+    )
+    return top_ids(ranked(scored, "d2"))
+
+
+def n_cells_for(n: int) -> int:
+    """greatest(32, ceil(sqrt(n))): the FAISS cells~sqrt(n) law, integer
+    exact like the oracle's nconf."""
+    c = math.isqrt(n)
+    return max(32, c if c * c == n else c + 1)
+
+
+def ivf_centroids(vecs: DataFrame, n_cells: int) -> DataFrame:
+    """(cid, cv): the id-sliced coarse seeds, the first ``n_cells``
+    vectors."""
+    return vecs.filter(F.col("vec_id") < n_cells).select(
+        F.col("vec_id").alias("cid"), F.col("v").alias("cv")
+    )
+
+
+def ivf_probe(vecs: DataFrame, cents: DataFrame, n_probe: int) -> DataFrame:
+    """(vec_id, cell, cd2, probe_rank): each vector's ``n_probe`` nearest
+    centroids by rounded L2, lower cid winning ties — the canonical
+    IVFADC coarse metric.  The n x n_cells cross join is the one
+    million-pair site, so its L2 is unrolled (``l2_sq(dim=)``)."""
+    scored = vecs.crossJoin(F.broadcast(cents)).select(
+        "vec_id",
+        "cid",
+        l2_sq(F.col("v"), F.col("cv"), dim=EMB_DIM).alias("cd2"),
+    )
+    w = Window.partitionBy("vec_id").orderBy("cd2", "cid")
+    return (
+        scored.withColumn("probe_rank", F.row_number().over(w))
+        .filter(F.col("probe_rank") <= n_probe)
+        .select("vec_id", F.col("cid").alias("cell"), "cd2", "probe_rank")
+    )
+
+
+def ivf_candidates(
+    probed: DataFrame, assign: DataFrame | None = None
 ) -> DataFrame:
-    """(id, m, sv): each vector exploded into its M subvectors."""
+    """(query_id, neighbor_id, cell): every vector ``assign``-ed (default:
+    its rank-1 probe) to a cell a sample query probes — at most
+    n_probe * n / n_cells candidates per query."""
+    if assign is None:
+        assign = probed.filter(F.col("probe_rank") == 1)
+    return (
+        probed.filter(F.col("vec_id") < AUDIT_QUERIES)
+        .select(F.col("vec_id").alias("query_id"), "cell")
+        .join(
+            assign.select(F.col("vec_id").alias("neighbor_id"), "cell"),
+            "cell",
+        )
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .select("query_id", "neighbor_id", "cell")
+    )
+
+
+def ivf_residuals(
+    rows: DataFrame, cents: DataFrame, keys: list[str], vec_col: str
+) -> DataFrame:
+    """(*keys, v): ``vec_col`` minus the centroid of each row's ``cell``
+    (IVFADC residual encoding), centroids broadcast."""
+    return rows.join(F.broadcast(cents), F.col("cell") == F.col("cid")).select(
+        *keys, F.zip_with(vec_col, "cv", lambda a, b: a - b).alias("v")
+    )
+
+
+def pq_subvectors(
+    vecs: DataFrame, vec_col: str = "embedding", keys: tuple = ("vec_id",)
+) -> DataFrame:
+    """(*keys, m, sv): each vector exploded into its PQ_M subvectors."""
     v = as_double(F.col(vec_col))
     return vecs.select(
-        F.col(id_col),
+        *keys,
         F.explode(
             F.array(
                 *[
@@ -929,34 +1080,31 @@ def pq_subvectors(
                 ]
             )
         ).alias("__s"),
-    ).select(id_col, F.col("__s.m").alias("m"), F.col("__s.sv").alias("sv"))
+    ).select(*keys, F.col("__s.m").alias("m"), F.col("__s.sv").alias("sv"))
 
 
-def pq_codebooks(vecs: DataFrame, id_col: str = "vec_id") -> DataFrame:
+def pq_codebooks(vecs: DataFrame) -> DataFrame:
     """(m, cid, cv): the deterministic codebooks — first PQ_K vectors'
     subvectors per subspace."""
-    return (
-        pq_subvectors(vecs.filter(F.col(id_col) < PQ_K), id_col)
-        .select(
-            "m", F.col(id_col).alias("cid"), F.col("sv").alias("cv")
-        )
+    return pq_subvectors(vecs.filter(F.col("vec_id") < PQ_K)).select(
+        "m", F.col("vec_id").alias("cid"), F.col("sv").alias("cv")
     )
 
 
-def pq_encode(sub: DataFrame, codebooks: DataFrame, id_col: str = "vec_id") -> DataFrame:
-    """(id, m, cid, d2): each subvector's nearest codebook entry
-    (rounded-L2 argmin, lower cid wins ties — the ivf_assign tiebreak)
+def pq_encode(sub: DataFrame, codebooks: DataFrame) -> DataFrame:
+    """(vec_id, m, cid, d2): each subvector's nearest codebook entry
+    (rounded-L2 argmin, lower cid wins ties — the ivf_probe tiebreak)
     with its quantization error.  Codebooks broadcast (M*K tiny rows);
     encoding is a map-side scan over the corpus — at 100 TB this is the
     one full pass a PQ index build costs, and the output is 4 bytes of
     code per vector instead of 256 B of floats."""
     scored = sub.join(F.broadcast(codebooks), "m").select(
-        id_col,
+        "vec_id",
         "m",
         "cid",
         l2_sq(F.col("sv"), F.col("cv")).alias("d2"),
     )
-    w = Window.partitionBy(id_col, "m").orderBy("d2", "cid")
+    w = Window.partitionBy("vec_id", "m").orderBy("d2", "cid")
     return (
         scored.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
@@ -964,13 +1112,139 @@ def pq_encode(sub: DataFrame, codebooks: DataFrame, id_col: str = "vec_id") -> D
     )
 
 
-# --- k-means-trained PQ codebooks (r13) --------------------------------------
-# The production upgrade of pq_codebooks' id-sliced placeholder: a fixed
-# number of Lloyd iterations per subspace, seeded FROM that placeholder
-# (the first PQ_K vectors' subvectors) so both engines derive identical
-# codebooks from the data alone — no RNG, no engine-private state.
+def distortion_report(codes: DataFrame, label: str | None = None) -> DataFrame:
+    """Per subspace: (m, [codebook,] n_vecs, avg_sq_err, max_sq_err) of
+    the codes' quantization error — aggregated map-side to PQ_M rows."""
+    rep = codes.groupBy("m").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_vecs"),
+        F.round(F.avg("d2"), 6).alias("avg_sq_err"),
+        F.round(F.max("d2"), 6).alias("max_sq_err"),
+    )
+    if label is None:
+        return rep
+    return rep.select(
+        "m", F.lit(label).alias("codebook"), "n_vecs", "avg_sq_err", "max_sq_err"
+    )
+
+
+def adc_lut(qsub: DataFrame, codebooks: DataFrame) -> DataFrame:
+    """ADC lookup table: (query keys, m, cid, d2) from each raw query
+    subvector (``qsub``: query_id[, cell], m, sv) to every codebook entry
+    of its subspace — sample x M x K tiny rows, broadcast downstream."""
+    keys = [c for c in qsub.columns if c != "sv"]
+    return qsub.join(F.broadcast(codebooks), "m").select(
+        *keys, "cid", l2_sq(F.col("sv"), F.col("cv")).alias("d2")
+    )
+
+
+def adc_ranked(
+    codes: DataFrame, lut: DataFrame, cand: DataFrame | None = None
+) -> DataFrame:
+    """ADC distance (sum over subspaces of the query's LUT entry for each
+    neighbor's code), rounded and ranked per query as ``adist``/``rn``.
+
+    ``cand=None`` scans every code in the corpus; otherwise only the
+    candidate pairs, joined to the LUT on all its keys (per probed cell
+    for residual codes).  Either way the join carries integer keys only,
+    never float payloads."""
+    if cand is None:
+        pairs = (
+            codes.select("vec_id", "m", "cid")
+            .join(F.broadcast(lut), ["m", "cid"])
+            .filter(F.col("vec_id") != F.col("query_id"))
+            .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
+        )
+    else:
+        keys = [c for c in lut.columns if c != "d2"]
+        pairs = (
+            cand.join(
+                codes.select(F.col("vec_id").alias("neighbor_id"), "m", "cid"),
+                "neighbor_id",
+            )
+            .join(F.broadcast(lut), keys)
+            .groupBy("query_id", "neighbor_id")
+        )
+    return ranked(pairs.agg(F.round(F.sum("d2"), 6).alias("adist")), "adist")
+
+
+def pq_adc(
+    sub: DataFrame, codebooks: DataFrame, cand: DataFrame | None = None
+) -> DataFrame:
+    """Flat-PQ ADC ranking: encode ``sub`` against ``codebooks``, LUT from
+    the sample queries' own subvectors, :func:`adc_ranked`."""
+    qsub = sub.filter(F.col("vec_id") < AUDIT_QUERIES).select(
+        F.col("vec_id").alias("query_id"), "m", "sv"
+    )
+    return adc_ranked(pq_encode(sub, codebooks), adc_lut(qsub, codebooks), cand)
+
+
+def recall_columns(tier: str) -> tuple[str, str]:
+    return (f"n_hit_{tier}", f"recall_{tier}") if tier else (
+        "n_hit",
+        f"recall_at_{AUDIT_K}",
+    )
+
+
+def recall_report(
+    exact: DataFrame,
+    tiers: dict[str, DataFrame],
+    cand: DataFrame | None = None,
+    n_cells: int | None = None,
+) -> DataFrame:
+    """Per sample query: recall of each approximate tier against
+    ``exact`` (both (query_id, neighbor_id) top-k frames).
+
+    Columns: query_id, [n_cells], [n_cand], n_exact, then ``n_hit_<tier>``
+    for every tier and ``recall_<tier>`` for every tier, in ``tiers``
+    order; the unnamed tier ``""`` reports as n_hit / recall_at_3.
+    ``cand`` adds n_cand, the per-query candidate count (0 for a query
+    with no candidates); ``n_cells`` adds the index's cell count.  Every
+    frame joined to the ground truth is sample x k sized and broadcast."""
+    j = exact
+    for tier, approx in tiers.items():
+        j = j.join(
+            F.broadcast(
+                approx.filter(F.col("query_id") < AUDIT_QUERIES).select(
+                    "query_id",
+                    "neighbor_id",
+                    F.lit(1).alias(recall_columns(tier)[0]),
+                )
+            ),
+            ["query_id", "neighbor_id"],
+            "left",
+        )
+    keys = ["query_id"]
+    head: list = ["query_id"]
+    if n_cells is not None:
+        head.append(F.lit(n_cells).cast("bigint").alias("n_cells"))
+    if cand is not None:
+        n_cand = cand.groupBy("query_id").agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_cand")
+        )
+        j = j.join(F.broadcast(n_cand), "query_id", "left")
+        keys.append("n_cand")
+        head.append(
+            F.coalesce(F.col("n_cand"), F.lit(0).cast("bigint")).alias("n_cand")
+        )
+    hits = [recall_columns(t) for t in tiers]
+    n = F.count(F.lit(1))
+    return (
+        j.groupBy(*keys)
+        .agg(
+            n.cast("bigint").alias("n_exact"),
+            *[F.count(h).cast("bigint").alias(h) for h, _ in hits],
+            *[F.round(F.count(h).cast("double") / n, 6).alias(r) for h, r in hits],
+        )
+        .select(*head, "n_exact", *[h for h, _ in hits], *[r for _, r in hits])
+    )
+
+
+# --- k-means training: one Lloyd trainer for PQ codebooks (r13) and the ----
+# coarse IVF quantizer (r14), seeded from the id-sliced placeholders so both
+# engines derive identical centroids from the data alone — no RNG, no
+# engine-private state.
 #
-# Determinism contract (the ivf_assign discipline, applied to training):
+# Determinism contract (the oracle twin is queries/llm.py _sql_lloyd):
 #   - assignment: rounded-L2 argmin (round 6), lower cid wins ties;
 #   - update: per-dimension mean rounded to 6 digits — the rounding
 #     collapses partition-order summation drift so DuckDB's unrolled
@@ -978,103 +1252,19 @@ def pq_encode(sub: DataFrame, codebooks: DataFrame, id_col: str = "vec_id") -> D
 #   - empty cluster: KEEP the previous centroid (coalesce), never
 #     reseed — reseeding rules need an order over "farthest points"
 #     that is expensive to pin across engines;
-#   - fixed iteration count, training bounded to the first
-#     PQ_TRAIN_N vectors by id (a deterministic sample: k-means
-#     training cost must not grow with the corpus — FAISS trains on
-#     samples for the same reason).
+#   - fixed iteration count, training bounded to the lowest ids (a
+#     deterministic sample: k-means training cost must not grow with the
+#     corpus — FAISS trains on samples for the same reason).
 #
 # Scale shape: each iteration is one broadcast join of the bounded
-# training slice against M*K tiny centroid rows, a per-(vector,
-# subspace) WindowGroupLimit argmin, and a (m, cid, pos) grouped mean —
-# the centroid frame (M*K*SUB = 1024 doubles) is collected per
-# iteration and re-literalized, exactly the MLlib k-means driver loop.
-# The corpus-sized encode pass still happens ONCE, after training.
-PQ_TRAIN_N = 1024  # training sample bound (deterministic: lowest ids)
-PQ_ITERS = 5  # fixed Lloyd iterations (it5 beat it3/it8 on every metric at all three SFs)
-
-
-def pq_train_codebooks(
-    vecs: DataFrame,
-    id_col: str = "vec_id",
-    iters: int = PQ_ITERS,
-    train_n: int = PQ_TRAIN_N,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(m, cid, cv): k-means codebooks after ``iters`` Lloyd steps.
-
-    Seeded from :func:`pq_codebooks` (first PQ_K vectors' subvectors);
-    each step re-assigns the training slice to its nearest centroid
-    (rounded L2, lower cid tiebreak) and replaces every non-empty
-    centroid with the rounded per-dimension mean of its members.
-    Returns a literal-backed DataFrame (M*K rows) ready to broadcast
-    into :func:`pq_encode` — identical plan shape to the untrained
-    codebooks, which is the whole point.
-
-    Cross-engine parity contract (ADVICE r13): the recursion is exact
-    between engines iff no rounded quantity (assignment d2, centroid
-    mean) lands within summation-reordering drift of a 0.5e-6 boundary
-    at ANY iteration — one flipped bit at iteration 1 changes every
-    later assignment.  The margins are order statistics of the fixture,
-    so they are MEASURED, not assumed:
-    tests/test_r14_props.py::test_lloyd_round6_boundary_margin_canary
-    recomputes every rounded quantity unrounded via an independent
-    numpy twin and asserts >=100x headroom over the per-class drift
-    bound (d2: 16-term same-order fold, ~5.7e-10 boundary-units; means:
-    partial-agg reorder over <=1024 members, ~2e-8) on every committed
-    fixture.  If a regenerated fixture trips the canary, widen the
-    trained-codebook tolerance contract (drift-retry) rather than
-    chasing a phantom engine bug.
-    """
-    spark = vecs.sparkSession
-    tsub = materialize_corpus(
-        pq_subvectors(
-            vecs.filter(F.col(id_col) < train_n), id_col, vec_col
-        )
-    )
-    # seed: first PQ_K vectors' subvectors, collected (M*K tiny rows)
-    seed = (
-        pq_subvectors(vecs.filter(F.col(id_col) < PQ_K), id_col, vec_col)
-        .select("m", F.col(id_col).alias("cid"), F.col("sv").alias("cv"))
-        .collect()
-    )
-    cb = {(r["m"], r["cid"]): list(r["cv"]) for r in seed}
-    cb_schema = "m INT, cid BIGINT, cv ARRAY<DOUBLE>"
-    for _ in range(iters):
-        cb_df = spark.createDataFrame(
-            [(m, c, v) for (m, c), v in sorted(cb.items())], cb_schema
-        )
-        scored = tsub.join(F.broadcast(cb_df), "m").select(
-            id_col,
-            "m",
-            "cid",
-            "sv",
-            l2_sq(F.col("sv"), F.col("cv")).alias("d2"),
-        )
-        w = Window.partitionBy(id_col, "m").orderBy("d2", "cid")
-        assigned = (
-            scored.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .select("m", "cid", F.posexplode("sv").alias("pos", "val"))
-        )
-        means = (
-            assigned.groupBy("m", "cid", "pos")
-            .agg(F.round(F.avg("val"), 6).alias("val"))
-            .collect()
-        )
-        nxt: dict[tuple[int, int], list[float]] = {}
-        for r in means:
-            nxt.setdefault((r["m"], r["cid"]), [0.0] * PQ_SUB)[r["pos"]] = r[
-                "val"
-            ]
-        # empty cluster: keep the previous centroid
-        cb = {key: nxt.get(key, prev) for key, prev in cb.items()}
-    return spark.createDataFrame(
-        [(m, c, v) for (m, c), v in sorted(cb.items())], cb_schema
-    )
-
-
-IVF_TRAIN_ITERS = 5  # same fixed-iteration contract as PQ_ITERS
-IVF_TRAIN_MIN_N = 1024  # training slice >= max(this, 32*n_cells)
+# training slice against the tiny centroid frame, a per-vector
+# WindowGroupLimit argmin, and a grouped mean; the centroid frame is
+# collected per iteration and re-literalized, exactly the MLlib k-means
+# driver loop.  The corpus-sized encode pass still happens ONCE, after
+# training.
+PQ_TRAIN_N = 1024  # PQ training slice bound (deterministic: lowest ids)
+LLOYD_ITERS = 5  # fixed Lloyd iterations (it5 beat it3/it8 on every metric at all three SFs)
+IVF_TRAIN_MIN_N = 1024  # coarse training slice >= max(this, 32*n_cells)
 IVF_TRAIN_PER_CELL = 32  # FAISS-guidance training budget per centroid
 
 
@@ -1086,87 +1276,95 @@ def ivf_train_slice_n(n_cells: int) -> int:
     cell populations and makes max-cell skew WORSE than the id-sliced
     seed (4.98 vs 3.93); at 32/cell the trained centroids converge
     (identical at 57/cell and full-corpus) with skew 3.81 and coarse
-    distortion 0.151 vs the seed's 0.479.  Data-derived the same way
-    in the DuckDB oracle: greatest(1024, 32*n_cells).  Cost shape:
-    slice x n_cells = 32*n_cells^2 per iteration — O(n) under the
-    cells~sqrt(n) law, the same order as the corpus assignment pass
-    itself."""
+    distortion 0.151 vs the seed's 0.479.  Cost shape: slice x n_cells
+    = 32*n_cells^2 per iteration — O(n) under the cells~sqrt(n) law,
+    the same order as the corpus assignment pass itself."""
     return max(IVF_TRAIN_MIN_N, IVF_TRAIN_PER_CELL * n_cells)
 
 
-def ivf_train_centroids(
-    vecs: DataFrame,
-    n_cells: int,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
-    iters: int = IVF_TRAIN_ITERS,
+def lloyd_train(
+    vecs: DataFrame, vec_col: str = "embedding", n_cells: int | None = None
 ) -> DataFrame:
-    """(ccid, ccv): k-means-TRAINED coarse quantizer after ``iters``
-    Lloyd steps at full vector width — :func:`pq_train_codebooks`'
-    machinery pointed at the 64-dim coarse level (VERDICT r13 #2).
+    """k-means centroids after LLOYD_ITERS Lloyd steps, as a literal-backed
+    frame ready to broadcast into :func:`pq_encode` / :func:`ivf_probe` —
+    the same plan shape as the id-sliced seeds, which is the point.
 
-    Why: the id-sliced coarse seeds (``vec_id < n_cells``) are
-    arbitrary data points; on clustered corpora several land inside
-    the same mixture component and nearest-centroid assignment splits
-    cell populations arbitrarily — hot cells break the cells~sqrt(n)
-    candidate bound whose premise is balance.  Lloyd steps move the
-    centroids toward the population's actual mass.
+    - ``n_cells=None``: PQ codebooks (m, cid, cv) per subspace, seeded from
+      :func:`pq_codebooks` (first PQ_K vectors), trained on the first
+      PQ_TRAIN_N vectors by id.
+    - ``n_cells=k``: full-width coarse centroids (cid, cv), seeded from the
+      first k vectors, trained on the first :func:`ivf_train_slice_n`
+      (k) = max(1024, 32*k) vectors by id.
 
-    Determinism contract (identical to the PQ trainer, oracle-twinned
-    by the unrolled-CTE chain): seed = first ``n_cells`` vectors by id,
-    training slice = first :func:`ivf_train_slice_n` vectors by id,
-    rounded-L2 argmin assignment with the lower-ccid tiebreak, per-
-    dimension means rounded to 6 digits, empty cells keep the previous
-    centroid.  Scale shape: per iteration one broadcast of n_cells
-    centroid rows against the BOUNDED training slice and one
-    (n_cells x dim)-row driver collect — corpus-independent.  At
-    n_cells beyond ~1e4 (corpora past ~1e8 vectors) the driver-loop
-    collect stops being free and training belongs to MLlib KMeans;
-    this trainer's contract is the oracle-checkable audit range.
+    Each step re-assigns the training slice to its nearest centroid
+    (rounded L2, lower cid tiebreak) and replaces every non-empty
+    centroid with the rounded per-dimension mean of its members.
+
+    Cross-engine parity contract (ADVICE r13): the recursion is exact
+    between engines iff no rounded quantity (assignment d2, centroid
+    mean) lands within summation-reordering drift of a 0.5e-6 boundary
+    at ANY iteration — one flipped bit at iteration 1 changes every
+    later assignment.  The margins are order statistics of the fixture,
+    so they are MEASURED, not assumed:
+    tests/test_vector_quantization.py::test_lloyd_round6_boundary_margin_canary
+    recomputes every rounded quantity unrounded via an independent
+    numpy twin and asserts >=100x headroom over the per-class drift
+    bound (d2: 16-term same-order fold, ~5.7e-10 boundary-units; means:
+    partial-agg reorder over <=1024 members, ~2e-8) on every committed
+    fixture.  If a regenerated fixture trips the canary, widen the
+    trained-codebook tolerance contract (drift-retry) rather than
+    chasing a phantom engine bug.  At n_cells beyond ~1e4 (corpora past
+    ~1e8 vectors) the driver-loop collect stops being free and coarse
+    training belongs to MLlib KMeans; this trainer's contract is the
+    oracle-checkable audit range.
     """
     spark = vecs.sparkSession
-    train_n = ivf_train_slice_n(n_cells)
-    tr = materialize_corpus(
-        vecs.filter(F.col(id_col) < train_n).select(
-            F.col(id_col).alias("vec_id"),
-            as_double(F.col(vec_col)).alias("v"),
-        )
+    part = [] if n_cells else ["m"]
+    n_seed = n_cells or PQ_K
+    train_n = ivf_train_slice_n(n_cells) if n_cells else PQ_TRAIN_N
+
+    def rows(upto: int) -> DataFrame:  # (vec_id, *part, sv)
+        head = vecs.filter(F.col("vec_id") < upto)
+        if n_cells:
+            return head.select("vec_id", as_double(F.col(vec_col)).alias("sv"))
+        return pq_subvectors(head, vec_col)
+
+    train = materialize_corpus(rows(train_n))
+    cb = {
+        (*[r[p] for p in part], r["vec_id"]): list(r["sv"])
+        for r in rows(n_seed).collect()
+    }
+    width = len(next(iter(cb.values())))
+    schema = ", ".join(
+        [*(f"{p} INT" for p in part), "cid BIGINT", "cv ARRAY<DOUBLE>"]
     )
-    seed = (
-        vecs.filter(F.col(id_col) < n_cells)
-        .select(
-            F.col(id_col).alias("ccid"),
-            as_double(F.col(vec_col)).alias("ccv"),
+    for _ in range(LLOYD_ITERS):
+        cb_df = F.broadcast(
+            spark.createDataFrame([(*k, v) for k, v in sorted(cb.items())], schema)
         )
-        .collect()
-    )
-    cb = {r["ccid"]: list(r["ccv"]) for r in seed}
-    dim = len(next(iter(cb.values())))
-    cb_schema = "ccid BIGINT, ccv ARRAY<DOUBLE>"
-    for _ in range(iters):
-        cb_df = spark.createDataFrame(sorted(cb.items()), cb_schema)
-        scored = tr.crossJoin(F.broadcast(cb_df)).select(
-            "vec_id",
-            "ccid",
-            "v",
-            l2_sq(F.col("v"), F.col("ccv")).alias("d2"),
+        scored = (
+            train.join(cb_df, part) if part else train.crossJoin(cb_df)
+        ).select(
+            "vec_id", *part, "cid", "sv", l2_sq(F.col("sv"), F.col("cv")).alias("d2")
         )
-        w = Window.partitionBy("vec_id").orderBy("d2", "ccid")
-        assigned = (
+        w = Window.partitionBy("vec_id", *part).orderBy("d2", "cid")
+        means = (
             scored.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
-            .select("ccid", F.posexplode("v").alias("pos", "val"))
-        )
-        means = (
-            assigned.groupBy("ccid", "pos")
+            .select(*part, "cid", F.posexplode("sv").alias("pos", "val"))
+            .groupBy(*part, "cid", "pos")
             .agg(F.round(F.avg("val"), 6).alias("val"))
             .collect()
         )
-        nxt: dict[int, list[float]] = {}
+        nxt: dict[tuple, list[float]] = {}
         for r in means:
-            nxt.setdefault(r["ccid"], [0.0] * dim)[r["pos"]] = r["val"]
-        cb = {cid: nxt.get(cid, prev) for cid, prev in cb.items()}
-    return spark.createDataFrame(sorted(cb.items()), cb_schema)
+            key = (*[r[p] for p in part], r["cid"])
+            nxt.setdefault(key, [0.0] * width)[r["pos"]] = r["val"]
+        # empty cluster: keep the previous centroid
+        cb = {key: nxt.get(key, prev) for key, prev in cb.items()}
+    return spark.createDataFrame(
+        [(*k, v) for k, v in sorted(cb.items())], schema
+    )
 
 
 # --- SQ8 scalar quantizer (r13 audit, factored r14 for the streamed -----
@@ -1177,7 +1375,7 @@ def ivf_train_centroids(
 # so the two paths cannot drift apart; the DuckDB twins live as
 # queries/llm.py SQ8_*_CTE fragments under the same contract.
 def sq8_dim_stats(
-    vecs: DataFrame, vec_col: str = "v", dim: int = 64
+    vecs: DataFrame, vec_col: str = "v", dim: int = EMB_DIM
 ) -> tuple[list[float], list[float]]:
     """(lo, hi) per dimension: one map-side min/max agg collected at
     ``dim`` rows — the frozen quantizer parameters.  Bounded collect
@@ -1249,7 +1447,7 @@ def sq8_recon(
     )
 
 
-def opq_rotation_matrix(dim: int = 64, round_digits: int = 6) -> list[list[float]]:
+def opq_rotation_matrix(dim: int = EMB_DIM, round_digits: int = 6) -> list[list[float]]:
     """A fixed seeded near-orthonormal rotation for the OPQ-style ADC
     tier (VERDICT r13 stretch #7): pure-Python Gram-Schmidt over an
     md5-derived base matrix (same hash convention as

@@ -73,10 +73,24 @@ TOUCHED = [
     "minhash_recall_audit",
     # gram-frame materialization reverted
     "dup_span_coverage",
-    # cell-assign L2 fold unrolled (llm/similarity.py l2_sq(dim=))
+    # cell-assign L2 fold unrolled (llm/similarity.py l2_sq(dim=)); then,
+    # with the rest of the family below, rewritten over the recall-audit
+    # kernel (llm/similarity.py) and the shared _sql_* oracle fragments
     "ann_ivfpq_recall_audit",
     "ann_ivfpq_adaptive_recall_audit",
     "ann_ivfpq_residual_recall_audit",
+    "ann_ivfpq_trained_recall_audit",
+    "ann_recall_audit",
+    "ann_mt_recall_audit",
+    "ann_mp_recall_audit",
+    "ann_ivf_recall_audit",
+    "pq_reconstruction_report",
+    "pq_adc_recall_audit",
+    "pq_trained_recall_audit",
+    "pq_trained_distortion_report",
+    "pq_residual_distortion_report",
+    "sq8_recall_audit",
+    "opq_rotation_recall_audit",
     # started through session.start_stream (per-core state partitions);
     # the five sketch sinks also write one file per batch leaf
     "stream_attribution_e2e",

@@ -9,6 +9,8 @@ deterministic and oracle-checkable (see llm/hashing.py; re-exported by the funct
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -28,9 +30,48 @@ from quant_market_data_pipeline_spark.llm.hashing import (
     word_tokens,
 )
 from quant_market_data_pipeline_spark.llm.similarity import (
+    AUDIT_K,
+    AUDIT_QUERIES,
+    EMB_DIM,
+    IVF_TRAIN_MIN_N,
+    IVF_TRAIN_PER_CELL,
+    LLOYD_ITERS,
+    PQ_K,
+    PQ_M,
+    PQ_SUB,
+    PQ_TRAIN_N,
+    adc_lut,
+    adc_ranked,
+    audit_vectors,
     blocked_neardup_pairs,
     cosine_topk,
+    distortion_report,
+    exact_cosine_topk,
+    ivf_candidates,
+    ivf_centroids,
+    ivf_probe,
+    ivf_residuals,
+    ivf_topk,
+    l2_sq,
+    l2_topk,
+    lloyd_train,
     lsh_cosine_topk,
+    lsh_multiprobe_topk,
+    lsh_multitable_topk,
+    n_cells_for,
+    opq_rotate,
+    opq_rotation_matrix,
+    pq_adc,
+    pq_codebooks,
+    pq_encode,
+    pq_subvectors,
+    recall_columns,
+    recall_report,
+    rerank_topk,
+    sq8_codes,
+    sq8_dim_stats,
+    sq8_recon,
+    top_ids,
 )
 from quant_market_data_pipeline_spark.llm.text import (
     normalized_text,
@@ -926,7 +967,7 @@ SELECT query_id, neighbor_id, bucket, cos_sim, rn FROM ranked WHERE rn <= 3
 )
 def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _embeddings(spark, sf_dir)
-    return lsh_cosine_topk(emb, dim=64, k=3, neighbor_cap=_LSH_CAP)
+    return lsh_cosine_topk(emb, dim=EMB_DIM, k=3, neighbor_cap=_LSH_CAP)
 
 
 # 4 independent tables x adaptive planes (table t = global plane
@@ -1014,7 +1055,7 @@ def q_ann_lsh_mt(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lsh_multitable_topk(
         emb,
         tables=_MT_TABLES,
-        dim=64,
+        dim=EMB_DIM,
         k=3,
         neighbor_cap=_LSH_CAP,
     )
@@ -1134,7 +1175,7 @@ def q_ann_lsh_mp(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _embeddings(spark, sf_dir)
     return lsh_multiprobe_topk(
         emb,
-        dim=64,
+        dim=EMB_DIM,
         k=3,
         n_flip=_MP_FLIPS,
         neighbor_cap=_LSH_CAP,
@@ -3750,8 +3791,257 @@ def q_embedding_outlier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# ANN quality audit: LSH recall@3 against the exact cosine baseline.
+# Vector-index recall audits: every audit below is a configuration of the
+# llm/similarity.py kernel (filter -> encode -> rank -> refine -> score
+# against the exact top-3 of the vec_id < 20 sample).  The oracles are
+# composed from the DuckDB twins of the same stages: the _sql_* CTE
+# fragment functions below, each named after the CTE it defines.
 # ---------------------------------------------------------------------------
+def _sql_l2(a: str, b: str, dim: int = EMB_DIM) -> str:
+    """Rounded squared L2 — the left fold of similarity.l2_sq."""
+    return (
+        f"round(list_sum([({a}[i]-{b}[i])*({a}[i]-{b}[i])\n"
+        f"                         for i in generate_series(1,{dim})]), 6)"
+    )
+
+
+def _sql_ranked(name: str, select: str, order: str) -> str:
+    """{name}: the rows of ``select`` with a per-query ``rn`` over
+    (order, neighbor_id) — similarity.ranked."""
+    return f"""{name} AS (
+  SELECT *, row_number() OVER (
+    PARTITION BY query_id ORDER BY {order}, neighbor_id) AS rn
+  FROM ({select})
+)"""
+
+
+def _top(src: str, k: int = AUDIT_K) -> str:
+    return f"(SELECT query_id, neighbor_id FROM {src} WHERE rn <= {k})"
+
+
+def _sql_l2_ranked(name: str, corpus: str = "vecs", vec: str = "v") -> str:
+    """{name}: ``corpus`` ranked by rounded L2 to each sample query — the
+    exact ground truth, or the SQ8 tier over recon.rv (l2_topk)."""
+    return _sql_ranked(
+        name,
+        f"""
+    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+           {_sql_l2("q.v", f"c.{vec}")} AS d2
+    FROM vecs q JOIN {corpus} c ON c.vec_id <> q.vec_id
+    WHERE q.vec_id < {AUDIT_QUERIES}""",
+        "d2",
+    )
+
+
+_L2_EXACT = _sql_l2_ranked("exact")
+
+# exact cosine ground truth of the LSH/IVF audits (vecs.cv)
+_COS_EXACT = _sql_ranked(
+    "exact",
+    f"""
+    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+           {_IVF_COS.format(a="q.cv", b="c.cv")} AS cos_sim
+    FROM vecs q JOIN vecs c ON c.vec_id <> q.vec_id
+    WHERE q.vec_id < {AUDIT_QUERIES}""",
+    "cos_sim DESC",
+)
+
+
+def _sql_report(
+    tiers: dict[str, str], cand: bool = False, n_cells: bool = False
+) -> str:
+    """recall_report's twin: per query, each tier's (query_id,
+    neighbor_id) relation scored against ``exact``; ``cand`` counts the
+    ``candset`` pairs per query, ``n_cells`` reads ``nconf``."""
+    hits = [(f"h{i}", *recall_columns(t)) for i, t in enumerate(tiers)]
+    sel = ["e.query_id"]
+    if n_cells:
+        sel.append("(SELECT CAST(n_cells AS BIGINT) FROM nconf) AS n_cells")
+    if cand:
+        sel.append("coalesce(nc.n_cand, 0) AS n_cand")
+    sel.append("CAST(count(*) AS BIGINT) AS n_exact")
+    sel += [f"CAST(count({a}.neighbor_id) AS BIGINT) AS {h}" for a, h, _ in hits]
+    sel += [
+        f"round(CAST(count({a}.neighbor_id) AS DOUBLE) / count(*), 6) AS {r}"
+        for a, _, r in hits
+    ]
+    joins = [
+        f"LEFT JOIN {rel} {a} USING (query_id, neighbor_id)"
+        for (a, _, _), rel in zip(hits, tiers.values())
+    ]
+    group = "e.query_id"
+    if cand:
+        joins.append(
+            "LEFT JOIN (SELECT query_id, count(*)::BIGINT AS n_cand"
+            " FROM candset GROUP BY 1) nc ON nc.query_id = e.query_id"
+        )
+        group += ", nc.n_cand"
+    return "\n".join(
+        [f"SELECT {', '.join(sel)}", f"FROM {_top('exact')} e", *joins]
+        + [f"GROUP BY {group}"]
+    )
+
+
+_VECS = "vecs AS (\n  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings\n)"
+
+
+def _sql_subvectors(name: str, src: str, keys: str = "vec_id") -> str:
+    """{name}: (keys, m, sv) — pq_subvectors."""
+    return f"""{name} AS (
+  SELECT {keys}, mm.m, list_slice(v, mm.m*{PQ_SUB}+1, mm.m*{PQ_SUB}+{PQ_SUB}) AS sv
+  FROM {src}, unnest({list(range(PQ_M))}) AS mm(m)
+)"""
+
+
+def _sql_seed(name: str, sub: str) -> str:
+    """{name}: id-sliced codebooks (m, cid, cv) — pq_codebooks."""
+    return f"""{name} AS (
+  SELECT m, vec_id AS cid, sv AS cv FROM {sub} WHERE vec_id < {PQ_K}
+)"""
+
+
+def _sql_argmin(
+    name: str, rows: str, cents: str, sub: bool = True, upto: int = 1
+) -> str:
+    """{name}: (vec_id, [m,] cid, d2, rn) — each row's ``upto`` nearest
+    centroids by rounded L2, lower cid first: per PQ subspace (rows
+    (vec_id, m, sv), cents (m, cid, cv); pq_encode) or at full width
+    (rows (vec_id, v), cents (cid, cv); ivf_probe).  Also the
+    assignment step of _sql_lloyd."""
+    vec, width, m = ("sv", PQ_SUB, ", m") if sub else ("v", EMB_DIM, "")
+    on = f"JOIN {cents} c ON c.m = r.m" if sub else f"CROSS JOIN {cents} c"
+    return f"""{name}_d2 AS (
+  SELECT r.vec_id{m.replace(" ", " r.")}, c.cid,
+         {_sql_l2(f"r.{vec}", "c.cv", width)} AS d2
+  FROM {rows} r {on}
+), {name} AS (
+  SELECT * FROM (
+    SELECT *, row_number() OVER (
+      PARTITION BY vec_id{m} ORDER BY d2, cid) AS rn
+    FROM {name}_d2) WHERE rn <= {upto}
+)"""
+
+
+def _sql_lloyd(p: str, rows: str, seed: str, bound, sub: bool = True) -> str:
+    """lloyd_train's twin: {p}0 = ``seed`` .. {p}{LLOYD_ITERS}, the
+    iterations unrolled as a CTE chain over the training slice {p}t =
+    ``rows`` with vec_id < ``bound`` — the first PQ_TRAIN_N vectors for
+    PQ codebooks (sub), the first greatest(1024, 32 * n_cells) for the
+    full-width coarse centroids (ivf_train_slice_n).  Each step is
+    MATERIALIZED: it is read twice by the next, and an inlined chain
+    re-evaluates 2^LLOYD_ITERS times (~100 s vs ~1 s for the trained
+    IVF-PQ oracle at sf0.001)."""
+    vec, width = ("sv", PQ_SUB) if sub else ("v", EMB_DIM)
+    m, on_m, tm = ("", "", "")
+    if sub:
+        m, on_m, tm = "m, ", " AND s.m = a.m", "t.m = c.m AND "
+    out = f""", {p}t AS (
+  SELECT * FROM {rows} WHERE vec_id < {bound}
+), {p}0 AS (SELECT * FROM {seed})"""
+    for t in range(1, LLOYD_ITERS + 1):
+        prev = f"{p}{t - 1}"
+        out += ", " + _sql_argmin(f"{p}a{t}", f"{p}t", prev, sub)
+        out += f""", {p}m{t} AS (
+  SELECT {m}cid, list(val ORDER BY pos) AS cv FROM (
+    SELECT {m.replace("m", "a.m")}a.cid, x.pos, round(avg(s.{vec}[x.pos]), 6) AS val
+    FROM {p}a{t} a
+    JOIN {p}t s ON s.vec_id = a.vec_id{on_m}
+    CROSS JOIN generate_series(1, {width}) AS x(pos)
+    GROUP BY ALL) GROUP BY ALL
+), {p}{t} AS MATERIALIZED (
+  SELECT {m.replace("m", "c.m")}c.cid, coalesce(t.cv, c.cv) AS cv
+  FROM {prev} c LEFT JOIN {p}m{t} t ON {tm}t.cid = c.cid
+)"""
+    return out
+
+
+def _sql_qsub(sub: str) -> str:
+    return (
+        f"(SELECT vec_id AS query_id, m, sv FROM {sub}"
+        f" WHERE vec_id < {AUDIT_QUERIES})"
+    )
+
+
+def _sql_adc(
+    name: str, codes: str, qsub: str, cb: str, cand: str | None = None,
+    by_cell: bool = False,
+) -> str:
+    """{name}_lut (adc_lut) + {name}: ADC distances of ``codes`` ranked
+    per query (adc_ranked) — over the whole corpus, or over the ``cand``
+    pairs with the LUT keyed per probed cell when ``by_cell``."""
+    lut = f"""{name}_lut AS (
+  SELECT q.* EXCLUDE (sv), c.cid, {_sql_l2("q.sv", "c.cv", PQ_SUB)} AS d2
+  FROM {qsub} q JOIN {cb} c ON c.m = q.m
+)"""
+    if cand is None:
+        src = f"""
+    SELECT l.query_id, x.vec_id AS neighbor_id, round(sum(l.d2), 6) AS adist
+    FROM {codes} x JOIN {name}_lut l ON l.m = x.m AND l.cid = x.cid
+    WHERE x.vec_id <> l.query_id GROUP BY 1, 2"""
+    else:
+        cell = " AND l.cell = c.cell" if by_cell else ""
+        src = f"""
+    SELECT c.query_id, c.neighbor_id, round(sum(l.d2), 6) AS adist
+    FROM {cand} c JOIN {codes} x ON x.vec_id = c.neighbor_id
+    JOIN {name}_lut l ON l.query_id = c.query_id
+                     AND l.m = x.m AND l.cid = x.cid{cell}
+    GROUP BY 1, 2"""
+    return f"{lut}, {_sql_ranked(name, src, 'adist')}"
+
+
+def _sql_rerank(name: str, pairs: str) -> str:
+    """{name}: exact re-rank of the ``pairs`` candidates (rerank_topk)."""
+    return _sql_ranked(
+        name,
+        f"""
+    SELECT c.query_id, c.neighbor_id, {_sql_l2("qa.v", "nb.v")} AS d2
+    FROM {pairs} c
+    JOIN vecs qa ON qa.vec_id = c.query_id
+    JOIN vecs nb ON nb.vec_id = c.neighbor_id""",
+        "d2",
+    )
+
+
+def _sql_distortion(codes: str, label: str | None = None) -> str:
+    """distortion_report's twin."""
+    cb = f"'{label}' AS codebook, " if label else ""
+    return f"""SELECT m, {cb}count(*)::BIGINT AS n_vecs,
+       round(avg(d2), 6) AS avg_sq_err, round(max(d2), 6) AS max_sq_err
+FROM {codes} GROUP BY m"""
+
+
+def _sql_cents(bound) -> str:
+    return f"""cents AS (
+  SELECT vec_id AS cid, v AS cv FROM vecs WHERE vec_id < {bound}
+)"""
+
+
+def _sql_candset(
+    assign: str = "(SELECT vec_id, cid FROM probed WHERE rn = 1)",
+) -> str:
+    """candset: (query_id, neighbor_id, cell) — ivf_candidates."""
+    return f"""candset AS (
+  SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id, q.cid AS cell
+  FROM probed q JOIN {assign} n ON n.cid = q.cid AND n.vec_id <> q.vec_id
+  WHERE q.vec_id < {AUDIT_QUERIES}
+)"""
+
+
+_CB = f"cb{LLOYD_ITERS}"  # the trained PQ codebooks
+_PQ_BASE = f"{_VECS}, {_sql_subvectors('sub', 'vecs')}, {_sql_seed('cb', 'sub')}"
+_PQ_CODES = f"{_PQ_BASE}, {_sql_argmin('codes', 'sub', 'cb')}"
+_PQ_TRAINED = (
+    f"{_PQ_BASE}{_sql_lloyd('cb', 'sub', 'cb', PQ_TRAIN_N)}, "
+    f"{_sql_argmin('codest', 'sub', _CB)}"
+)
+_ADAPTIVE_CELLS = f"""nconf AS (
+  SELECT count(*) AS n,
+         greatest(32, CAST(ceil(sqrt(count(*))) AS BIGINT)) AS n_cells
+  FROM vecs
+), {_sql_cents("(SELECT n_cells FROM nconf)")}"""
+_PROBED = _sql_argmin("probed", "vecs", "cents", sub=False, upto=_IVF_PROBE)
+
+
 @register(
     "ann_recall_audit",
     oracle=f"""
@@ -3765,37 +4055,12 @@ WITH vecs AS (
   FROM bucketed
 ), pairs AS (
   SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-         round(list_dot_product(a.cv, b.cv) /
-               nullif(sqrt(list_dot_product(a.cv, a.cv)) *
-                      sqrt(list_dot_product(b.cv, b.cv)), 0.0), 6) AS cos_sim
+         {_IVF_COS.format(a="a.cv", b="b.cv")} AS cos_sim
   FROM bucketed a JOIN slotted b
     ON a.bucket = b.bucket AND a.vec_id <> b.vec_id
-  WHERE b.slot <= {_LSH_CAP} AND a.vec_id < 20
-), lsh AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS rn
-    FROM pairs) WHERE rn <= 3
-), q AS (
-  SELECT vec_id AS query_id, cv AS qv FROM vecs WHERE vec_id < 20
-), scored AS (
-  SELECT query_id, vec_id AS neighbor_id,
-         round(list_dot_product(qv, cv) /
-               nullif(sqrt(list_dot_product(qv, qv)) *
-                      sqrt(list_dot_product(cv, cv)), 0.0), 6) AS cos_sim
-  FROM vecs CROSS JOIN q WHERE vec_id <> query_id
-), exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS rn
-    FROM scored) WHERE rn <= 3
-)
-SELECT e.query_id, CAST(count(*) AS BIGINT) AS n_exact,
-       CAST(count(l.neighbor_id) AS BIGINT) AS n_hit,
-       round(CAST(count(l.neighbor_id) AS DOUBLE) / count(*), 6)
-         AS recall_at_3
-FROM exact e LEFT JOIN lsh l USING (query_id, neighbor_id)
-GROUP BY e.query_id
+  WHERE b.slot <= {_LSH_CAP} AND a.vec_id < {AUDIT_QUERIES}
+), {_sql_ranked("lsh", "SELECT * FROM pairs", "cos_sim DESC")}, {_COS_EXACT}
+{_sql_report({"": _top("lsh")})}
 """,
     doc="Index-quality evaluation: recall@3 of the capped hyperplane-LSH "
     "index against the exact cosine baseline on a deterministic "
@@ -3819,104 +4084,20 @@ GROUP BY e.query_id
 )
 def q_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _embeddings(spark, sf_dir)
-    sample = emb.filter(F.col("vec_id") < 20)
-    exact = cosine_topk(sample, emb, k=3).select("query_id", "neighbor_id")
-    approx = (
-        lsh_cosine_topk(emb, dim=64, k=3, neighbor_cap=_LSH_CAP)
-        .filter(F.col("query_id") < 20)
-        .select("query_id", "neighbor_id", F.lit(1).alias("hit"))
-    )
-    j = exact.join(
-        F.broadcast(approx), ["query_id", "neighbor_id"], "left"
-    )
-    return j.groupBy("query_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_exact"),
-        F.count("hit").cast("bigint").alias("n_hit"),
-        F.round(
-            F.count("hit").cast("double") / F.count(F.lit(1)), 6
-        ).alias("recall_at_3"),
-    )
-
-
-# shared oracle tail: exact top-3 ground truth on the 20-query sample +
-# per-query recall vs an approximate candidate CTE named `approx`
-_ANN_EXACT_TAIL = """, q AS (
-  SELECT vec_id AS query_id, cv AS qv FROM vecs WHERE vec_id < 20
-), exact_scored AS (
-  SELECT query_id, vec_id AS neighbor_id,
-         round(list_dot_product(qv, cv) /
-               nullif(sqrt(list_dot_product(qv, qv)) *
-                      sqrt(list_dot_product(cv, cv)), 0.0), 6) AS cos_sim
-  FROM vecs CROSS JOIN q WHERE vec_id <> query_id
-), exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS rn
-    FROM exact_scored) WHERE rn <= 3
-)
-SELECT e.query_id, CAST(count(*) AS BIGINT) AS n_exact,
-       CAST(count(a.neighbor_id) AS BIGINT) AS n_hit,
-       round(CAST(count(a.neighbor_id) AS DOUBLE) / count(*), 6)
-         AS recall_at_3
-FROM exact e LEFT JOIN approx a USING (query_id, neighbor_id)
-GROUP BY e.query_id
-"""
-
-
-def _recall_audit_frame(exact: DataFrame, approx: DataFrame) -> DataFrame:
-    j = exact.join(
-        F.broadcast(
-            approx.filter(F.col("query_id") < 20).select(
-                "query_id", "neighbor_id", F.lit(1).alias("hit")
-            )
-        ),
-        ["query_id", "neighbor_id"],
-        "left",
-    )
-    return j.groupBy("query_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_exact"),
-        F.count("hit").cast("bigint").alias("n_hit"),
-        F.round(
-            F.count("hit").cast("double") / F.count(F.lit(1)), 6
-        ).alias("recall_at_3"),
-    )
+    approx = lsh_cosine_topk(emb, dim=EMB_DIM, k=AUDIT_K, neighbor_cap=_LSH_CAP)
+    return recall_report(exact_cosine_topk(emb), {"": approx})
 
 
 # --- product quantization (r12): the ANN memory tier ------------------------
-# One shared codebook/encode CTE (the engine twin lives in
-# llm/similarity.py pq_* helpers): 4 subspaces x 16 dims, 16 entries
-# per codebook = the first 16 vectors' subvectors (the ivf_topk
-# deterministic-centroid convention), rounded-L2 argmin with the
-# lower-cid tiebreak.
-_PQ_CODES_CTE = """vecs AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-), cb AS (
-  SELECT mm.m, vec_id AS cid, list_slice(v, mm.m*16+1, mm.m*16+16) AS cv
-  FROM vecs, unnest([0,1,2,3]) AS mm(m) WHERE vec_id < 16
-), sub AS (
-  SELECT vec_id, mm.m, list_slice(v, mm.m*16+1, mm.m*16+16) AS sv
-  FROM vecs, unnest([0,1,2,3]) AS mm(m)
-), dist AS (
-  SELECT s.vec_id, s.m, c.cid,
-         round(list_sum([(s.sv[i]-c.cv[i])*(s.sv[i]-c.cv[i])
-                         for i in generate_series(1,16)]), 6) AS d2
-  FROM sub s JOIN cb c ON c.m = s.m
-), codes AS (
-  SELECT vec_id, m, cid, d2 FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id, m ORDER BY d2, cid)
-      AS rn
-    FROM dist) WHERE rn = 1
-)"""
-
-
+# 4 subspaces x 16 dims, 16 entries per codebook = the first 16 vectors'
+# subvectors (the ivf_topk deterministic-centroid convention), rounded-L2
+# argmin with the lower-cid tiebreak: llm/similarity.py pq_* and their
+# _sql_subvectors/_sql_seed/_sql_argmin twins.
 @register(
     "pq_reconstruction_report",
     oracle=f"""
-WITH {_PQ_CODES_CTE}
-SELECT m, count(*)::BIGINT AS n_vecs,
-       round(avg(d2), 6) AS avg_sq_err,
-       round(max(d2), 6) AS max_sq_err
-FROM codes GROUP BY m ORDER BY m
+WITH {_PQ_CODES}
+{_sql_distortion("codes")} ORDER BY m
 """,
     doc="Product-quantization build audit: every embedding is encoded "
     "as 4 one-byte codes (16-dim subvectors quantized to 16-entry "
@@ -3932,84 +4113,17 @@ FROM codes GROUP BY m ORDER BY m
     "point.",
 )
 def q_pq_reconstruction_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from quant_market_data_pipeline_spark.llm.similarity import (
-        pq_codebooks,
-        pq_encode,
-        pq_subvectors,
-    )
-
     emb = _embeddings(spark, sf_dir)
     codes = pq_encode(pq_subvectors(emb), pq_codebooks(emb))
-    return (
-        codes.groupBy("m")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_vecs"),
-            F.round(F.avg("d2"), 6).alias("avg_sq_err"),
-            F.round(F.max("d2"), 6).alias("max_sq_err"),
-        )
-        .orderBy("m")
-    )
+    return distortion_report(codes).orderBy("m")
 
 
 @register(
     "pq_adc_recall_audit",
     oracle=f"""
-WITH {_PQ_CODES_CTE}, q AS (
-  SELECT vec_id AS query_id, m, sv FROM sub WHERE vec_id < 20
-), qd AS (
-  SELECT q.query_id, q.m, c.cid,
-         round(list_sum([(q.sv[i]-c.cv[i])*(q.sv[i]-c.cv[i])
-                         for i in generate_series(1,16)]), 6) AS d2
-  FROM q JOIN cb c ON c.m = q.m
-), adc AS (
-  SELECT qd.query_id, codes.vec_id AS neighbor_id,
-         round(sum(qd.d2), 6) AS adist
-  FROM codes JOIN qd ON qd.m = codes.m AND qd.cid = codes.cid
-  WHERE codes.vec_id <> qd.query_id
-  GROUP BY 1, 2
-), cand AS (
-  SELECT query_id, neighbor_id, adist,
-         row_number() OVER (
-           PARTITION BY query_id ORDER BY adist, neighbor_id) AS rn
-  FROM adc
-), approx_adc AS (
-  SELECT query_id, neighbor_id FROM cand WHERE rn <= 3
-), reranked AS (
-  SELECT c.query_id, c.neighbor_id,
-         round(list_sum([(qa.v[i]-nb.v[i])*(qa.v[i]-nb.v[i])
-                         for i in generate_series(1,64)]), 6) AS d2
-  FROM cand c
-  JOIN vecs qa ON qa.vec_id = c.query_id
-  JOIN vecs nb ON nb.vec_id = c.neighbor_id
-  WHERE c.rn <= 32
-), approx_rr AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY query_id ORDER BY d2, neighbor_id) AS rn
-    FROM reranked) WHERE rn <= 3
-), exact_scored AS (
-  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-         round(list_sum([(a.v[i]-b.v[i])*(a.v[i]-b.v[i])
-                         for i in generate_series(1,64)]), 6) AS d2
-  FROM vecs a JOIN vecs b ON b.vec_id <> a.vec_id
-  WHERE a.vec_id < 20
-), exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY query_id ORDER BY d2, neighbor_id) AS rn
-    FROM exact_scored) WHERE rn <= 3
-)
-SELECT e.query_id, CAST(count(*) AS BIGINT) AS n_exact,
-       CAST(count(aa.neighbor_id) AS BIGINT) AS n_hit_adc,
-       CAST(count(ar.neighbor_id) AS BIGINT) AS n_hit_reranked,
-       round(CAST(count(aa.neighbor_id) AS DOUBLE) / count(*), 6)
-         AS recall_adc,
-       round(CAST(count(ar.neighbor_id) AS DOUBLE) / count(*), 6)
-         AS recall_reranked
-FROM exact e
-LEFT JOIN approx_adc aa USING (query_id, neighbor_id)
-LEFT JOIN approx_rr ar USING (query_id, neighbor_id)
-GROUP BY e.query_id
+WITH {_PQ_CODES}, {_sql_adc("adc", "codes", _sql_qsub("sub"), "cb")},
+{_sql_rerank("rr", _top("adc", 32))}, {_L2_EXACT}
+{_sql_report({"adc": _top("adc"), "reranked": _top("rr")})}
 """,
     doc="Two-stage PQ search audit: the 20-query sample keeps RAW "
     "subvectors, neighbors keep only their 4 codes, and the ADC "
@@ -4033,270 +4147,44 @@ GROUP BY e.query_id
     "re-rank join.",
 )
 def q_pq_adc_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from quant_market_data_pipeline_spark.llm.similarity import (
-        l2_sq,
-        pq_codebooks,
-        pq_encode,
-        pq_subvectors,
-    )
-
     emb = _embeddings(spark, sf_dir)
-    sub = pq_subvectors(emb)
-    cb = pq_codebooks(emb)
-    codes = pq_encode(sub, cb).select("vec_id", "m", "cid")
-    q = sub.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("query_id"), "m", "sv"
-    )
-    qd = q.join(F.broadcast(cb), "m").select(
-        "query_id",
-        "m",
-        "cid",
-        l2_sq(F.col("sv"), F.col("cv")).alias("d2"),
-    )
-    adc = (
-        codes.join(F.broadcast(qd), ["m", "cid"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.round(F.sum("d2"), 6).alias("adist"))
-    )
-    wq = Window.partitionBy("query_id").orderBy("adist", "neighbor_id")
-    cand = adc.withColumn("rn", F.row_number().over(wq))
-    approx_adc = cand.filter(F.col("rn") <= 3).select(
-        "query_id", "neighbor_id"
-    )
-    from quant_market_data_pipeline_spark.llm.similarity import as_double
-
-    vecs = emb.select("vec_id", as_double(F.col("embedding")).alias("v"))
-    qv = vecs.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
+    vecs, qv = audit_vectors(emb)
+    adc = pq_adc(pq_subvectors(emb), pq_codebooks(emb))
     # stage 2: exact re-rank of the ADC top-32 — raw floats fetched for
     # 32 candidates per query (output-sized joins), never the corpus
-    reranked = (
-        cand.filter(F.col("rn") <= 32)
-        .select("query_id", "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .join(
-            vecs.select(
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("v").alias("nv"),
-            ),
-            "neighbor_id",
-        )
-        .select(
-            "query_id",
-            "neighbor_id",
-            l2_sq(F.col("qv"), F.col("nv")).alias("d2"),
-        )
-    )
-    wr = Window.partitionBy("query_id").orderBy("d2", "neighbor_id")
-    approx_rr = (
-        reranked.withColumn("rn", F.row_number().over(wr))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id")
-    )
-    exact_scored = (
-        vecs.crossJoin(F.broadcast(qv))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            l2_sq(F.col("qv"), F.col("v")).alias("d2"),
-        )
-    )
-    we = Window.partitionBy("query_id").orderBy("d2", "neighbor_id")
-    exact = (
-        exact_scored.withColumn("rn", F.row_number().over(we))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id")
-    )
-    j = (
-        exact.join(
-            F.broadcast(
-                approx_adc.select(
-                    "query_id", "neighbor_id", F.lit(1).alias("hit_adc")
-                )
-            ),
-            ["query_id", "neighbor_id"],
-            "left",
-        )
-        .join(
-            F.broadcast(
-                approx_rr.select(
-                    "query_id", "neighbor_id", F.lit(1).alias("hit_rr")
-                )
-            ),
-            ["query_id", "neighbor_id"],
-            "left",
-        )
-    )
-    return j.groupBy("query_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_exact"),
-        F.count("hit_adc").cast("bigint").alias("n_hit_adc"),
-        F.count("hit_rr").cast("bigint").alias("n_hit_reranked"),
-        F.round(
-            F.count("hit_adc").cast("double") / F.count(F.lit(1)), 6
-        ).alias("recall_adc"),
-        F.round(
-            F.count("hit_rr").cast("double") / F.count(F.lit(1)), 6
-        ).alias("recall_reranked"),
+    reranked = rerank_topk(top_ids(adc, 32), qv, vecs)
+    return recall_report(
+        l2_topk(vecs, qv), {"adc": top_ids(adc), "reranked": reranked}
     )
 
 
 # --- k-means-trained PQ (r13): the production codebooks -------------------
 # The oracle unrolls the FIXED Lloyd iteration count as a chained CTE
-# (cb0 -> cb1 -> ... -> cbT), sharing the engine's determinism contract:
-# rounded-L2 argmin assignment (lower cid wins), per-dimension means
-# rounded to 6 digits, empty clusters keep their previous centroid,
+# (cb0 -> cb1 -> ... -> cbT, _sql_lloyd), sharing the engine's determinism
+# contract: rounded-L2 argmin assignment (lower cid wins), per-dimension
+# means rounded to 6 digits, empty clusters keep their previous centroid,
 # training bounded to the first PQ_TRAIN_N vectors by id.  The engine
-# twin is llm/similarity.py pq_train_codebooks (the MLlib-style driver
-# loop re-literalizing the M*K*16-double centroid frame per step).
-_PQ_ITERS = 5
-_PQ_TRAIN_N = 1024
-
-
-def _pq_lloyd_chain(
-    iters: int = _PQ_ITERS,
-    train_n: int = _PQ_TRAIN_N,
-    sub_src: str = "sub",
-    seed_src: str = "cb",
-    prefix: str = "cb",
-) -> str:
-    """CTE fragments appended after _PQ_CODES_CTE: {prefix}tsub +
-    {prefix}1..{prefix}{iters} ({prefix}0 aliases ``seed_src``, the
-    id-sliced seed; ``sub_src`` supplies the (vec_id, m, sv) rows the
-    chain trains on — `sub` for flat PQ, the residual subvectors for
-    IVFADC residual PQ)."""
-    tsub = f"{prefix}tsub" if prefix != "cb" else "tsub"
-    parts = [
-        f""", {tsub} AS (
-  SELECT vec_id, m, sv FROM {sub_src} WHERE vec_id < {train_n}
-), {prefix}0 AS (SELECT m, cid, cv FROM {seed_src})"""
-    ]
-    for t in range(1, iters + 1):
-        prev = f"{prefix}{t - 1}"
-        parts.append(
-            f""", {prefix}td{t} AS (
-  SELECT s.vec_id, s.m, c.cid,
-         round(list_sum([(s.sv[i]-c.cv[i])*(s.sv[i]-c.cv[i])
-                         for i in generate_series(1,16)]), 6) AS d2
-  FROM {tsub} s JOIN {prev} c ON c.m = s.m
-), {prefix}ta{t} AS (
-  SELECT vec_id, m, cid FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id, m ORDER BY d2, cid)
-      AS rn
-    FROM {prefix}td{t}) WHERE rn = 1
-), {prefix}tm{t} AS (
-  SELECT m, cid, list(val ORDER BY pos) AS cv FROM (
-    SELECT a.m, a.cid, p.pos, round(avg(s.sv[p.pos]), 6) AS val
-    FROM {prefix}ta{t} a
-    JOIN {tsub} s ON s.vec_id = a.vec_id AND s.m = a.m
-    CROSS JOIN generate_series(1, 16) AS p(pos)
-    GROUP BY 1, 2, 3) GROUP BY m, cid
-), {prefix}{t} AS (
-  SELECT c.m, c.cid, coalesce(t.cv, c.cv) AS cv
-  FROM {prev} c LEFT JOIN {prefix}tm{t} t ON t.m = c.m AND t.cid = c.cid
-)"""
-        )
-    return "".join(parts)
-
-
+# twin is llm/similarity.py lloyd_train (the MLlib-style driver loop
+# re-literalizing the M*K*16-double centroid frame per step).
 @register(
     "pq_trained_recall_audit",
     oracle=f"""
-WITH {_PQ_CODES_CTE}{_pq_lloyd_chain()}, distt AS (
-  SELECT s.vec_id, s.m, c.cid,
-         round(list_sum([(s.sv[i]-c.cv[i])*(s.sv[i]-c.cv[i])
-                         for i in generate_series(1,16)]), 6) AS d2
-  FROM sub s JOIN cb{_PQ_ITERS} c ON c.m = s.m
-), codest AS (
-  SELECT vec_id, m, cid FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id, m ORDER BY d2, cid)
-      AS rn
-    FROM distt) WHERE rn = 1
-), q AS (
-  SELECT vec_id AS query_id, m, sv FROM sub WHERE vec_id < 20
-), qdb AS (
-  SELECT q.query_id, q.m, c.cid,
-         round(list_sum([(q.sv[i]-c.cv[i])*(q.sv[i]-c.cv[i])
-                         for i in generate_series(1,16)]), 6) AS d2
-  FROM q JOIN cb c ON c.m = q.m
-), qdt AS (
-  SELECT q.query_id, q.m, c.cid,
-         round(list_sum([(q.sv[i]-c.cv[i])*(q.sv[i]-c.cv[i])
-                         for i in generate_series(1,16)]), 6) AS d2
-  FROM q JOIN cb{_PQ_ITERS} c ON c.m = q.m
-), adcb AS (
-  SELECT qd.query_id, codes.vec_id AS neighbor_id,
-         round(sum(qd.d2), 6) AS adist
-  FROM codes JOIN qdb qd ON qd.m = codes.m AND qd.cid = codes.cid
-  WHERE codes.vec_id <> qd.query_id
-  GROUP BY 1, 2
-), adct AS (
-  SELECT qd.query_id, codest.vec_id AS neighbor_id,
-         round(sum(qd.d2), 6) AS adist
-  FROM codest JOIN qdt qd ON qd.m = codest.m AND qd.cid = codest.cid
-  WHERE codest.vec_id <> qd.query_id
-  GROUP BY 1, 2
-), approx_b AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY query_id ORDER BY adist, neighbor_id) AS rn
-    FROM adcb) WHERE rn <= 3
-), candt AS (
-  SELECT query_id, neighbor_id, adist,
-         row_number() OVER (
-           PARTITION BY query_id ORDER BY adist, neighbor_id) AS rn
-  FROM adct
-), approx_t AS (
-  SELECT query_id, neighbor_id FROM candt WHERE rn <= 3
-), reranked AS (
-  SELECT c.query_id, c.neighbor_id,
-         round(list_sum([(qa.v[i]-nb.v[i])*(qa.v[i]-nb.v[i])
-                         for i in generate_series(1,64)]), 6) AS d2
-  FROM candt c
-  JOIN vecs qa ON qa.vec_id = c.query_id
-  JOIN vecs nb ON nb.vec_id = c.neighbor_id
-  WHERE c.rn <= 32
-), approx_rr AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY query_id ORDER BY d2, neighbor_id) AS rn
-    FROM reranked) WHERE rn <= 3
-), exact_scored AS (
-  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-         round(list_sum([(a.v[i]-b.v[i])*(a.v[i]-b.v[i])
-                         for i in generate_series(1,64)]), 6) AS d2
-  FROM vecs a JOIN vecs b ON b.vec_id <> a.vec_id
-  WHERE a.vec_id < 20
-), exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY query_id ORDER BY d2, neighbor_id) AS rn
-    FROM exact_scored) WHERE rn <= 3
-)
-SELECT e.query_id, CAST(count(*) AS BIGINT) AS n_exact,
-       CAST(count(ab.neighbor_id) AS BIGINT) AS n_hit_adc_base,
-       CAST(count(at_.neighbor_id) AS BIGINT) AS n_hit_adc_trained,
-       CAST(count(ar.neighbor_id) AS BIGINT) AS n_hit_rr_trained,
-       round(CAST(count(ab.neighbor_id) AS DOUBLE) / count(*), 6)
-         AS recall_adc_base,
-       round(CAST(count(at_.neighbor_id) AS DOUBLE) / count(*), 6)
-         AS recall_adc_trained,
-       round(CAST(count(ar.neighbor_id) AS DOUBLE) / count(*), 6)
-         AS recall_rr_trained
-FROM exact e
-LEFT JOIN approx_b ab USING (query_id, neighbor_id)
-LEFT JOIN approx_t at_ USING (query_id, neighbor_id)
-LEFT JOIN approx_rr ar USING (query_id, neighbor_id)
-GROUP BY e.query_id
+WITH {_PQ_TRAINED}, {_sql_argmin("codes", "sub", "cb")},
+{_sql_adc("adcb", "codes", _sql_qsub("sub"), "cb")},
+{_sql_adc("adct", "codest", _sql_qsub("sub"), _CB)},
+{_sql_rerank("rr", _top("adct", 32))}, {_L2_EXACT}
+{_sql_report({
+    "adc_base": _top("adcb"),
+    "adc_trained": _top("adct"),
+    "rr_trained": _top("rr"),
+})}
 """,
     doc="k-means-trained PQ codebooks, priced against the id-sliced "
-    f"seed in ONE audit: {_PQ_ITERS} Lloyd iterations per subspace "
+    f"seed in ONE audit: {LLOYD_ITERS} Lloyd iterations per subspace "
     "(rounded-L2 argmin assignment with the lower-cid tiebreak, "
     "per-dimension means rounded to 6 digits, empty clusters keep "
     "their previous centroid, training bounded to the first "
-    f"{_PQ_TRAIN_N} vectors by id) seeded from pq_codebooks' first-"
+    f"{PQ_TRAIN_N} vectors by id) seeded from pq_codebooks' first-"
     "K-by-id placeholder, so both engines derive IDENTICAL codebooks "
     "from the data alone — the oracle unrolls the fixed iteration "
     "count as a chained CTE, the engine runs the MLlib-style driver "
@@ -4311,159 +4199,27 @@ GROUP BY e.query_id
     "integer-keyed against broadcast query tables.",
 )
 def q_pq_trained_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from quant_market_data_pipeline_spark.llm.similarity import (
-        as_double,
-        l2_sq,
-        pq_codebooks,
-        pq_encode,
-        pq_subvectors,
-        pq_train_codebooks,
-    )
-
     emb = _embeddings(spark, sf_dir)
+    vecs, qv = audit_vectors(emb)
     sub = materialize_corpus(pq_subvectors(emb))
-    cb_seed = pq_codebooks(emb)
-    cb_tr = pq_train_codebooks(emb)
-    codes_b = pq_encode(sub, cb_seed).select("vec_id", "m", "cid")
-    codes_t = pq_encode(sub, cb_tr).select("vec_id", "m", "cid")
-    q = sub.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("query_id"), "m", "sv"
-    )
-
-    def adc_ranked(codes: DataFrame, cb: DataFrame) -> DataFrame:
-        qd = q.join(F.broadcast(cb), "m").select(
-            "query_id",
-            "m",
-            "cid",
-            l2_sq(F.col("sv"), F.col("cv")).alias("d2"),
-        )
-        adc = (
-            codes.join(F.broadcast(qd), ["m", "cid"])
-            .filter(F.col("vec_id") != F.col("query_id"))
-            .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-            .agg(F.round(F.sum("d2"), 6).alias("adist"))
-        )
-        w = Window.partitionBy("query_id").orderBy("adist", "neighbor_id")
-        return adc.withColumn("rn", F.row_number().over(w))
-
-    approx_b = (
-        adc_ranked(codes_b, cb_seed)
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id")
-    )
-    candt = adc_ranked(codes_t, cb_tr)
-    approx_t = candt.filter(F.col("rn") <= 3).select(
-        "query_id", "neighbor_id"
-    )
-    vecs = emb.select("vec_id", as_double(F.col("embedding")).alias("v"))
-    qv = vecs.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    reranked = (
-        candt.filter(F.col("rn") <= 32)
-        .select("query_id", "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .join(
-            vecs.select(
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("v").alias("nv"),
-            ),
-            "neighbor_id",
-        )
-        .select(
-            "query_id",
-            "neighbor_id",
-            l2_sq(F.col("qv"), F.col("nv")).alias("d2"),
-        )
-    )
-    wr = Window.partitionBy("query_id").orderBy("d2", "neighbor_id")
-    approx_rr = (
-        reranked.withColumn("rn", F.row_number().over(wr))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id")
-    )
-    exact_scored = (
-        vecs.crossJoin(F.broadcast(qv))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            l2_sq(F.col("qv"), F.col("v")).alias("d2"),
-        )
-    )
-    we = Window.partitionBy("query_id").orderBy("d2", "neighbor_id")
-    exact = (
-        exact_scored.withColumn("rn", F.row_number().over(we))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id")
-    )
-    j = (
-        exact.join(
-            F.broadcast(
-                approx_b.select(
-                    "query_id", "neighbor_id", F.lit(1).alias("hit_b")
-                )
-            ),
-            ["query_id", "neighbor_id"],
-            "left",
-        )
-        .join(
-            F.broadcast(
-                approx_t.select(
-                    "query_id", "neighbor_id", F.lit(1).alias("hit_t")
-                )
-            ),
-            ["query_id", "neighbor_id"],
-            "left",
-        )
-        .join(
-            F.broadcast(
-                approx_rr.select(
-                    "query_id", "neighbor_id", F.lit(1).alias("hit_rr")
-                )
-            ),
-            ["query_id", "neighbor_id"],
-            "left",
-        )
-    )
-    return j.groupBy("query_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_exact"),
-        F.count("hit_b").cast("bigint").alias("n_hit_adc_base"),
-        F.count("hit_t").cast("bigint").alias("n_hit_adc_trained"),
-        F.count("hit_rr").cast("bigint").alias("n_hit_rr_trained"),
-        F.round(
-            F.count("hit_b").cast("double") / F.count(F.lit(1)), 6
-        ).alias("recall_adc_base"),
-        F.round(
-            F.count("hit_t").cast("double") / F.count(F.lit(1)), 6
-        ).alias("recall_adc_trained"),
-        F.round(
-            F.count("hit_rr").cast("double") / F.count(F.lit(1)), 6
-        ).alias("recall_rr_trained"),
+    adc_t = pq_adc(sub, lloyd_train(emb))
+    return recall_report(
+        l2_topk(vecs, qv),
+        {
+            "adc_base": top_ids(pq_adc(sub, pq_codebooks(emb))),
+            "adc_trained": top_ids(adc_t),
+            "rr_trained": rerank_topk(top_ids(adc_t, 32), qv, vecs),
+        },
     )
 
 
 @register(
     "pq_trained_distortion_report",
     oracle=f"""
-WITH {_PQ_CODES_CTE}{_pq_lloyd_chain()}, distt AS (
-  SELECT s.vec_id, s.m, c.cid,
-         round(list_sum([(s.sv[i]-c.cv[i])*(s.sv[i]-c.cv[i])
-                         for i in generate_series(1,16)]), 6) AS d2
-  FROM sub s JOIN cb{_PQ_ITERS} c ON c.m = s.m
-), codest AS (
-  SELECT vec_id, m, cid, d2 FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id, m ORDER BY d2, cid)
-      AS rn
-    FROM distt) WHERE rn = 1
-)
-SELECT m, 'id_sliced' AS codebook, count(*)::BIGINT AS n_vecs,
-       round(avg(d2), 6) AS avg_sq_err, round(max(d2), 6) AS max_sq_err
-FROM codes GROUP BY m
+WITH {_PQ_TRAINED}, {_sql_argmin("codes", "sub", "cb")}
+{_sql_distortion("codes", "id_sliced")}
 UNION ALL
-SELECT m, 'kmeans_{_PQ_ITERS}it' AS codebook, count(*)::BIGINT AS n_vecs,
-       round(avg(d2), 6) AS avg_sq_err, round(max(d2), 6) AS max_sq_err
-FROM codest GROUP BY m
+{_sql_distortion("codest", f"kmeans_{LLOYD_ITERS}it")}
 """,
     doc="Quantization-distortion uplift of the k-means-trained PQ "
     "codebooks, next to the id-sliced seed: per subspace, the avg/max "
@@ -4479,114 +4235,22 @@ FROM codest GROUP BY m
 def q_pq_trained_distortion_report(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from quant_market_data_pipeline_spark.llm.similarity import (
-        PQ_ITERS,
-        pq_codebooks,
-        pq_encode,
-        pq_subvectors,
-        pq_train_codebooks,
-    )
-
     emb = _embeddings(spark, sf_dir)
     sub = materialize_corpus(pq_subvectors(emb))
-
-    def report(codes: DataFrame, label: str) -> DataFrame:
-        return codes.groupBy("m").agg(
-            F.lit(label).alias("codebook"),
-            F.count(F.lit(1)).cast("bigint").alias("n_vecs"),
-            F.round(F.avg("d2"), 6).alias("avg_sq_err"),
-            F.round(F.max("d2"), 6).alias("max_sq_err"),
-        )
-
-    base = report(pq_encode(sub, pq_codebooks(emb)), "id_sliced")
-    trained = report(
-        pq_encode(sub, pq_train_codebooks(emb)), f"kmeans_{PQ_ITERS}it"
+    base = distortion_report(pq_encode(sub, pq_codebooks(emb)), "id_sliced")
+    trained = distortion_report(
+        pq_encode(sub, lloyd_train(emb)), f"kmeans_{LLOYD_ITERS}it"
     )
-    return base.select(
-        "m", "codebook", "n_vecs", "avg_sq_err", "max_sq_err"
-    ).unionByName(
-        trained.select(
-            "m", "codebook", "n_vecs", "avg_sq_err", "max_sq_err"
-        )
-    )
+    return base.unionByName(trained)
 
 
 @register(
     "ann_ivfpq_recall_audit",
     oracle=f"""
-WITH {_PQ_CODES_CTE}, cents AS (
-  SELECT vec_id AS ccid, v AS ccv FROM vecs WHERE vec_id < {_IVF_CELLS}
-), cscored AS (
-  SELECT a.vec_id, c.ccid,
-         round(list_sum([(a.v[i]-c.ccv[i])*(a.v[i]-c.ccv[i])
-                         for i in generate_series(1,64)]), 6) AS cd2
-  FROM vecs a CROSS JOIN cents c
-), probed AS (
-  SELECT vec_id, ccid AS cell, rn AS probe_rank FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY vec_id ORDER BY cd2, ccid) AS rn
-    FROM cscored) WHERE rn <= {_IVF_PROBE}
-), q AS (
-  SELECT vec_id AS query_id, m, sv FROM sub WHERE vec_id < 20
-), qd AS (
-  SELECT q.query_id, q.m, c.cid,
-         round(list_sum([(q.sv[i]-c.cv[i])*(q.sv[i]-c.cv[i])
-                         for i in generate_series(1,16)]), 6) AS d2
-  FROM q JOIN cb c ON c.m = q.m
-), candset AS (
-  SELECT pq.vec_id AS query_id, pc.vec_id AS neighbor_id
-  FROM probed pq
-  JOIN (SELECT vec_id, cell FROM probed WHERE probe_rank = 1) pc
-    ON pc.cell = pq.cell AND pc.vec_id <> pq.vec_id
-  WHERE pq.vec_id < 20
-), adc AS (
-  SELECT cs.query_id, cs.neighbor_id, round(sum(qd.d2), 6) AS adist
-  FROM candset cs
-  JOIN codes ON codes.vec_id = cs.neighbor_id
-  JOIN qd ON qd.query_id = cs.query_id
-         AND qd.m = codes.m AND qd.cid = codes.cid
-  GROUP BY 1, 2
-), cand AS (
-  SELECT query_id, neighbor_id, row_number() OVER (
-    PARTITION BY query_id ORDER BY adist, neighbor_id) AS rn
-  FROM adc
-), reranked AS (
-  SELECT c.query_id, c.neighbor_id,
-         round(list_sum([(qa.v[i]-nb.v[i])*(qa.v[i]-nb.v[i])
-                         for i in generate_series(1,64)]), 6) AS d2
-  FROM cand c
-  JOIN vecs qa ON qa.vec_id = c.query_id
-  JOIN vecs nb ON nb.vec_id = c.neighbor_id
-  WHERE c.rn <= 32
-), approx AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY query_id ORDER BY d2, neighbor_id) AS rn
-    FROM reranked) WHERE rn <= 3
-), ncand AS (
-  SELECT query_id, count(*)::BIGINT AS n_cand FROM candset GROUP BY 1
-), exact_scored AS (
-  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-         round(list_sum([(a.v[i]-b.v[i])*(a.v[i]-b.v[i])
-                         for i in generate_series(1,64)]), 6) AS d2
-  FROM vecs a JOIN vecs b ON b.vec_id <> a.vec_id
-  WHERE a.vec_id < 20
-), exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY query_id ORDER BY d2, neighbor_id) AS rn
-    FROM exact_scored) WHERE rn <= 3
-)
-SELECT e.query_id,
-       coalesce(nc.n_cand, 0) AS n_cand,
-       CAST(count(*) AS BIGINT) AS n_exact,
-       CAST(count(a.neighbor_id) AS BIGINT) AS n_hit,
-       round(CAST(count(a.neighbor_id) AS DOUBLE) / count(*), 6)
-         AS recall_at_3
-FROM exact e
-LEFT JOIN approx a USING (query_id, neighbor_id)
-LEFT JOIN ncand nc ON nc.query_id = e.query_id
-GROUP BY e.query_id, nc.n_cand
+WITH {_PQ_CODES}, {_sql_cents(_IVF_CELLS)}, {_PROBED}, {_sql_candset()},
+{_sql_adc("adc", "codes", _sql_qsub("sub"), "cb", "candset")},
+{_sql_rerank("rr", _top("adc", 32))}, {_L2_EXACT}
+{_sql_report({"": _top("rr")}, cand=True)}
 """,
     doc=f"IVF+PQ composed — the production index shape: L2 coarse "
     f"quantization into {_IVF_CELLS} cells (the canonical IVFADC "
@@ -4606,137 +4270,15 @@ GROUP BY e.query_id, nc.n_cand
     "re-rank candidates per query.",
 )
 def q_ann_ivfpq_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from quant_market_data_pipeline_spark.llm.similarity import (
-        as_double,
-        l2_sq,
-        pq_codebooks,
-        pq_encode,
-        pq_subvectors,
-    )
-
     emb = _embeddings(spark, sf_dir)
-    vecs = emb.select("vec_id", as_double(F.col("embedding")).alias("v"))
-    cents = vecs.filter(F.col("vec_id") < _IVF_CELLS).select(
-        F.col("vec_id").alias("ccid"), F.col("v").alias("ccv")
+    vecs, qv = audit_vectors(emb)
+    cents = ivf_centroids(vecs, _IVF_CELLS)
+    cand = ivf_candidates(
+        materialize_corpus(ivf_probe(vecs, cents, _IVF_PROBE))
     )
-    cscored = vecs.crossJoin(F.broadcast(cents)).select(
-        "vec_id", "ccid", l2_sq(F.col("v"), F.col("ccv"), dim=64).alias("cd2")
-    )
-    wp = Window.partitionBy("vec_id").orderBy("cd2", "ccid")
-    probed = materialize_corpus(
-        cscored.withColumn("probe_rank", F.row_number().over(wp))
-        .filter(F.col("probe_rank") <= _IVF_PROBE)
-        .select("vec_id", F.col("ccid").alias("cell"), "probe_rank")
-    )
-    candset = (
-        probed.filter(F.col("vec_id") < 20)
-        .select(F.col("vec_id").alias("query_id"), "cell")
-        .join(
-            probed.filter(F.col("probe_rank") == 1).select(
-                F.col("vec_id").alias("neighbor_id"), "cell"
-            ),
-            "cell",
-        )
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id")
-    )
-    sub = pq_subvectors(emb)
-    cb = pq_codebooks(emb)
-    codes = pq_encode(sub, cb).select(
-        F.col("vec_id").alias("neighbor_id"), "m", "cid"
-    )
-    qd = (
-        sub.filter(F.col("vec_id") < 20)
-        .select(F.col("vec_id").alias("query_id"), "m", "sv")
-        .join(F.broadcast(cb), "m")
-        .select(
-            "query_id",
-            "m",
-            "cid",
-            l2_sq(F.col("sv"), F.col("cv")).alias("d2"),
-        )
-    )
-    adc = (
-        candset.join(codes, "neighbor_id")
-        .join(F.broadcast(qd), ["query_id", "m", "cid"])
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.round(F.sum("d2"), 6).alias("adist"))
-    )
-    wq = Window.partitionBy("query_id").orderBy("adist", "neighbor_id")
-    cand = adc.withColumn("rn", F.row_number().over(wq))
-    qv = vecs.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    reranked = (
-        cand.filter(F.col("rn") <= 32)
-        .select("query_id", "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .join(
-            vecs.select(
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("v").alias("nv"),
-            ),
-            "neighbor_id",
-        )
-        .select(
-            "query_id",
-            "neighbor_id",
-            l2_sq(F.col("qv"), F.col("nv")).alias("d2"),
-        )
-    )
-    wr = Window.partitionBy("query_id").orderBy("d2", "neighbor_id")
-    approx = (
-        reranked.withColumn("rn", F.row_number().over(wr))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id")
-    )
-    ncand = candset.groupBy("query_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_cand")
-    )
-    exact_scored = (
-        vecs.crossJoin(F.broadcast(qv))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            l2_sq(F.col("qv"), F.col("v")).alias("d2"),
-        )
-    )
-    we = Window.partitionBy("query_id").orderBy("d2", "neighbor_id")
-    exact = (
-        exact_scored.withColumn("rn", F.row_number().over(we))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id")
-    )
-    return (
-        exact.join(
-            F.broadcast(
-                approx.select(
-                    "query_id", "neighbor_id", F.lit(1).alias("hit")
-                )
-            ),
-            ["query_id", "neighbor_id"],
-            "left",
-        )
-        .join(F.broadcast(ncand), "query_id", "left")
-        .groupBy("query_id", "n_cand")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_exact"),
-            F.count("hit").cast("bigint").alias("n_hit"),
-            F.round(
-                F.count("hit").cast("double") / F.count(F.lit(1)), 6
-            ).alias("recall_at_3"),
-        )
-        .select(
-            "query_id",
-            F.coalesce(F.col("n_cand"), F.lit(0).cast("bigint")).alias(
-                "n_cand"
-            ),
-            "n_exact",
-            "n_hit",
-            "recall_at_3",
-        )
-    )
+    adc = pq_adc(pq_subvectors(emb), pq_codebooks(emb), cand)
+    reranked = rerank_topk(top_ids(adc, 32), qv, vecs)
+    return recall_report(l2_topk(vecs, qv), {"": reranked}, cand=cand)
 
 
 # --- adaptive IVF+PQ (r13): the re-indexed production config --------------
@@ -4759,103 +4301,25 @@ def q_ann_ivfpq_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Measured (numpy twin, 20-query sample): grown sf1.0 recall 0.23
 # (r12 fixed config) -> 0.933 adaptive; x16 n_cand 1,971 -> ~373 at
 # recall 1.0; pruning ceilings 0.93/0.97/1.0 at probe 2/4/8.
+def _adaptive_cells(emb: DataFrame):
+    """(n_cells, vecs, qv, cents, probed): the adaptive IVF index — the
+    corpus count (an index-build action) sets the cell count, cells are
+    the id-sliced seeds, the probe ranking is materialized once for both
+    sides of the candidate join."""
+    n_cells = n_cells_for(emb.count())
+    vecs, qv = audit_vectors(emb)
+    cents = ivf_centroids(vecs, n_cells)
+    probed = materialize_corpus(ivf_probe(vecs, cents, _IVF_PROBE))
+    return n_cells, vecs, qv, cents, probed
 
 
 @register(
     "ann_ivfpq_adaptive_recall_audit",
     oracle=f"""
-WITH {_PQ_CODES_CTE}{_pq_lloyd_chain()}, nconf AS (
-  SELECT greatest(32, CAST(ceil(sqrt(count(*))) AS BIGINT)) AS n_cells
-  FROM vecs
-), cents AS (
-  SELECT vec_id AS ccid, v AS ccv FROM vecs
-  WHERE vec_id < (SELECT n_cells FROM nconf)
-), cscored AS (
-  SELECT a.vec_id, c.ccid,
-         round(list_sum([(a.v[i]-c.ccv[i])*(a.v[i]-c.ccv[i])
-                         for i in generate_series(1,64)]), 6) AS cd2
-  FROM vecs a CROSS JOIN cents c
-), probed AS (
-  SELECT vec_id, ccid AS cell, rn AS probe_rank FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY vec_id ORDER BY cd2, ccid) AS rn
-    FROM cscored) WHERE rn <= {_IVF_PROBE}
-), distt AS (
-  SELECT s.vec_id, s.m, c.cid,
-         round(list_sum([(s.sv[i]-c.cv[i])*(s.sv[i]-c.cv[i])
-                         for i in generate_series(1,16)]), 6) AS d2
-  FROM sub s JOIN cb{_PQ_ITERS} c ON c.m = s.m
-), codest AS (
-  SELECT vec_id, m, cid FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id, m ORDER BY d2, cid)
-      AS rn
-    FROM distt) WHERE rn = 1
-), q AS (
-  SELECT vec_id AS query_id, m, sv FROM sub WHERE vec_id < 20
-), qd AS (
-  SELECT q.query_id, q.m, c.cid,
-         round(list_sum([(q.sv[i]-c.cv[i])*(q.sv[i]-c.cv[i])
-                         for i in generate_series(1,16)]), 6) AS d2
-  FROM q JOIN cb{_PQ_ITERS} c ON c.m = q.m
-), candset AS (
-  SELECT pq.vec_id AS query_id, pc.vec_id AS neighbor_id
-  FROM probed pq
-  JOIN (SELECT vec_id, cell FROM probed WHERE probe_rank = 1) pc
-    ON pc.cell = pq.cell AND pc.vec_id <> pq.vec_id
-  WHERE pq.vec_id < 20
-), adc AS (
-  SELECT cs.query_id, cs.neighbor_id, round(sum(qd.d2), 6) AS adist
-  FROM candset cs
-  JOIN codest ON codest.vec_id = cs.neighbor_id
-  JOIN qd ON qd.query_id = cs.query_id
-         AND qd.m = codest.m AND qd.cid = codest.cid
-  GROUP BY 1, 2
-), approx_adc AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY query_id ORDER BY adist, neighbor_id) AS rn
-    FROM adc) WHERE rn <= 3
-), reranked AS (
-  SELECT c.query_id, c.neighbor_id,
-         round(list_sum([(qa.v[i]-nb.v[i])*(qa.v[i]-nb.v[i])
-                         for i in generate_series(1,64)]), 6) AS d2
-  FROM candset c
-  JOIN vecs qa ON qa.vec_id = c.query_id
-  JOIN vecs nb ON nb.vec_id = c.neighbor_id
-), approx AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY query_id ORDER BY d2, neighbor_id) AS rn
-    FROM reranked) WHERE rn <= 3
-), ncand AS (
-  SELECT query_id, count(*)::BIGINT AS n_cand FROM candset GROUP BY 1
-), exact_scored AS (
-  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-         round(list_sum([(a.v[i]-b.v[i])*(a.v[i]-b.v[i])
-                         for i in generate_series(1,64)]), 6) AS d2
-  FROM vecs a JOIN vecs b ON b.vec_id <> a.vec_id
-  WHERE a.vec_id < 20
-), exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY query_id ORDER BY d2, neighbor_id) AS rn
-    FROM exact_scored) WHERE rn <= 3
-)
-SELECT e.query_id,
-       (SELECT CAST(n_cells AS BIGINT) FROM nconf) AS n_cells,
-       coalesce(nc.n_cand, 0) AS n_cand,
-       CAST(count(*) AS BIGINT) AS n_exact,
-       CAST(count(aa.neighbor_id) AS BIGINT) AS n_hit_adc,
-       CAST(count(a.neighbor_id) AS BIGINT) AS n_hit,
-       round(CAST(count(aa.neighbor_id) AS DOUBLE) / count(*), 6)
-         AS recall_adc,
-       round(CAST(count(a.neighbor_id) AS DOUBLE) / count(*), 6)
-         AS recall_at_3
-FROM exact e
-LEFT JOIN approx_adc aa USING (query_id, neighbor_id)
-LEFT JOIN approx a USING (query_id, neighbor_id)
-LEFT JOIN ncand nc ON nc.query_id = e.query_id
-GROUP BY e.query_id, nc.n_cand
+WITH {_PQ_TRAINED}, {_ADAPTIVE_CELLS}, {_PROBED}, {_sql_candset()},
+{_sql_adc("adc", "codest", _sql_qsub("sub"), _CB, "candset")},
+{_sql_rerank("rr", "candset")}, {_L2_EXACT}
+{_sql_report({"adc": _top("adc"), "": _top("rr")}, cand=True, n_cells=True)}
 """,
     doc="Adaptive IVF+PQ — the re-indexed production config (VERDICT "
     "r12 #4): n_cells = greatest(32, ceil(sqrt(n))) is DERIVED FROM "
@@ -4879,163 +4343,17 @@ GROUP BY e.query_id, nc.n_cand
 def q_ann_ivfpq_adaptive_recall_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import math
-
-    from quant_market_data_pipeline_spark.llm.similarity import (
-        as_double,
-        l2_sq,
-        pq_encode,
-        pq_subvectors,
-        pq_train_codebooks,
-    )
-
     emb = _embeddings(spark, sf_dir)
-    # index-build action: the corpus count sets the cell count (the
-    # cells~sqrt(n) law, data-derived exactly like the oracle's nconf)
-    n = emb.count()
-    c = math.isqrt(n)
-    n_cells = max(32, c if c * c == n else c + 1)
-    vecs = emb.select("vec_id", as_double(F.col("embedding")).alias("v"))
-    cents = vecs.filter(F.col("vec_id") < n_cells).select(
-        F.col("vec_id").alias("ccid"), F.col("v").alias("ccv")
-    )
-    cscored = vecs.crossJoin(F.broadcast(cents)).select(
-        "vec_id", "ccid", l2_sq(F.col("v"), F.col("ccv"), dim=64).alias("cd2")
-    )
-    wp = Window.partitionBy("vec_id").orderBy("cd2", "ccid")
-    probed = materialize_corpus(
-        cscored.withColumn("probe_rank", F.row_number().over(wp))
-        .filter(F.col("probe_rank") <= _IVF_PROBE)
-        .select("vec_id", F.col("ccid").alias("cell"), "probe_rank")
-    )
-    candset = (
-        probed.filter(F.col("vec_id") < 20)
-        .select(F.col("vec_id").alias("query_id"), "cell")
-        .join(
-            probed.filter(F.col("probe_rank") == 1).select(
-                F.col("vec_id").alias("neighbor_id"), "cell"
-            ),
-            "cell",
-        )
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id")
-    )
-    sub = pq_subvectors(emb)
-    cb = pq_train_codebooks(emb)
-    codes = pq_encode(sub, cb).select(
-        F.col("vec_id").alias("neighbor_id"), "m", "cid"
-    )
-    qd = (
-        sub.filter(F.col("vec_id") < 20)
-        .select(F.col("vec_id").alias("query_id"), "m", "sv")
-        .join(F.broadcast(cb), "m")
-        .select(
-            "query_id",
-            "m",
-            "cid",
-            l2_sq(F.col("sv"), F.col("cv")).alias("d2"),
-        )
-    )
-    adc = (
-        candset.join(codes, "neighbor_id")
-        .join(F.broadcast(qd), ["query_id", "m", "cid"])
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.round(F.sum("d2"), 6).alias("adist"))
-    )
-    wq = Window.partitionBy("query_id").orderBy("adist", "neighbor_id")
-    approx_adc = (
-        adc.withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id")
-    )
-    qv = vecs.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
+    n_cells, vecs, qv, _, probed = _adaptive_cells(emb)
+    cand = ivf_candidates(probed)
+    adc = pq_adc(pq_subvectors(emb), lloyd_train(emb), cand)
     # refine cap = n_cand: the whole bounded candidate set is re-ranked
     # (raw vectors fetched at candidate-set size, ~2*sqrt(n) per query)
-    reranked = (
-        candset.join(F.broadcast(qv), "query_id")
-        .join(
-            vecs.select(
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("v").alias("nv"),
-            ),
-            "neighbor_id",
-        )
-        .select(
-            "query_id",
-            "neighbor_id",
-            l2_sq(F.col("qv"), F.col("nv")).alias("d2"),
-        )
-    )
-    wr = Window.partitionBy("query_id").orderBy("d2", "neighbor_id")
-    approx = (
-        reranked.withColumn("rn", F.row_number().over(wr))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id")
-    )
-    ncand = candset.groupBy("query_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_cand")
-    )
-    exact_scored = (
-        vecs.crossJoin(F.broadcast(qv))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            l2_sq(F.col("qv"), F.col("v")).alias("d2"),
-        )
-    )
-    we = Window.partitionBy("query_id").orderBy("d2", "neighbor_id")
-    exact = (
-        exact_scored.withColumn("rn", F.row_number().over(we))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id")
-    )
-    return (
-        exact.join(
-            F.broadcast(
-                approx_adc.select(
-                    "query_id", "neighbor_id", F.lit(1).alias("hit_adc")
-                )
-            ),
-            ["query_id", "neighbor_id"],
-            "left",
-        )
-        .join(
-            F.broadcast(
-                approx.select(
-                    "query_id", "neighbor_id", F.lit(1).alias("hit")
-                )
-            ),
-            ["query_id", "neighbor_id"],
-            "left",
-        )
-        .join(F.broadcast(ncand), "query_id", "left")
-        .groupBy("query_id", "n_cand")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_exact"),
-            F.count("hit_adc").cast("bigint").alias("n_hit_adc"),
-            F.count("hit").cast("bigint").alias("n_hit"),
-            F.round(
-                F.count("hit_adc").cast("double") / F.count(F.lit(1)), 6
-            ).alias("recall_adc"),
-            F.round(
-                F.count("hit").cast("double") / F.count(F.lit(1)), 6
-            ).alias("recall_at_3"),
-        )
-        .select(
-            "query_id",
-            F.lit(n_cells).cast("bigint").alias("n_cells"),
-            F.coalesce(F.col("n_cand"), F.lit(0).cast("bigint")).alias(
-                "n_cand"
-            ),
-            "n_exact",
-            "n_hit_adc",
-            "n_hit",
-            "recall_adc",
-            "recall_at_3",
-        )
+    return recall_report(
+        l2_topk(vecs, qv),
+        {"adc": top_ids(adc), "": rerank_topk(cand, qv, vecs)},
+        cand=cand,
+        n_cells=n_cells,
     )
 
 
@@ -5058,126 +4376,40 @@ def q_ann_ivfpq_adaptive_recall_audit(
 # the same 16-entry budget covers a WIDER cloud.  On clustered real
 # embeddings the inequality flips; the audit pair is the instrument a
 # user runs on THEIR corpus before choosing the encoding.
-_RES_CELLS_CTE = f""", nconf AS (
-  SELECT greatest(32, CAST(ceil(sqrt(count(*))) AS BIGINT)) AS n_cells
-  FROM vecs
-), cents AS (
-  SELECT vec_id AS ccid, v AS ccv FROM vecs
-  WHERE vec_id < (SELECT n_cells FROM nconf)
-), cscored AS (
-  SELECT a.vec_id, c.ccid,
-         round(list_sum([(a.v[i]-c.ccv[i])*(a.v[i]-c.ccv[i])
-                         for i in generate_series(1,64)]), 6) AS cd2
-  FROM vecs a CROSS JOIN cents c
-), probed AS (
-  SELECT vec_id, ccid AS cell, rn AS probe_rank FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY vec_id ORDER BY cd2, ccid) AS rn
-    FROM cscored) WHERE rn <= {_IVF_PROBE}
-), assign AS (
-  SELECT vec_id, cell FROM probed WHERE probe_rank = 1
-), res AS (
-  SELECT a.vec_id,
-         [a.v[i] - c.ccv[i] for i in generate_series(1,64)] AS v
+_RESIDUAL = f""", {_ADAPTIVE_CELLS}, {_PROBED}, res AS (
+  SELECT a.vec_id, [a.v[i] - c.cv[i] for i in generate_series(1,{EMB_DIM})] AS v
   FROM vecs a
-  JOIN assign s ON s.vec_id = a.vec_id
-  JOIN cents c ON c.ccid = s.cell
-), rsub AS (
-  SELECT vec_id, mm.m, list_slice(v, mm.m*16+1, mm.m*16+16) AS sv
-  FROM res, unnest([0,1,2,3]) AS mm(m)
-), rseed AS (
-  SELECT m, vec_id AS cid, sv AS cv FROM rsub WHERE vec_id < 16
-)"""
-
-_RES_CODES_CTE = f"""{_RES_CELLS_CTE}{
-    _pq_lloyd_chain(sub_src="rsub", seed_src="rseed", prefix="rcb")
-}, rdist AS (
-  SELECT s.vec_id, s.m, c.cid,
-         round(list_sum([(s.sv[i]-c.cv[i])*(s.sv[i]-c.cv[i])
-                         for i in generate_series(1,16)]), 6) AS d2
-  FROM rsub s JOIN rcb{_PQ_ITERS} c ON c.m = s.m
-), rcodes AS (
-  SELECT vec_id, m, cid, d2 FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id, m ORDER BY d2, cid)
-      AS rn
-    FROM rdist) WHERE rn = 1
-)"""
+  JOIN probed s ON s.vec_id = a.vec_id AND s.rn = 1
+  JOIN cents c ON c.cid = s.cid
+), {_sql_subvectors("rsub", "res")}, {_sql_seed("rseed", "rsub")}{
+    _sql_lloyd("rcb", "rsub", "rseed", PQ_TRAIN_N)
+}, {_sql_argmin("rcodes", "rsub", f"rcb{LLOYD_ITERS}")}"""
 
 
-def _residual_spark_parts(spark: SparkSession, sf_dir: str):
-    """Shared Spark construction: (vecs, cents, probed, residual frame,
-    trained residual codebooks, residual codes with d2) — the engine
-    twin of _RES_CODES_CTE."""
-    import math
-
-    from quant_market_data_pipeline_spark.llm.similarity import (
-        as_double,
-        l2_sq,
-        pq_encode,
-        pq_subvectors,
-        pq_train_codebooks,
-    )
-
-    emb = _embeddings(spark, sf_dir)
-    n = emb.count()
-    c = math.isqrt(n)
-    n_cells = max(32, c if c * c == n else c + 1)
-    vecs = emb.select("vec_id", as_double(F.col("embedding")).alias("v"))
-    cents = vecs.filter(F.col("vec_id") < n_cells).select(
-        F.col("vec_id").alias("ccid"), F.col("v").alias("ccv")
-    )
-    cscored = vecs.crossJoin(F.broadcast(cents)).select(
-        "vec_id", "ccid", l2_sq(F.col("v"), F.col("ccv"), dim=64).alias("cd2")
-    )
-    wp = Window.partitionBy("vec_id").orderBy("cd2", "ccid")
-    probed = materialize_corpus(
-        cscored.withColumn("probe_rank", F.row_number().over(wp))
-        .filter(F.col("probe_rank") <= _IVF_PROBE)
-        .select("vec_id", F.col("ccid").alias("cell"), "probe_rank")
-    )
-    assign = probed.filter(F.col("probe_rank") == 1).select(
-        "vec_id", "cell"
-    )
+def _residual_index(emb: DataFrame):
+    """The adaptive index plus residual codes: (n_cells, vecs, qv, cents,
+    probed, trained residual codebooks, residual codes with d2) — the
+    engine twin of _RESIDUAL."""
+    n_cells, vecs, qv, cents, probed = _adaptive_cells(emb)
+    assign = probed.filter(F.col("probe_rank") == 1).select("vec_id", "cell")
     res = materialize_corpus(
-        vecs.join(assign, "vec_id")
-        .join(
-            F.broadcast(cents),
-            F.col("cell") == F.col("ccid"),
-        )
-        .select(
-            "vec_id",
-            F.zip_with("v", "ccv", lambda a, b: a - b).alias("v"),
-        )
+        ivf_residuals(vecs.join(assign, "vec_id"), cents, ["vec_id"], "v")
     )
-    rcb = pq_train_codebooks(res, vec_col="v")
+    rcb = lloyd_train(res, vec_col="v")
     rcodes = pq_encode(pq_subvectors(res, vec_col="v"), rcb)
-    return n_cells, vecs, cents, probed, res, rcb, rcodes
+    return n_cells, vecs, qv, cents, probed, rcb, rcodes
 
 
 @register(
     "pq_residual_distortion_report",
     oracle=f"""
-WITH {_PQ_CODES_CTE}{_pq_lloyd_chain()}, distt AS (
-  SELECT s.vec_id, s.m, c.cid,
-         round(list_sum([(s.sv[i]-c.cv[i])*(s.sv[i]-c.cv[i])
-                         for i in generate_series(1,16)]), 6) AS d2
-  FROM sub s JOIN cb{_PQ_ITERS} c ON c.m = s.m
-), codest AS (
-  SELECT vec_id, m, cid, d2 FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id, m ORDER BY d2, cid)
-      AS rn
-    FROM distt) WHERE rn = 1
-){_RES_CODES_CTE}
-SELECT m, 'kmeans_flat' AS codebook, count(*)::BIGINT AS n_vecs,
-       round(avg(d2), 6) AS avg_sq_err, round(max(d2), 6) AS max_sq_err
-FROM codest GROUP BY m
+WITH {_PQ_TRAINED}{_RESIDUAL}
+{_sql_distortion("codest", "kmeans_flat")}
 UNION ALL
-SELECT m, 'kmeans_residual' AS codebook, count(*)::BIGINT AS n_vecs,
-       round(avg(d2), 6) AS avg_sq_err, round(max(d2), 6) AS max_sq_err
-FROM rcodes GROUP BY m
+{_sql_distortion("rcodes", "kmeans_residual")}
 """,
     doc="Residual-PQ distortion priced against flat PQ on the SAME "
-    f"trained budget ({_PQ_ITERS} Lloyd iterations, 4x16-entry "
+    f"trained budget ({LLOYD_ITERS} Lloyd iterations, 4x16-entry "
     "codebooks): per subspace, the avg/max squared quantization error "
     "of whole-vector codes vs codes of the IVF residual "
     "v - centroid(cell).  On clustered corpora residuals concentrate "
@@ -5196,112 +4428,29 @@ FROM rcodes GROUP BY m
 def q_pq_residual_distortion_report(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from quant_market_data_pipeline_spark.llm.similarity import (
-        pq_encode,
-        pq_subvectors,
-        pq_train_codebooks,
-    )
-
     emb = _embeddings(spark, sf_dir)
     sub = materialize_corpus(pq_subvectors(emb))
-    flat = pq_encode(sub, pq_train_codebooks(emb))
-    *_, rcodes = _residual_spark_parts(spark, sf_dir)
-
-    def report(codes: DataFrame, label: str) -> DataFrame:
-        return (
-            codes.groupBy("m")
-            .agg(
-                F.lit(label).alias("codebook"),
-                F.count(F.lit(1)).cast("bigint").alias("n_vecs"),
-                F.round(F.avg("d2"), 6).alias("avg_sq_err"),
-                F.round(F.max("d2"), 6).alias("max_sq_err"),
-            )
-            .select("m", "codebook", "n_vecs", "avg_sq_err", "max_sq_err")
-        )
-
-    return report(flat, "kmeans_flat").unionByName(
-        report(rcodes, "kmeans_residual")
+    flat = pq_encode(sub, lloyd_train(emb))
+    *_, rcodes = _residual_index(emb)
+    return distortion_report(flat, "kmeans_flat").unionByName(
+        distortion_report(rcodes, "kmeans_residual")
     )
 
 
 @register(
     "ann_ivfpq_residual_recall_audit",
     oracle=f"""
-WITH {_PQ_CODES_CTE}{_RES_CODES_CTE}, q AS (
-  SELECT vec_id AS query_id, v FROM vecs WHERE vec_id < 20
-), qres AS (
-  SELECT p.vec_id AS query_id, p.cell,
-         [q.v[i] - c.ccv[i] for i in generate_series(1,64)] AS v
+WITH {_VECS}{_RESIDUAL}, qres AS (
+  SELECT p.vec_id AS query_id, p.cid AS cell,
+         [q.v[i] - c.cv[i] for i in generate_series(1,{EMB_DIM})] AS v
   FROM probed p
-  JOIN q ON q.query_id = p.vec_id
-  JOIN cents c ON c.ccid = p.cell
-), qrsub AS (
-  SELECT query_id, cell, mm.m, list_slice(v, mm.m*16+1, mm.m*16+16) AS sv
-  FROM qres, unnest([0,1,2,3]) AS mm(m)
-), lut AS (
-  SELECT s.query_id, s.cell, s.m, c.cid,
-         round(list_sum([(s.sv[i]-c.cv[i])*(s.sv[i]-c.cv[i])
-                         for i in generate_series(1,16)]), 6) AS d2
-  FROM qrsub s JOIN rcb{_PQ_ITERS} c ON c.m = s.m
-), candset AS (
-  SELECT pq.vec_id AS query_id, pc.vec_id AS neighbor_id, pq.cell
-  FROM probed pq
-  JOIN (SELECT vec_id, cell FROM probed WHERE probe_rank = 1) pc
-    ON pc.cell = pq.cell AND pc.vec_id <> pq.vec_id
-  WHERE pq.vec_id < 20
-), adc AS (
-  SELECT cs.query_id, cs.neighbor_id, round(sum(l.d2), 6) AS adist
-  FROM candset cs
-  JOIN rcodes ON rcodes.vec_id = cs.neighbor_id
-  JOIN lut l ON l.query_id = cs.query_id AND l.cell = cs.cell
-            AND l.m = rcodes.m AND l.cid = rcodes.cid
-  GROUP BY 1, 2
-), approx_adc AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY query_id ORDER BY adist, neighbor_id) AS rn
-    FROM adc) WHERE rn <= 3
-), reranked AS (
-  SELECT c.query_id, c.neighbor_id,
-         round(list_sum([(qa.v[i]-nb.v[i])*(qa.v[i]-nb.v[i])
-                         for i in generate_series(1,64)]), 6) AS d2
-  FROM candset c
-  JOIN vecs qa ON qa.vec_id = c.query_id
-  JOIN vecs nb ON nb.vec_id = c.neighbor_id
-), approx AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY query_id ORDER BY d2, neighbor_id) AS rn
-    FROM reranked) WHERE rn <= 3
-), ncand AS (
-  SELECT query_id, count(*)::BIGINT AS n_cand FROM candset GROUP BY 1
-), exact_scored AS (
-  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-         round(list_sum([(a.v[i]-b.v[i])*(a.v[i]-b.v[i])
-                         for i in generate_series(1,64)]), 6) AS d2
-  FROM vecs a JOIN vecs b ON b.vec_id <> a.vec_id
-  WHERE a.vec_id < 20
-), exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY query_id ORDER BY d2, neighbor_id) AS rn
-    FROM exact_scored) WHERE rn <= 3
-)
-SELECT e.query_id,
-       (SELECT CAST(n_cells AS BIGINT) FROM nconf) AS n_cells,
-       coalesce(nc.n_cand, 0) AS n_cand,
-       CAST(count(*) AS BIGINT) AS n_exact,
-       CAST(count(aa.neighbor_id) AS BIGINT) AS n_hit_adc,
-       CAST(count(a.neighbor_id) AS BIGINT) AS n_hit,
-       round(CAST(count(aa.neighbor_id) AS DOUBLE) / count(*), 6)
-         AS recall_adc,
-       round(CAST(count(a.neighbor_id) AS DOUBLE) / count(*), 6)
-         AS recall_at_3
-FROM exact e
-LEFT JOIN approx_adc aa USING (query_id, neighbor_id)
-LEFT JOIN approx a USING (query_id, neighbor_id)
-LEFT JOIN ncand nc ON nc.query_id = e.query_id
-GROUP BY e.query_id, nc.n_cand
+  JOIN vecs q ON q.vec_id = p.vec_id
+  JOIN cents c ON c.cid = p.cid
+  WHERE p.vec_id < {AUDIT_QUERIES}
+), {_sql_subvectors("qrsub", "qres", "query_id, cell")}, {_sql_candset()},
+{_sql_adc("adc", "rcodes", "qrsub", f"rcb{LLOYD_ITERS}", "candset", by_cell=True)},
+{_sql_rerank("rr", "candset")}, {_L2_EXACT}
+{_sql_report({"adc": _top("adc"), "": _top("rr")}, cand=True, n_cells=True)}
 """,
     doc="IVFADC proper — the adaptive IVF+PQ audit with RESIDUAL "
     "quantization (Jegou et al.; the FAISS production encoding): codes "
@@ -5326,169 +4475,28 @@ GROUP BY e.query_id, nc.n_cand
 def q_ann_ivfpq_residual_recall_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from quant_market_data_pipeline_spark.llm.similarity import l2_sq
-
-    (
-        n_cells,
-        vecs,
+    emb = _embeddings(spark, sf_dir)
+    n_cells, vecs, qv, cents, probed, rcb, rcodes = _residual_index(emb)
+    # one LUT per (query, probed cell): the query residual against the
+    # trained residual codebooks
+    qres = ivf_residuals(
+        probed.filter(F.col("vec_id") < AUDIT_QUERIES)
+        .select(F.col("vec_id").alias("query_id"), "cell")
+        .join(F.broadcast(qv), "query_id"),
         cents,
-        probed,
-        res,
-        rcb,
-        rcodes,
-    ) = _residual_spark_parts(spark, sf_dir)
-    q = vecs.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
+        ["query_id", "cell"],
+        "qv",
     )
-    qres = (
-        probed.filter(F.col("vec_id") < 20)
-        .select(F.col("vec_id").alias("query_id"), "cell")
-        .join(F.broadcast(q), "query_id")
-        .join(F.broadcast(cents), F.col("cell") == F.col("ccid"))
-        .select(
-            "query_id",
-            "cell",
-            F.zip_with("qv", "ccv", lambda a, b: a - b).alias("v"),
-        )
-    )
-    qrsub = qres.select(
-        "query_id",
-        "cell",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(m).alias("m"),
-                        F.slice(F.col("v"), m * 16 + 1, 16).alias("sv"),
-                    )
-                    for m in range(4)
-                ]
-            )
-        ).alias("__s"),
-    ).select(
-        "query_id", "cell", F.col("__s.m").alias("m"),
-        F.col("__s.sv").alias("sv"),
-    )
-    lut = qrsub.join(F.broadcast(rcb), "m").select(
-        "query_id",
-        "cell",
-        "m",
-        "cid",
-        l2_sq(F.col("sv"), F.col("cv")).alias("d2"),
-    )
-    candset = (
-        probed.filter(F.col("vec_id") < 20)
-        .select(F.col("vec_id").alias("query_id"), "cell")
-        .join(
-            probed.filter(F.col("probe_rank") == 1).select(
-                F.col("vec_id").alias("neighbor_id"), "cell"
-            ),
-            "cell",
-        )
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", "cell")
-    )
-    adc = (
-        candset.join(
-            rcodes.select(
-                F.col("vec_id").alias("neighbor_id"), "m", "cid"
-            ),
-            "neighbor_id",
-        )
-        .join(F.broadcast(lut), ["query_id", "cell", "m", "cid"])
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.round(F.sum("d2"), 6).alias("adist"))
-    )
-    wq = Window.partitionBy("query_id").orderBy("adist", "neighbor_id")
-    approx_adc = (
-        adc.withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id")
-    )
-    reranked = (
-        candset.select("query_id", "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .join(
-            vecs.select(
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("v").alias("nv"),
-            ),
-            "neighbor_id",
-        )
-        .select(
-            "query_id",
-            "neighbor_id",
-            l2_sq(F.col("qv"), F.col("nv")).alias("d2"),
-        )
-    )
-    wr = Window.partitionBy("query_id").orderBy("d2", "neighbor_id")
-    approx = (
-        reranked.withColumn("rn", F.row_number().over(wr))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id")
-    )
-    ncand = candset.groupBy("query_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_cand")
-    )
-    exact_scored = (
-        vecs.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            l2_sq(F.col("qv"), F.col("v")).alias("d2"),
-        )
-    )
-    we = Window.partitionBy("query_id").orderBy("d2", "neighbor_id")
-    exact = (
-        exact_scored.withColumn("rn", F.row_number().over(we))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id")
-    )
-    return (
-        exact.join(
-            F.broadcast(
-                approx_adc.select(
-                    "query_id", "neighbor_id", F.lit(1).alias("hit_adc")
-                )
-            ),
-            ["query_id", "neighbor_id"],
-            "left",
-        )
-        .join(
-            F.broadcast(
-                approx.select(
-                    "query_id", "neighbor_id", F.lit(1).alias("hit")
-                )
-            ),
-            ["query_id", "neighbor_id"],
-            "left",
-        )
-        .join(F.broadcast(ncand), "query_id", "left")
-        .groupBy("query_id", "n_cand")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_exact"),
-            F.count("hit_adc").cast("bigint").alias("n_hit_adc"),
-            F.count("hit").cast("bigint").alias("n_hit"),
-            F.round(
-                F.count("hit_adc").cast("double") / F.count(F.lit(1)), 6
-            ).alias("recall_adc"),
-            F.round(
-                F.count("hit").cast("double") / F.count(F.lit(1)), 6
-            ).alias("recall_at_3"),
-        )
-        .select(
-            "query_id",
-            F.lit(n_cells).cast("bigint").alias("n_cells"),
-            F.coalesce(F.col("n_cand"), F.lit(0).cast("bigint")).alias(
-                "n_cand"
-            ),
-            "n_exact",
-            "n_hit_adc",
-            "n_hit",
-            "recall_adc",
-            "recall_at_3",
-        )
+    lut = adc_lut(pq_subvectors(qres, "v", ("query_id", "cell")), rcb)
+    cand = ivf_candidates(probed)
+    return recall_report(
+        l2_topk(vecs, qv),
+        {
+            "adc": top_ids(adc_ranked(rcodes, lut, cand)),
+            "": rerank_topk(cand, qv, vecs),
+        },
+        cand=cand,
+        n_cells=n_cells,
     )
 
 
@@ -5509,27 +4517,27 @@ def q_ann_ivfpq_residual_recall_audit(
 # sq8_recon) — ONE definition shared with the streamed incremental
 # encoder (queries/streaming_e2e.py stream_vector_index_e2e), so the
 # batch and streaming paths cannot drift apart.
-SQ8_STATS_CTE = """dimstats AS (
+SQ8_STATS_CTE = f"""dimstats AS (
   SELECT pos, min(v[pos]) AS lo, max(v[pos]) AS hi
-  FROM vecs CROSS JOIN generate_series(1, 64) AS p(pos)
+  FROM vecs CROSS JOIN generate_series(1, {EMB_DIM}) AS p(pos)
   GROUP BY pos
 ), stats AS (
   SELECT list(lo ORDER BY pos) AS lo, list(hi ORDER BY pos) AS hi
   FROM dimstats
 )"""
 
-SQ8_CODES_CTE = """codes AS (
+SQ8_CODES_CTE = f"""codes AS (
   SELECT vec_id,
          [CAST(coalesce(round(round((v[i] - s.lo[i])
                 / nullif(s.hi[i] - s.lo[i], 0.0), 6) * 255), 0) AS INTEGER)
-          for i in generate_series(1, 64)] AS code
+          for i in generate_series(1, {EMB_DIM})] AS code
   FROM vecs CROSS JOIN stats s
 )"""
 
-SQ8_RECON_CTE = """recon AS (
+SQ8_RECON_CTE = f"""recon AS (
   SELECT vec_id,
          [round(s.lo[i] + code[i] / 255.0 * (s.hi[i] - s.lo[i]), 6)
-          for i in generate_series(1, 64)] AS rv
+          for i in generate_series(1, {EMB_DIM})] AS rv
   FROM codes CROSS JOIN stats s
 )"""
 
@@ -5537,44 +4545,12 @@ SQ8_RECON_CTE = """recon AS (
 @register(
     "sq8_recall_audit",
     oracle=f"""
-WITH vecs AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-), {SQ8_STATS_CTE}, {SQ8_CODES_CTE}, {SQ8_RECON_CTE}, rerr AS (
-  SELECT v.vec_id,
-         round(list_sum([(v.v[i]-r.rv[i])*(v.v[i]-r.rv[i])
-                         for i in generate_series(1,64)]), 6) AS e2
-  FROM vecs v JOIN recon r ON r.vec_id = v.vec_id
-), q AS (
-  SELECT vec_id AS query_id, v FROM vecs WHERE vec_id < 20
-), approx_scored AS (
-  SELECT q.query_id, r.vec_id AS neighbor_id,
-         round(list_sum([(q.v[i]-r.rv[i])*(q.v[i]-r.rv[i])
-                         for i in generate_series(1,64)]), 6) AS d2
-  FROM recon r CROSS JOIN q WHERE r.vec_id <> q.query_id
-), approx AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY query_id ORDER BY d2, neighbor_id) AS rn
-    FROM approx_scored) WHERE rn <= 3
-), exact_scored AS (
-  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-         round(list_sum([(a.v[i]-b.v[i])*(a.v[i]-b.v[i])
-                         for i in generate_series(1,64)]), 6) AS d2
-  FROM vecs a JOIN vecs b ON b.vec_id <> a.vec_id
-  WHERE a.vec_id < 20
-), exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY query_id ORDER BY d2, neighbor_id) AS rn
-    FROM exact_scored) WHERE rn <= 3
-)
-SELECT e.query_id, CAST(count(*) AS BIGINT) AS n_exact,
-       CAST(count(a.neighbor_id) AS BIGINT) AS n_hit,
-       round(CAST(count(a.neighbor_id) AS DOUBLE) / count(*), 6)
-         AS recall_at_3,
-       (SELECT round(avg(e2), 6) FROM rerr) AS avg_recon_err
-FROM exact e LEFT JOIN approx a USING (query_id, neighbor_id)
-GROUP BY e.query_id
+WITH {_VECS}, {SQ8_STATS_CTE}, {SQ8_CODES_CTE}, {SQ8_RECON_CTE},
+{_sql_l2_ranked("sq8", "recon", "rv")}, {_L2_EXACT}
+SELECT rep.*, (
+  SELECT round(avg({_sql_l2("v.v", "r.rv")}), 6)
+  FROM vecs v JOIN recon r ON r.vec_id = v.vec_id) AS avg_recon_err
+FROM ({_sql_report({"": _top("sq8")})}) rep
 """,
     doc="SQ8 scalar quantization — the middle memory tier between raw "
     "floats (256 B) and PQ codes (4 B): every dimension linearly "
@@ -5592,16 +4568,8 @@ GROUP BY e.query_id
     "audit's exact side is bounded by the 20-query sample contract.",
 )
 def q_sq8_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from quant_market_data_pipeline_spark.llm.similarity import (
-        as_double,
-        l2_sq,
-        sq8_codes,
-        sq8_dim_stats,
-        sq8_recon,
-    )
-
     emb = _embeddings(spark, sf_dir)
-    vecs = emb.select("vec_id", as_double(F.col("embedding")).alias("v"))
+    vecs, qv = audit_vectors(emb)
     # per-dimension min/max: one map-side agg collected at 64 rows and
     # re-literalized (the broadcast dimension-stats frame); encode and
     # reconstruct are the SHARED single-definition map passes
@@ -5613,75 +4581,19 @@ def q_sq8_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(l2_sq(F.col("v"), F.col("rv")).alias("e2"))
         .agg(F.round(F.avg("e2"), 6).alias("avg_recon_err"))
     )
-    qv = vecs.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    approx_scored = (
-        recon.crossJoin(F.broadcast(qv))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            l2_sq(F.col("qv"), F.col("rv")).alias("d2"),
-        )
-    )
-    wa = Window.partitionBy("query_id").orderBy("d2", "neighbor_id")
-    approx = (
-        approx_scored.withColumn("rn", F.row_number().over(wa))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id")
-    )
-    exact_scored = (
-        vecs.crossJoin(F.broadcast(qv))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            l2_sq(F.col("qv"), F.col("v")).alias("d2"),
-        )
-    )
-    we = Window.partitionBy("query_id").orderBy("d2", "neighbor_id")
-    exact = (
-        exact_scored.withColumn("rn", F.row_number().over(we))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id")
-    )
-    return (
-        exact.join(
-            F.broadcast(
-                approx.select(
-                    "query_id", "neighbor_id", F.lit(1).alias("hit")
-                )
-            ),
-            ["query_id", "neighbor_id"],
-            "left",
-        )
-        .groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_exact"),
-            F.count("hit").cast("bigint").alias("n_hit"),
-            F.round(
-                F.count("hit").cast("double") / F.count(F.lit(1)), 6
-            ).alias("recall_at_3"),
-        )
-        .crossJoin(F.broadcast(rerr))
-        .select(
-            "query_id", "n_exact", "n_hit", "recall_at_3", "avg_recon_err"
-        )
-    )
+    return recall_report(
+        l2_topk(vecs, qv), {"": l2_topk(recon, qv, "rv")}
+    ).crossJoin(F.broadcast(rerr))
 
 
 @register(
     "ann_mt_recall_audit",
     oracle=f"""
 {_MT_PRELUDE}, cand AS (
-{_MT_CAND.format(cap=_LSH_CAP, query_pred=" AND a.vec_id < 20")}
-), approx AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS rn
-    FROM cand) WHERE rn <= 3
-){_ANN_EXACT_TAIL}""",
+{_MT_CAND.format(cap=_LSH_CAP, query_pred=f" AND a.vec_id < {AUDIT_QUERIES}")}
+), {_sql_ranked("approx", "SELECT * FROM cand", "cos_sim DESC")}, {_COS_EXACT}
+{_sql_report({"": _top("approx")})}
+""",
     doc="Recall@3 of the PRODUCTION multi-table LSH index "
     "(ann_lsh_mt_topk's exact 4x4/cap64 pipeline, reused verbatim) vs "
     "the exact cosine baseline on the same deterministic 20-query "
@@ -5698,21 +4610,11 @@ def q_sq8_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     "broadcast.",
 )
 def q_ann_mt_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from quant_market_data_pipeline_spark.llm.similarity import (
-        lsh_multitable_topk,
-    )
-
     emb = _embeddings(spark, sf_dir)
-    sample = emb.filter(F.col("vec_id") < 20)
-    exact = cosine_topk(sample, emb, k=3).select("query_id", "neighbor_id")
     approx = lsh_multitable_topk(
-        emb,
-        tables=_MT_TABLES,
-        dim=64,
-        k=3,
-        neighbor_cap=_LSH_CAP,
+        emb, tables=_MT_TABLES, dim=EMB_DIM, k=AUDIT_K, neighbor_cap=_LSH_CAP
     )
-    return _recall_audit_frame(exact, approx)
+    return recall_report(exact_cosine_topk(emb), {"": approx})
 
 
 @register(
@@ -5720,12 +4622,10 @@ def q_ann_mt_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH vecs AS (
   SELECT vec_id, embedding::DOUBLE[] AS cv FROM embeddings
-), {_MP_DOTS}, {_MP_PAIRS.format(query_pred=" AND p.vec_id < 20")}, approx AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS rn
-    FROM pairs) WHERE rn <= 3
-){_ANN_EXACT_TAIL}""",
+), {_MP_DOTS}, {_MP_PAIRS.format(query_pred=f" AND p.vec_id < {AUDIT_QUERIES}")},
+{_sql_ranked("approx", "SELECT * FROM pairs", "cos_sim DESC")}, {_COS_EXACT}
+{_sql_report({"": _top("approx")})}
+""",
     doc="Recall@3 of the multi-probe single-table LSH index "
     "(ann_lsh_mp_topk's exact pipeline, reused verbatim) vs the exact "
     "cosine baseline on the same deterministic 20-query sample as "
@@ -5738,22 +4638,16 @@ WITH vecs AS (
     "(collision-limited regime; see ann_lsh_mp_topk's sweep).",
 )
 def q_ann_mp_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from quant_market_data_pipeline_spark.llm.similarity import (
-        lsh_multiprobe_topk,
-    )
-
     emb = _embeddings(spark, sf_dir)
-    sample = emb.filter(F.col("vec_id") < 20)
-    exact = cosine_topk(sample, emb, k=3).select("query_id", "neighbor_id")
     approx = lsh_multiprobe_topk(
         emb,
-        dim=64,
-        k=3,
+        dim=EMB_DIM,
+        k=AUDIT_K,
         n_flip=_MP_FLIPS,
         neighbor_cap=_LSH_CAP,
         target_pop=_MP_TARGET,
     )
-    return _recall_audit_frame(exact, approx)
+    return recall_report(exact_cosine_topk(emb), {"": approx})
 
 
 @register(
@@ -5763,31 +4657,20 @@ WITH vecs AS (
   SELECT vec_id, embedding::DOUBLE[] AS cv FROM embeddings
 ), cents AS (
   SELECT vec_id AS cid, cv AS cent FROM vecs WHERE vec_id < {_IVF_CELLS}
-), cscored AS (
-  SELECT vec_id, cv, cid,
-         round(list_dot_product(cv, cent) /
-               nullif(sqrt(list_dot_product(cv, cv)) *
-                      sqrt(list_dot_product(cent, cent)), 0.0), 6) AS cs
-  FROM vecs CROSS JOIN cents
 ), probed AS (
   SELECT vec_id, cv, cid AS cell, rn AS probe_rank FROM (
     SELECT *, row_number() OVER (
       PARTITION BY vec_id ORDER BY cs DESC, cid) AS rn
-    FROM cscored) WHERE rn <= {_IVF_PROBE}
-), cand AS (
+    FROM (SELECT vec_id, cv, cid, {_IVF_COS.format(a="cv", b="cent")} AS cs
+          FROM vecs CROSS JOIN cents)) WHERE rn <= {_IVF_PROBE}
+), {_sql_ranked("approx", f'''
   SELECT qq.vec_id AS query_id, c.vec_id AS neighbor_id,
-         round(list_dot_product(qq.cv, c.cv) /
-               nullif(sqrt(list_dot_product(qq.cv, qq.cv)) *
-                      sqrt(list_dot_product(c.cv, c.cv)), 0.0), 6) AS cos_sim
+         {_IVF_COS.format(a="qq.cv", b="c.cv")} AS cos_sim
   FROM probed qq JOIN (SELECT * FROM probed WHERE probe_rank = 1) c
     ON qq.cell = c.cell AND qq.vec_id <> c.vec_id
-  WHERE qq.vec_id < 20
-), approx AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS rn
-    FROM cand) WHERE rn <= 3
-){_ANN_EXACT_TAIL}""",
+  WHERE qq.vec_id < {AUDIT_QUERIES}''', "cos_sim DESC")}, {_COS_EXACT}
+{_sql_report({"": _top("approx")})}
+""",
     doc="Recall@3 of the PRODUCTION IVF index (ann_ivf_topk's exact "
     f"coarse-quantize + {_IVF_PROBE}-probe search over {_IVF_CELLS} "
     "cells, reused verbatim) vs the exact cosine baseline on the same "
@@ -5801,19 +4684,15 @@ WITH vecs AS (
     "the LSH ceiling.  Same bounded shapes as ann_mt_recall_audit.",
 )
 def q_ann_ivf_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from quant_market_data_pipeline_spark.llm.similarity import ivf_topk
-
     emb = _embeddings(spark, sf_dir)
-    sample = emb.filter(F.col("vec_id") < 20)
-    exact = cosine_topk(sample, emb, k=3).select("query_id", "neighbor_id")
     approx = ivf_topk(
         emb,
         n_centroids=_IVF_CELLS,
-        query_pred=F.col("query_id") < 20,
-        k=3,
+        query_pred=F.col("query_id") < AUDIT_QUERIES,
+        k=AUDIT_K,
         n_probe=_IVF_PROBE,
     )
-    return _recall_audit_frame(exact, approx)
+    return recall_report(exact_cosine_topk(emb), {"": approx})
 
 
 # ---------------------------------------------------------------------------
@@ -6416,203 +5295,62 @@ def q_minhash_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # centroid assignment splits populations arbitrarily (hot cells), which
 # breaks the cells~sqrt(n) per-query candidate bound whose premise is
 # balance.  This audit points the r13 Lloyd machinery at the 64-dim
-# coarse level (llm/similarity.py ivf_train_centroids) and REPORTS the
+# coarse level (llm/similarity.py lloyd_train(n_cells=)) and REPORTS the
 # balance next to recall: skew = max cell population / mean (n/cells),
 # under BOTH the id-sliced and the trained centroids, so the id-sliced
 # premise is measured rather than assumed.  Same determinism contract
-# as the PQ trainer (round-6 L2 argmin, lower-ccid tiebreak, round-6
-# means, empty-keeps-prev, first-greatest(1024, 4*n_cells)-by-id
+# as the PQ trainer (round-6 L2 argmin, lower-cid tiebreak, round-6
+# means, empty-keeps-prev, first-greatest(1024, 32*n_cells)-by-id
 # training slice); the oracle unrolls the 5 iterations as a chained
 # 64-dim CTE.  Measured (clustered fixture, n=20,000, 16 planted
 # imbalanced clusters): see COVERAGE.md r14 — the skew split is the
 # datapoint the r13 verdict asked for.
-_IVF_TRAIN_ITERS = 5
-
-
-def _coarse_lloyd_chain(iters: int = _IVF_TRAIN_ITERS) -> str:
-    """CTE fragments appended after nconf+cents: ctr (training slice,
-    greatest(1024, 4*n_cells) lowest ids) + cc0..cc{iters} — the 64-dim
-    coarse twin of _pq_lloyd_chain, seeded from the id-sliced cents."""
-    parts = [
-        """, ctr AS (
-  SELECT vec_id, v FROM vecs
-  WHERE vec_id < (SELECT greatest(1024, 32 * n_cells) FROM nconf)
-), cc0 AS (SELECT ccid, ccv FROM cents)"""
-    ]
-    for t in range(1, iters + 1):
-        prev = f"cc{t - 1}"
-        parts.append(
-            f""", ccd{t} AS (
-  SELECT s.vec_id, c.ccid,
-         round(list_sum([(s.v[i]-c.ccv[i])*(s.v[i]-c.ccv[i])
-                         for i in generate_series(1,64)]), 6) AS d2
-  FROM ctr s CROSS JOIN {prev} c
-), cca{t} AS (
-  SELECT vec_id, ccid FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d2, ccid)
-      AS rn
-    FROM ccd{t}) WHERE rn = 1
-), ccm{t} AS (
-  SELECT ccid, list(val ORDER BY pos) AS ccv FROM (
-    SELECT a.ccid, p.pos, round(avg(s.v[p.pos]), 6) AS val
-    FROM cca{t} a
-    JOIN ctr s ON s.vec_id = a.vec_id
-    CROSS JOIN generate_series(1, 64) AS p(pos)
-    GROUP BY 1, 2) GROUP BY ccid
-), cc{t} AS (
-  SELECT c.ccid, coalesce(t.ccv, c.ccv) AS ccv
-  FROM {prev} c LEFT JOIN ccm{t} t ON t.ccid = c.ccid
-)"""
-        )
-    return "".join(parts)
+def _sql_skew(assign: str) -> str:
+    return (
+        "round(CAST((SELECT max(pop) FROM (SELECT count(*) AS pop"
+        f" FROM {assign} GROUP BY cid)) * n_cells AS DOUBLE) / n, 6)"
+    )
 
 
 @register(
     "ann_ivfpq_trained_recall_audit",
     oracle=f"""
-WITH {_PQ_CODES_CTE}{_pq_lloyd_chain()}, nconf AS (
-  SELECT count(*) AS n,
-         greatest(32, CAST(ceil(sqrt(count(*))) AS BIGINT)) AS n_cells
-  FROM vecs
-), cents AS (
-  SELECT vec_id AS ccid, v AS ccv FROM vecs
-  WHERE vec_id < (SELECT n_cells FROM nconf)
-){_coarse_lloyd_chain()}, cscored_id AS (
-  SELECT a.vec_id, c.ccid,
-         round(list_sum([(a.v[i]-c.ccv[i])*(a.v[i]-c.ccv[i])
-                         for i in generate_series(1,64)]), 6) AS cd2
-  FROM vecs a CROSS JOIN cents c
-), assign_id AS (
-  SELECT vec_id, ccid AS cell FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY vec_id ORDER BY cd2, ccid) AS rn
-    FROM cscored_id) WHERE rn = 1
-), cscored_tr AS (
-  SELECT a.vec_id, c.ccid,
-         round(list_sum([(a.v[i]-c.ccv[i])*(a.v[i]-c.ccv[i])
-                         for i in generate_series(1,64)]), 6) AS cd2
-  FROM vecs a CROSS JOIN cc{_IVF_TRAIN_ITERS} c
-), probed AS (
-  SELECT vec_id, ccid AS cell, cd2, rn AS probe_rank FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY vec_id ORDER BY cd2, ccid) AS rn
-    FROM cscored_tr) WHERE rn <= {_IVF_PROBE}
-), capconf AS (
-  SELECT CAST(ceil(2.0 * n / n_cells) AS BIGINT) AS cap FROM nconf
-), ranked_in_cell AS (
-  SELECT vec_id, cell, cd2,
-         row_number() OVER (PARTITION BY cell ORDER BY cd2, vec_id)
-           AS cr
-  FROM probed WHERE probe_rank = 1
-), final_assign AS (
+WITH {_PQ_TRAINED}, {_ADAPTIVE_CELLS}{
+    _sql_lloyd(
+        "cc",
+        "vecs",
+        "cents",
+        f"(SELECT greatest({IVF_TRAIN_MIN_N}, {IVF_TRAIN_PER_CELL} * n_cells)"
+        " FROM nconf)",
+        sub=False,
+    )
+}, {_sql_argmin("assign_id", "vecs", "cents", sub=False)},
+{_sql_argmin("probed", "vecs", f"cc{LLOYD_ITERS}", sub=False, upto=_IVF_PROBE)},
+final_assign AS (
   SELECT r.vec_id,
-         CASE WHEN r.cr <= (SELECT cap FROM capconf) THEN r.cell
-              ELSE coalesce(p2.cell, r.cell) END AS cell
-  FROM ranked_in_cell r
-  LEFT JOIN (SELECT vec_id, cell FROM probed WHERE probe_rank = 2) p2
-    ON p2.vec_id = r.vec_id
+         CASE WHEN r.cr <= (SELECT CAST(ceil(2.0 * n / n_cells) AS BIGINT)
+                            FROM nconf) THEN r.cid
+              ELSE coalesce(p2.cid, r.cid) END AS cid
+  FROM (SELECT vec_id, cid, row_number() OVER (
+          PARTITION BY cid ORDER BY d2, vec_id) AS cr
+        FROM probed WHERE rn = 1) r
+  LEFT JOIN probed p2 ON p2.vec_id = r.vec_id AND p2.rn = 2
 ), skews AS (
-  SELECT round(CAST(mi.max_pop * nc.n_cells AS DOUBLE) / nc.n, 6)
-           AS skew_id_sliced,
-         round(CAST(mt.max_pop * nc.n_cells AS DOUBLE) / nc.n, 6)
-           AS skew_trained,
-         round(CAST(mc.max_pop * nc.n_cells AS DOUBLE) / nc.n, 6)
-           AS skew_capped,
-         ei.coarse_err_id, et.coarse_err_trained
-  FROM (SELECT max(pop) AS max_pop FROM (
-          SELECT cell, count(*) AS pop FROM assign_id GROUP BY cell)) mi,
-       (SELECT max(pop) AS max_pop FROM (
-          SELECT cell, count(*) AS pop FROM probed
-          WHERE probe_rank = 1 GROUP BY cell)) mt,
-       (SELECT max(pop) AS max_pop FROM (
-          SELECT cell, count(*) AS pop FROM final_assign
-          GROUP BY cell)) mc,
-       (SELECT round(avg(cd2), 6) AS coarse_err_id FROM (
-          SELECT vec_id, min(cd2) AS cd2 FROM cscored_id
-          GROUP BY vec_id)) ei,
-       (SELECT round(avg(cd2), 6) AS coarse_err_trained FROM probed
-        WHERE probe_rank = 1) et,
-       nconf nc
-), q AS (
-  SELECT vec_id AS query_id, m, sv FROM sub WHERE vec_id < 20
-), qd AS (
-  SELECT q.query_id, q.m, c.cid,
-         round(list_sum([(q.sv[i]-c.cv[i])*(q.sv[i]-c.cv[i])
-                         for i in generate_series(1,16)]), 6) AS d2
-  FROM q JOIN cb{_PQ_ITERS} c ON c.m = q.m
-), distt AS (
-  SELECT s.vec_id, s.m, c.cid,
-         round(list_sum([(s.sv[i]-c.cv[i])*(s.sv[i]-c.cv[i])
-                         for i in generate_series(1,16)]), 6) AS d2
-  FROM sub s JOIN cb{_PQ_ITERS} c ON c.m = s.m
-), codest AS (
-  SELECT vec_id, m, cid FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id, m ORDER BY d2, cid)
-      AS rn
-    FROM distt) WHERE rn = 1
-), candset AS (
-  SELECT pq.vec_id AS query_id, fa.vec_id AS neighbor_id
-  FROM probed pq
-  JOIN final_assign fa
-    ON fa.cell = pq.cell AND fa.vec_id <> pq.vec_id
-  WHERE pq.vec_id < 20
-), adc AS (
-  SELECT cs.query_id, cs.neighbor_id, round(sum(qd.d2), 6) AS adist
-  FROM candset cs
-  JOIN codest ON codest.vec_id = cs.neighbor_id
-  JOIN qd ON qd.query_id = cs.query_id
-         AND qd.m = codest.m AND qd.cid = codest.cid
-  GROUP BY 1, 2
-), approx_adc AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY query_id ORDER BY adist, neighbor_id) AS rn
-    FROM adc) WHERE rn <= 3
-), reranked AS (
-  SELECT cs.query_id, cs.neighbor_id,
-         round(list_sum([(qa.v[i]-nb.v[i])*(qa.v[i]-nb.v[i])
-                         for i in generate_series(1,64)]), 6) AS d2
-  FROM candset cs
-  JOIN vecs qa ON qa.vec_id = cs.query_id
-  JOIN vecs nb ON nb.vec_id = cs.neighbor_id
-), approx AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY query_id ORDER BY d2, neighbor_id) AS rn
-    FROM reranked) WHERE rn <= 3
-), ncand AS (
-  SELECT query_id, count(*)::BIGINT AS n_cand FROM candset GROUP BY 1
-), exact_scored AS (
-  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-         round(list_sum([(a.v[i]-b.v[i])*(a.v[i]-b.v[i])
-                         for i in generate_series(1,64)]), 6) AS d2
-  FROM vecs a JOIN vecs b ON b.vec_id <> a.vec_id
-  WHERE a.vec_id < 20
-), exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY query_id ORDER BY d2, neighbor_id) AS rn
-    FROM exact_scored) WHERE rn <= 3
-)
-SELECT e.query_id,
-       (SELECT n_cells FROM nconf) AS n_cells,
-       coalesce(nc.n_cand, 0) AS n_cand,
-       CAST(count(*) AS BIGINT) AS n_exact,
-       CAST(count(aa.neighbor_id) AS BIGINT) AS n_hit_adc,
-       CAST(count(a.neighbor_id) AS BIGINT) AS n_hit,
-       round(CAST(count(aa.neighbor_id) AS DOUBLE) / count(*), 6)
-         AS recall_adc,
-       round(CAST(count(a.neighbor_id) AS DOUBLE) / count(*), 6)
-         AS recall_at_3,
-       sk.skew_id_sliced, sk.skew_trained, sk.skew_capped,
-       sk.coarse_err_id, sk.coarse_err_trained
-FROM exact e
-LEFT JOIN approx_adc aa USING (query_id, neighbor_id)
-LEFT JOIN approx a USING (query_id, neighbor_id)
-LEFT JOIN ncand nc ON nc.query_id = e.query_id
+  SELECT {_sql_skew("assign_id")} AS skew_id_sliced,
+         {_sql_skew("(SELECT * FROM probed WHERE rn = 1)")} AS skew_trained,
+         {_sql_skew("final_assign")} AS skew_capped,
+         (SELECT round(avg(d2), 6) FROM assign_id) AS coarse_err_id,
+         (SELECT round(avg(d2), 6) FROM probed WHERE rn = 1)
+           AS coarse_err_trained
+  FROM nconf
+), {_sql_candset("final_assign")},
+{_sql_adc("adc", "codest", _sql_qsub("sub"), _CB, "candset")},
+{_sql_rerank("rr", "candset")}, {_L2_EXACT}
+SELECT rep.*, sk.*
+FROM ({_sql_report(
+    {"adc": _top("adc"), "": _top("rr")}, cand=True, n_cells=True
+)}) rep
 CROSS JOIN skews sk
-GROUP BY e.query_id, nc.n_cand, sk.skew_id_sliced, sk.skew_trained,
-         sk.skew_capped, sk.coarse_err_id, sk.coarse_err_trained
 """,
     doc="Adaptive IVF+PQ with a k-means-TRAINED coarse quantizer and a "
     "CAPPED-OVERFLOW assignment (VERDICT r13 #2): the r13 Lloyd "
@@ -6645,57 +5383,28 @@ GROUP BY e.query_id, nc.n_cand, sk.skew_id_sliced, sk.skew_trained,
 def q_ann_ivfpq_trained_recall_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import math
-
-    from quant_market_data_pipeline_spark.llm.similarity import (
-        as_double,
-        ivf_train_centroids,
-        l2_sq,
-        pq_encode,
-        pq_subvectors,
-        pq_train_codebooks,
-    )
-
     emb = _embeddings(spark, sf_dir)
     n = emb.count()
-    c = math.isqrt(n)
-    n_cells = max(32, c if c * c == n else c + 1)
-    vecs = emb.select("vec_id", as_double(F.col("embedding")).alias("v"))
-    cents_id = vecs.filter(F.col("vec_id") < n_cells).select(
-        F.col("vec_id").alias("ccid"), F.col("v").alias("ccv")
+    n_cells = n_cells_for(n)
+    vecs, qv = audit_vectors(emb)
+    assign_id = ivf_probe(vecs, ivf_centroids(vecs, n_cells), 1)
+    probed = materialize_corpus(
+        ivf_probe(vecs, lloyd_train(emb, n_cells=n_cells), _IVF_PROBE)
     )
-    cents_tr = ivf_train_centroids(emb, n_cells, vec_col="embedding")
-
-    def _assign_rank(cents: DataFrame, upto: int) -> DataFrame:
-        scored = vecs.crossJoin(F.broadcast(cents)).select(
-            "vec_id", "ccid", l2_sq(F.col("v"), F.col("ccv"), dim=64).alias("cd2")
-        )
-        wp = Window.partitionBy("vec_id").orderBy("cd2", "ccid")
-        return (
-            scored.withColumn("probe_rank", F.row_number().over(wp))
-            .filter(F.col("probe_rank") <= upto)
-            .select(
-                "vec_id", F.col("ccid").alias("cell"), "cd2", "probe_rank"
-            )
-        )
-
-    assign_id = _assign_rank(cents_id, 1)
-    probed = materialize_corpus(_assign_rank(cents_tr, _IVF_PROBE))
+    assign_tr = probed.filter(F.col("probe_rank") == 1)
     # capped-overflow assignment (the index's skew bound): within each
     # cell the cap closest vectors stay; the overflow moves ONE hop to
     # its second-nearest cell — a deterministic (cd2, vec_id) ranking,
     # so the rebalance is oracle-checkable like everything else
     cap = math.ceil(2.0 * n / n_cells)
     wc = Window.partitionBy("cell").orderBy("cd2", "vec_id")
-    ranked_in_cell = (
-        probed.filter(F.col("probe_rank") == 1)
-        .withColumn("cr", F.row_number().over(wc))
-    )
     p2 = probed.filter(F.col("probe_rank") == 2).select(
         "vec_id", F.col("cell").alias("cell2")
     )
     final_assign = materialize_corpus(
-        ranked_in_cell.join(p2, "vec_id", "left").select(
+        assign_tr.withColumn("cr", F.row_number().over(wc))
+        .join(p2, "vec_id", "left")
+        .select(
             "vec_id",
             F.when(F.col("cr") <= cap, F.col("cell"))
             .otherwise(F.coalesce(F.col("cell2"), F.col("cell")))
@@ -6703,178 +5412,29 @@ def q_ann_ivfpq_trained_recall_audit(
         )
     )
 
-    def _max_pop(assign: DataFrame) -> DataFrame:
+    def skew(assign: DataFrame, alias: str) -> DataFrame:
         return assign.groupBy("cell").count().agg(
-            F.max("count").alias("max_pop")
+            F.round(F.max("count").cast("double") * n_cells / n, 6).alias(alias)
         )
 
-    def _skew(frame: DataFrame, alias: str) -> DataFrame:
-        return _max_pop(frame).select(
-            F.round(
-                F.col("max_pop").cast("double") * n_cells / n, 6
-            ).alias(alias)
-        )
+    def coarse_err(assign: DataFrame, alias: str) -> DataFrame:
+        return assign.agg(F.round(F.avg("cd2"), 6).alias(alias))
 
     skews = (
-        _skew(assign_id, "skew_id_sliced")
-        .crossJoin(
-            _skew(
-                probed.filter(F.col("probe_rank") == 1), "skew_trained"
-            )
-        )
-        .crossJoin(_skew(final_assign, "skew_capped"))
-        .crossJoin(
-            assign_id.agg(
-                F.round(F.avg("cd2"), 6).alias("coarse_err_id")
-            )
-        )
-        .crossJoin(
-            probed.filter(F.col("probe_rank") == 1).agg(
-                F.round(F.avg("cd2"), 6).alias("coarse_err_trained")
-            )
-        )
+        skew(assign_id, "skew_id_sliced")
+        .crossJoin(skew(assign_tr, "skew_trained"))
+        .crossJoin(skew(final_assign, "skew_capped"))
+        .crossJoin(coarse_err(assign_id, "coarse_err_id"))
+        .crossJoin(coarse_err(assign_tr, "coarse_err_trained"))
     )
-    candset = (
-        probed.filter(F.col("vec_id") < 20)
-        .select(F.col("vec_id").alias("query_id"), "cell")
-        .join(
-            final_assign.select(
-                F.col("vec_id").alias("neighbor_id"), "cell"
-            ),
-            "cell",
-        )
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id")
-    )
-    sub = pq_subvectors(emb)
-    cb = pq_train_codebooks(emb)
-    codes = pq_encode(sub, cb).select(
-        F.col("vec_id").alias("neighbor_id"), "m", "cid"
-    )
-    qd = (
-        sub.filter(F.col("vec_id") < 20)
-        .select(F.col("vec_id").alias("query_id"), "m", "sv")
-        .join(F.broadcast(cb), "m")
-        .select(
-            "query_id",
-            "m",
-            "cid",
-            l2_sq(F.col("sv"), F.col("cv")).alias("d2"),
-        )
-    )
-    adc = (
-        candset.join(codes, "neighbor_id")
-        .join(F.broadcast(qd), ["query_id", "m", "cid"])
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.round(F.sum("d2"), 6).alias("adist"))
-    )
-    wq = Window.partitionBy("query_id").orderBy("adist", "neighbor_id")
-    approx_adc = (
-        adc.withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id")
-    )
-    qv = vecs.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    reranked = (
-        candset.join(F.broadcast(qv), "query_id")
-        .join(
-            vecs.select(
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("v").alias("nv"),
-            ),
-            "neighbor_id",
-        )
-        .select(
-            "query_id",
-            "neighbor_id",
-            l2_sq(F.col("qv"), F.col("nv")).alias("d2"),
-        )
-    )
-    wr = Window.partitionBy("query_id").orderBy("d2", "neighbor_id")
-    approx = (
-        reranked.withColumn("rn", F.row_number().over(wr))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id")
-    )
-    ncand = candset.groupBy("query_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_cand")
-    )
-    exact_scored = (
-        vecs.crossJoin(F.broadcast(qv))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            l2_sq(F.col("qv"), F.col("v")).alias("d2"),
-        )
-    )
-    we = Window.partitionBy("query_id").orderBy("d2", "neighbor_id")
-    exact = (
-        exact_scored.withColumn("rn", F.row_number().over(we))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id")
-    )
-    return (
-        exact.join(
-            F.broadcast(
-                approx_adc.select(
-                    "query_id", "neighbor_id", F.lit(1).alias("hit_adc")
-                )
-            ),
-            ["query_id", "neighbor_id"],
-            "left",
-        )
-        .join(
-            F.broadcast(
-                approx.select(
-                    "query_id", "neighbor_id", F.lit(1).alias("hit")
-                )
-            ),
-            ["query_id", "neighbor_id"],
-            "left",
-        )
-        .join(F.broadcast(ncand), "query_id", "left")
-        .crossJoin(F.broadcast(skews))
-        .groupBy(
-            "query_id",
-            "n_cand",
-            "skew_id_sliced",
-            "skew_trained",
-            "skew_capped",
-            "coarse_err_id",
-            "coarse_err_trained",
-        )
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_exact"),
-            F.count("hit_adc").cast("bigint").alias("n_hit_adc"),
-            F.count("hit").cast("bigint").alias("n_hit"),
-            F.round(
-                F.count("hit_adc").cast("double") / F.count(F.lit(1)), 6
-            ).alias("recall_adc"),
-            F.round(
-                F.count("hit").cast("double") / F.count(F.lit(1)), 6
-            ).alias("recall_at_3"),
-        )
-        .select(
-            "query_id",
-            F.lit(n_cells).cast("bigint").alias("n_cells"),
-            F.coalesce(F.col("n_cand"), F.lit(0).cast("bigint")).alias(
-                "n_cand"
-            ),
-            "n_exact",
-            "n_hit_adc",
-            "n_hit",
-            "recall_adc",
-            "recall_at_3",
-            "skew_id_sliced",
-            "skew_trained",
-            "skew_capped",
-            "coarse_err_id",
-            "coarse_err_trained",
-        )
-    )
+    cand = ivf_candidates(probed, final_assign)
+    adc = pq_adc(pq_subvectors(emb), lloyd_train(emb), cand)
+    return recall_report(
+        l2_topk(vecs, qv),
+        {"adc": top_ids(adc), "": rerank_topk(cand, qv, vecs)},
+        cand=cand,
+        n_cells=n_cells,
+    ).crossJoin(F.broadcast(skews))
 
 
 # --- OPQ-style rotation for the ADC tier (r14 stretch, VERDICT r13 #7) ----
@@ -6891,115 +5451,30 @@ def q_ann_ivfpq_trained_recall_audit(
 # not move ADC-only recall, ADC-only is refine-mandatory on this
 # data and the tier's story closes with a measured datapoint.
 def _opq_rotation_sql() -> str:
-    from quant_market_data_pipeline_spark.llm.similarity import (
-        opq_rotation_matrix,
-    )
-
     rows = opq_rotation_matrix()
-    return (
-        "["
-        + ",".join(
-            "[" + ",".join(repr(x) for x in row) + "]" for row in rows
-        )
-        + "]"
-    )
+    return "[" + ",".join(
+        "[" + ",".join(repr(x) for x in row) + "]" for row in rows
+    ) + "]"
 
 
 @register(
     "opq_rotation_recall_audit",
     oracle=f"""
-WITH {_PQ_CODES_CTE}{_pq_lloyd_chain()}, rmat AS (
+WITH {_PQ_TRAINED}, rmat AS (
   SELECT {_opq_rotation_sql()} AS R
 ), rv0 AS (
   SELECT vec_id, r.r AS pos,
          round(list_dot_product(m.R[r.r], v), 6) AS val
-  FROM vecs CROSS JOIN rmat m CROSS JOIN generate_series(1, 64) AS r(r)
+  FROM vecs CROSS JOIN rmat m
+  CROSS JOIN generate_series(1, {EMB_DIM}) AS r(r)
 ), rvecs AS (
   SELECT vec_id, list(val ORDER BY pos) AS v FROM rv0 GROUP BY vec_id
-), osub AS (
-  SELECT vec_id, mm.m, list_slice(v, mm.m*16+1, mm.m*16+16) AS sv
-  FROM rvecs, unnest([0,1,2,3]) AS mm(m)
-), oseed AS (
-  SELECT m, vec_id AS cid, sv AS cv FROM osub WHERE vec_id < 16
-){_pq_lloyd_chain(sub_src="osub", seed_src="oseed", prefix="ocb")}, distt AS (
-  SELECT s.vec_id, s.m, c.cid,
-         round(list_sum([(s.sv[i]-c.cv[i])*(s.sv[i]-c.cv[i])
-                         for i in generate_series(1,16)]), 6) AS d2
-  FROM sub s JOIN cb{_PQ_ITERS} c ON c.m = s.m
-), codest AS (
-  SELECT vec_id, m, cid FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id, m ORDER BY d2, cid)
-      AS rn
-    FROM distt) WHERE rn = 1
-), odist AS (
-  SELECT s.vec_id, s.m, c.cid,
-         round(list_sum([(s.sv[i]-c.cv[i])*(s.sv[i]-c.cv[i])
-                         for i in generate_series(1,16)]), 6) AS d2
-  FROM osub s JOIN ocb{_PQ_ITERS} c ON c.m = s.m
-), ocodes AS (
-  SELECT vec_id, m, cid FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id, m ORDER BY d2, cid)
-      AS rn
-    FROM odist) WHERE rn = 1
-), q AS (
-  SELECT vec_id AS query_id, m, sv FROM sub WHERE vec_id < 20
-), qd AS (
-  SELECT q.query_id, q.m, c.cid,
-         round(list_sum([(q.sv[i]-c.cv[i])*(q.sv[i]-c.cv[i])
-                         for i in generate_series(1,16)]), 6) AS d2
-  FROM q JOIN cb{_PQ_ITERS} c ON c.m = q.m
-), oq AS (
-  SELECT vec_id AS query_id, m, sv FROM osub WHERE vec_id < 20
-), oqd AS (
-  SELECT q.query_id, q.m, c.cid,
-         round(list_sum([(q.sv[i]-c.cv[i])*(q.sv[i]-c.cv[i])
-                         for i in generate_series(1,16)]), 6) AS d2
-  FROM oq q JOIN ocb{_PQ_ITERS} c ON c.m = q.m
-), adcp AS (
-  SELECT qd.query_id, codest.vec_id AS neighbor_id,
-         round(sum(qd.d2), 6) AS adist
-  FROM codest JOIN qd ON qd.m = codest.m AND qd.cid = codest.cid
-  WHERE codest.vec_id <> qd.query_id
-  GROUP BY 1, 2
-), adcr AS (
-  SELECT qd.query_id, ocodes.vec_id AS neighbor_id,
-         round(sum(qd.d2), 6) AS adist
-  FROM ocodes JOIN oqd qd ON qd.m = ocodes.m AND qd.cid = ocodes.cid
-  WHERE ocodes.vec_id <> qd.query_id
-  GROUP BY 1, 2
-), approx_p AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY query_id ORDER BY adist, neighbor_id) AS rn
-    FROM adcp) WHERE rn <= 3
-), approx_r AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY query_id ORDER BY adist, neighbor_id) AS rn
-    FROM adcr) WHERE rn <= 3
-), exact_scored AS (
-  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-         round(list_sum([(a.v[i]-b.v[i])*(a.v[i]-b.v[i])
-                         for i in generate_series(1,64)]), 6) AS d2
-  FROM vecs a JOIN vecs b ON b.vec_id <> a.vec_id
-  WHERE a.vec_id < 20
-), exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY query_id ORDER BY d2, neighbor_id) AS rn
-    FROM exact_scored) WHERE rn <= 3
-)
-SELECT e.query_id, CAST(count(*) AS BIGINT) AS n_exact,
-       CAST(count(ap.neighbor_id) AS BIGINT) AS n_hit_adc_plain,
-       CAST(count(ar.neighbor_id) AS BIGINT) AS n_hit_adc_rot,
-       round(CAST(count(ap.neighbor_id) AS DOUBLE) / count(*), 6)
-         AS recall_adc_plain,
-       round(CAST(count(ar.neighbor_id) AS DOUBLE) / count(*), 6)
-         AS recall_adc_rot
-FROM exact e
-LEFT JOIN approx_p ap USING (query_id, neighbor_id)
-LEFT JOIN approx_r ar USING (query_id, neighbor_id)
-GROUP BY e.query_id
+), {_sql_subvectors("osub", "rvecs")}, {_sql_seed("oseed", "osub")}{
+    _sql_lloyd("ocb", "osub", "oseed", PQ_TRAIN_N)
+}, {_sql_argmin("ocodes", "osub", f"ocb{LLOYD_ITERS}")},
+{_sql_adc("adcp", "codest", _sql_qsub("sub"), _CB)},
+{_sql_adc("adcr", "ocodes", _sql_qsub("osub"), f"ocb{LLOYD_ITERS}")}, {_L2_EXACT}
+{_sql_report({"adc_plain": _top("adcp"), "adc_rot": _top("adcr")})}
 """,
     doc="OPQ-style rotation priced against unrotated trained PQ on ONE "
     "raw-space exact ground truth (VERDICT r13 stretch #7): a fixed "
@@ -7025,99 +5500,15 @@ GROUP BY e.query_id
 def q_opq_rotation_recall_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from quant_market_data_pipeline_spark.llm.similarity import (
-        as_double,
-        l2_sq,
-        opq_rotate,
-        pq_encode,
-        pq_subvectors,
-        pq_train_codebooks,
-    )
-
     emb = _embeddings(spark, sf_dir)
-    vecs = emb.select("vec_id", as_double(F.col("embedding")).alias("v"))
+    vecs, qv = audit_vectors(emb)
     rvecs = materialize_corpus(opq_rotate(vecs))
     sub = materialize_corpus(pq_subvectors(emb))
     osub = materialize_corpus(pq_subvectors(rvecs, vec_col="v"))
-    cb_p = pq_train_codebooks(emb)
-    cb_r = pq_train_codebooks(rvecs, vec_col="v")
-    codes_p = pq_encode(sub, cb_p).select("vec_id", "m", "cid")
-    codes_r = pq_encode(osub, cb_r).select("vec_id", "m", "cid")
-
-    def adc_top3(
-        sub_f: DataFrame, codes: DataFrame, cb: DataFrame
-    ) -> DataFrame:
-        q = sub_f.filter(F.col("vec_id") < 20).select(
-            F.col("vec_id").alias("query_id"), "m", "sv"
-        )
-        qd = q.join(F.broadcast(cb), "m").select(
-            "query_id",
-            "m",
-            "cid",
-            l2_sq(F.col("sv"), F.col("cv")).alias("d2"),
-        )
-        adc = (
-            codes.join(F.broadcast(qd), ["m", "cid"])
-            .filter(F.col("vec_id") != F.col("query_id"))
-            .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-            .agg(F.round(F.sum("d2"), 6).alias("adist"))
-        )
-        w = Window.partitionBy("query_id").orderBy("adist", "neighbor_id")
-        return (
-            adc.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= 3)
-            .select("query_id", "neighbor_id")
-        )
-
-    approx_p = adc_top3(sub, codes_p, cb_p)
-    approx_r = adc_top3(osub, codes_r, cb_r)
-    qv = vecs.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    exact_scored = (
-        vecs.crossJoin(F.broadcast(qv))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            l2_sq(F.col("qv"), F.col("v")).alias("d2"),
-        )
-    )
-    we = Window.partitionBy("query_id").orderBy("d2", "neighbor_id")
-    exact = (
-        exact_scored.withColumn("rn", F.row_number().over(we))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id")
-    )
-    return (
-        exact.join(
-            F.broadcast(
-                approx_p.select(
-                    "query_id", "neighbor_id", F.lit(1).alias("hit_p")
-                )
-            ),
-            ["query_id", "neighbor_id"],
-            "left",
-        )
-        .join(
-            F.broadcast(
-                approx_r.select(
-                    "query_id", "neighbor_id", F.lit(1).alias("hit_r")
-                )
-            ),
-            ["query_id", "neighbor_id"],
-            "left",
-        )
-        .groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_exact"),
-            F.count("hit_p").cast("bigint").alias("n_hit_adc_plain"),
-            F.count("hit_r").cast("bigint").alias("n_hit_adc_rot"),
-            F.round(
-                F.count("hit_p").cast("double") / F.count(F.lit(1)), 6
-            ).alias("recall_adc_plain"),
-            F.round(
-                F.count("hit_r").cast("double") / F.count(F.lit(1)), 6
-            ).alias("recall_adc_rot"),
-        )
+    return recall_report(
+        l2_topk(vecs, qv),
+        {
+            "adc_plain": top_ids(pq_adc(sub, lloyd_train(emb))),
+            "adc_rot": top_ids(pq_adc(osub, lloyd_train(rvecs, vec_col="v"))),
+        },
     )

@@ -52,6 +52,7 @@ def test_batch_rows_match_closed_form_and_partitioning(synthbars):
 def test_stream_reader_offsets_cover_keyspace_exactly_once(
     synthbars, tmp_path
 ):
+    from quant_market_data_pipeline_spark.session import start_stream
     from quant_market_data_pipeline_spark.sources.pyds import synth_bar
 
     spark = synthbars
@@ -61,11 +62,11 @@ def test_stream_reader_offsets_cover_keyspace_exactly_once(
         .option("batchrows", "200")
         .load()
     )
-    q = (
+    q = start_stream(
+        spark,
         stream.writeStream.format("memory")
         .queryName("synthbars_sink")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
+        .option("checkpointLocation", str(tmp_path / "ckpt")),
     )
     # availableNow drains only ONE simple-reader offset increment, so
     # run the normal micro-batch trigger and poll until the keyspace

@@ -295,95 +295,3 @@ def _kmv_scratch():
     )
 
     return _SCRATCH / (Path(SF_DIR).name + "_kmv")
-
-
-# --- product quantization ----------------------------------------------------
-
-
-def test_pq_encode_matches_python_twin(spark):
-    """pq_encode vs an independent Python reimplementation — M/SUB/K
-    and the argmin tiebreak re-derived here, never imported: codebooks
-    are the first 16 vectors' 16-dim subvectors, encode is rounded-L2
-    argmin with the lower-cid tiebreak."""
-    from quant_market_data_pipeline_spark.llm.similarity import (
-        pq_codebooks,
-        pq_encode,
-        pq_subvectors,
-    )
-    from quant_market_data_pipeline_spark.sources.tables import load_table
-
-    emb = load_table(spark, "embeddings", SF_DIR)
-    codes = {
-        (r.vec_id, r.m): (r.cid, r.d2)
-        for r in pq_encode(pq_subvectors(emb), pq_codebooks(emb)).collect()
-    }
-    vecs = {
-        r.vec_id: [float(x) for x in r.embedding]
-        for r in emb.collect()
-    }
-    M, SUB, K = 4, 16, 16
-    books = {
-        m: {cid: vecs[cid][m * SUB : (m + 1) * SUB] for cid in range(K)}
-        for m in range(M)
-    }
-    sample = sorted(vecs)[:30]
-    for vid in sample:
-        for m in range(M):
-            sv = vecs[vid][m * SUB : (m + 1) * SUB]
-            best = min(
-                (
-                    (
-                        round(
-                            sum((a - b) * (a - b) for a, b in zip(sv, cv)),
-                            6,
-                        ),
-                        cid,
-                    )
-                    for cid, cv in books[m].items()
-                ),
-            )
-            got_cid, got_d2 = codes[(vid, m)]
-            assert (got_d2, got_cid) == pytest.approx(best), (vid, m)
-
-
-def test_pq_rerank_never_loses_an_adc_hit(spark):
-    """An exact-top-3 neighbor found by raw ADC is in the top-32
-    candidate set, and at most 2 candidates can beat it under exact
-    re-ranking — so per query, n_hit_reranked >= n_hit_adc (the
-    structural guarantee that stage 2 only recovers, never regresses),
-    and the measured recall uplift is the number the audit exists for."""
-    from quant_market_data_pipeline_spark.queries import load_all
-
-    rows = load_all()["pq_adc_recall_audit"].spark(spark, SF_DIR).collect()
-    assert len(rows) == 20
-    for r in rows:
-        assert r.n_exact == 3
-        assert r.n_hit_reranked >= r.n_hit_adc
-        assert r.recall_adc == pytest.approx(r.n_hit_adc / 3, abs=1e-6)
-        assert r.recall_reranked == pytest.approx(
-            r.n_hit_reranked / 3, abs=1e-6
-        )
-
-
-def test_ivfpq_composition_structure(spark):
-    """IVF+PQ composed: candidates are cell-bounded (n_cand << corpus),
-    the full-corpus ground truth has exactly 3 rows per query, and at
-    this fixture scale the composition holds high recall — the grown-
-    corpus boundary (fixed 32 cells vs the cells ~ sqrt(n) law) is
-    documented in COVERAGE, not asserted here."""
-    from quant_market_data_pipeline_spark.queries import load_all
-    from quant_market_data_pipeline_spark.sources.tables import load_table
-
-    rows = (
-        load_all()["ann_ivfpq_recall_audit"].spark(spark, SF_DIR).collect()
-    )
-    n = load_table(spark, "embeddings", SF_DIR).count()
-    assert len(rows) == 20
-    for r in rows:
-        assert r.n_exact == 3
-        assert 0 <= r.n_cand < n  # pruned, never the whole corpus
-        assert r.recall_at_3 == pytest.approx(r.n_hit / 3, abs=1e-6)
-    mean_cand = sum(r.n_cand for r in rows) / len(rows)
-    assert mean_cand <= 0.25 * n  # 2 cells of ~n/32 each + slack
-    micro = sum(r.n_hit for r in rows) / sum(r.n_exact for r in rows)
-    assert micro > 0.8

@@ -14,6 +14,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from quant_market_data_pipeline_spark.session import start_stream
 from quant_market_data_pipeline_spark.streaming.bars_stream import (
     read_tick_stream,
 )
@@ -51,13 +52,13 @@ def test_stateful_sessions_match_batch(spark, events):
 
         stream = read_tick_stream(spark, landing, schema=TICK_SCHEMA, fmt="parquet")
         sessions = sessionize_with_state(stream, gap="30 minutes")
-        q = (
+        q = start_stream(
+            spark,
             sessions.writeStream.format("memory")
             .queryName("stateful_sessions")
             .outputMode("append")
             .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
+            .trigger(availableNow=True),
         )
         q.awaitTermination(180)
         sentinel_keys = {
@@ -141,13 +142,13 @@ def test_streaming_zscore_matches_batch_window(spark, events):
             .parquet(landing)
         )
         scored = rolling_zscore_stream(stream.drop("part"))
-        q = (
+        q = start_stream(
+            spark,
             scored.writeStream.format("memory")
             .queryName("zscore_stream")
             .outputMode("append")
             .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
+            .trigger(availableNow=True),
         )
         q.awaitTermination(180)
         got = (
@@ -208,13 +209,13 @@ def test_streaming_wilder_rsi_matches_pandas_recursion(spark, events):
             .parquet(landing)
         )
         scored = wilder_rsi_stream(stream.drop("part"))
-        q = (
+        q = start_stream(
+            spark,
             scored.writeStream.format("memory")
             .queryName("rsi_stream")
             .outputMode("append")
             .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
+            .trigger(availableNow=True),
         )
         q.awaitTermination(180)
         got = (
@@ -366,12 +367,12 @@ def test_vpin_stream_buckets_straddle_batches(spark):
             .parquet(landing)
         )
         out = vpin_stream(stream.drop("part"), bucket_size=50)
-        q = (
+        q = start_stream(
+            spark,
             out.writeStream.format("memory")
             .queryName("vpin_straddle")
             .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            .trigger(availableNow=True),
         )
         q.awaitTermination()
         got = {
@@ -455,7 +456,7 @@ def test_vpin_crash_recovery_state_reloads(spark):
         )
         if available_now:
             writer = writer.trigger(availableNow=True)
-        return writer.start()
+        return start_stream(spark, writer)
 
     q1 = start(available_now=False)
     killed_after = _kill_after_batches(q1)

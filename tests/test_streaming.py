@@ -41,13 +41,13 @@ def test_stream_bars_match_batch(spark, events):
 
         ticks = read_tick_stream(spark, landing)
         bars = stream_bars(ticks, width="1 hour", watermark_delay="10 minutes")
-        q = (
+        q = start_stream(
+            spark,
             bars.writeStream.format("memory")
             .queryName("bars_stream_test")
             .outputMode("append")
             .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
+            .trigger(availableNow=True),
         )
         q.awaitTermination(120)
 
@@ -105,13 +105,13 @@ def test_dedup_stream_drops_duplicates(spark):
 
         ticks = read_tick_stream(spark, landing)
         deduped = dedup_stream(ticks, keys=["symbol", "event_id"])
-        q = (
+        q = start_stream(
+            spark,
             deduped.writeStream.format("memory")
             .queryName("dedup_stream_test")
             .outputMode("append")
             .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
+            .trigger(availableNow=True),
         )
         q.awaitTermination(120)
         got = spark.sql("SELECT * FROM dedup_stream_test").toPandas()
@@ -150,13 +150,13 @@ def test_stream_stream_join_matches_batch(spark, events):
             src().filter(F.col("event_type") == "view"),
             src().filter(F.col("event_type") == "purchase"),
         )
-        q = (
+        q = start_stream(
+            spark,
             joined.writeStream.format("memory")
             .queryName("ss_join")
             .outputMode("append")
             .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
+            .trigger(availableNow=True),
         )
         q.awaitTermination(180)
         got = spark.sql(
@@ -330,13 +330,13 @@ def test_update_mode_emits_final_counts(spark, events):
             .groupBy("symbol", F.window("ts", "1 day").start.alias("day"))
             .agg(F.count(F.lit(1)).alias("n"))
         )
-        q = (
+        q = start_stream(
+            spark,
             counts.writeStream.format("memory")
             .queryName("update_counts")
             .outputMode("update")
             .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
+            .trigger(availableNow=True),
         )
         q.awaitTermination(120)
         emitted = spark.sql("SELECT * FROM update_counts").toPandas()

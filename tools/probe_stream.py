@@ -6,8 +6,10 @@ not data work — the per-operator table that says whether batch-side
 tuning can matter at all.
 
 Usage: python tools/probe_stream.py [query ...]   (default: every
-registered stream_* query).  Imports the package of the checkout the
-script lives in, so a copy of another tree times that tree.
+registered stream_* query).  The first query runs once, untimed,
+before the table, so no row pays the cold JVM.  Imports the package of
+the checkout the script lives in, so a copy of another tree times that
+tree.
 """
 
 from __future__ import annotations
@@ -36,6 +38,10 @@ def main() -> None:
         return round(time.perf_counter() - t0, 3)
 
     print("calib_start:", calib())
+    # warm-up: the first query of a run would otherwise pay the cold JVM
+    # and JIT (about 2x its wall), so run it once, untimed, first
+    spark.catalog.clearCache()
+    registry[names[0]].spark(spark, "/root/testdata/sf0.001").count()
     print(f"{'query':34s} {'sf0.001':>8s} {'sf0.1':>8s} {'ratio':>6s}")
     for name in names:
         spec = registry[name]
