@@ -3,88 +3,87 @@
 Re-expresses /root/reference/project/transform_data.py:101-180 —
 
 - J1  pair alignment inner equi-join on exact timestamp (``:121-141``)
-- P9  log-spread ``ln(close1) - ln(close2)`` (``:139``)
 - P11 leg projection with sign-flipped spread/z-score for leg 2
       (``:156-178``)
-- U1  ``unionByName`` stacking the two legs (``:180``) and folding many
-      pairs into one frame (``:187-192``)
+- U1  stacking the two legs (``:180``) of every pair (``:187-192``)
 
-Scale notes: the alignment join shuffles both sides on ``ts`` only if
-neither is broadcastable; for same-source pairs the engine filters one
-cached, pre-partitioned frame twice so the two legs share a scan.  The
-join key (ts) is unskewed by construction (one row per (symbol, ts)).
+Scale notes: the pair list is a broadcast leg dimension, not a per-pair
+driver loop, so 1 pair or 10,000 pairs is one scan and one shuffle on
+(pair_name, timestamp); the legs stack by one ``explode``, not a union
+re-scan.
 """
 
 from __future__ import annotations
 
-from functools import reduce
+from itertools import chain
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def align_pair(
-    left: DataFrame,
-    right: DataFrame,
-    ts: str = "timestamp",
-    value: str = "close",
-    suffixes: tuple[str, str] = ("1", "2"),
-) -> DataFrame:
-    """Inner-join two single-symbol frames on exact timestamp equality.
-
-    Mirrors transform_data.py:121-141: the inner join implicitly intersects
-    the two time axes (bars present for both legs only).  Non-ts columns are
-    suffixed.  Returns one row per shared timestamp.
-    """
-    s1, s2 = suffixes
-    lcols = [F.col(f"l.{c}").alias(f"{c}{s1}") for c in left.columns if c != ts]
-    rcols = [F.col(f"r.{c}").alias(f"{c}{s2}") for c in right.columns if c != ts]
-    return (
-        left.alias("l")
-        .join(right.alias("r"), F.col(f"l.{ts}") == F.col(f"r.{ts}"), "inner")
-        .select(F.col(f"l.{ts}").alias(ts), *lcols, *rcols)
+def leg_dimension(spark: SparkSession, pairs: list[tuple[str, str]]) -> DataFrame:
+    """``symbol, pair_name, sym1, sym2, leg``, one row per (symbol, pair,
+    leg): a symbol in many pairs fans out here.  A pair listed twice is
+    one pair."""
+    leg_rows = list(
+        chain.from_iterable(
+            ((s1, f"{s1}_{s2}", s1, s2, 1), (s2, f"{s1}_{s2}", s1, s2, 2))
+            for s1, s2 in dict.fromkeys(map(tuple, pairs))
+        )
+    )
+    return spark.createDataFrame(
+        leg_rows, ["symbol", "pair_name", "sym1", "sym2", "leg"]
     )
 
 
-def with_log_spread(
-    aligned: DataFrame,
-    value1: str = "close1",
-    value2: str = "close2",
-    out: str = "spread",
+def align_legs(
+    tagged: DataFrame, ts: str = "timestamp", value: str = "close"
 ) -> DataFrame:
-    """``spread = ln(v1) - ln(v2)`` (natural log, transform_data.py:139)."""
-    return aligned.withColumn(out, F.log(F.col(value1)) - F.log(F.col(value2)))
-
-
-def project_legs(
-    pair: DataFrame,
-    symbol1: str,
-    symbol2: str,
-    ts: str = "timestamp",
-    spread: str = "spread",
-    z_score: str = "z_score",
-    leg_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """Stack the pair frame into long format: one row per (symbol, ts).
-
-    Leg 2 gets ``spread * -1`` and ``z_score * -1``
-    (transform_data.py:176-177); ``leg_cols`` are per-leg columns whose
-    ``{col}1`` / ``{col}2`` variants map to the same output name
-    (transform_data.py:156-175).
+    """J1 over leg-tagged rows: ``pair_name, sym1, sym2, ts, {value}1,
+    {value}2``, with the inner join's multiplicity: every leg-1 value
+    pairs with every leg-2 value at a shared (pair, ts), and a timestamp
+    missing on either leg yields no row (an empty list explodes to none).
+    Grouping on the legs too keeps ("A_B", "C") apart from ("A", "B_C").
     """
+    legs = [f"{value}{n}" for n in (1, 2)]
+    lists = tagged.groupBy("pair_name", "sym1", "sym2", ts).agg(
+        *(
+            F.collect_list(F.when(F.col("leg") == n, F.col(value))).alias(c)
+            for n, c in enumerate(legs, 1)
+        ),
+    )
+    for c in legs:
+        lists = lists.withColumn(c, F.explode(c))
+    return lists
 
-    def leg(sym: str, sfx: str, sign: int) -> DataFrame:
-        cols = [F.lit(sym).alias("symbol"), F.col(ts).alias(ts)]
-        cols += [F.col(f"{c}{sfx}").alias(c) for c in leg_cols]
-        cols += [
-            (F.col(spread) * sign).alias(spread),
-            (F.col(z_score) * sign).alias(z_score),
-        ]
-        return pair.select(*cols)
 
-    return leg(symbol1, "1", 1).unionByName(leg(symbol2, "2", -1))
-
-
-def fold_pairs(frames: list[DataFrame]) -> DataFrame:
-    """Union all pair frames into one table (transform_data.py:187-192)."""
-    return reduce(DataFrame.unionByName, frames)
+def explode_legs(scored: DataFrame) -> DataFrame:
+    """P11 + U1: long format ``symbol, timestamp, close, spread, z_score,
+    pair_name`` — one row per leg, leg 2 carrying the negated spread and
+    z-score (transform_data.py:176-177)."""
+    leg_structs = F.array(
+        F.struct(
+            F.col("sym1").alias("symbol"),
+            F.col("close1").alias("close"),
+            F.lit(1.0).alias("sign"),
+        ),
+        F.struct(
+            F.col("sym2").alias("symbol"),
+            F.col("close2").alias("close"),
+            F.lit(-1.0).alias("sign"),
+        ),
+    )
+    return scored.select(
+        F.explode(leg_structs).alias("leg"),
+        "timestamp",
+        "spread",
+        "z_score",
+        "pair_name",
+    ).select(
+        F.col("leg.symbol").alias("symbol"),
+        "timestamp",
+        F.col("leg.close").alias("close"),
+        (F.col("spread") * F.col("leg.sign")).alias("spread"),
+        (F.col("z_score") * F.col("leg.sign")).alias("z_score"),
+        "pair_name",
+    )

@@ -6,14 +6,18 @@ Airflow ``transform`` task) as one composable function: bronze JSON scan
 (J1, P9) -> rolling z-score with min-periods gate (W1-W5, P10) -> leg
 projection with sign flip (P11, U1) -> idempotent partitioned lake write
 (replacing the destructive JDBC overwrite at ``:199-209``), then the DQ
-gate (``validate_data.py`` semantics) computed from the SAME frame —
-exit-code contract included.
+gate (``validate_data.py`` semantics) and its exit-code contract.
 
 Differences from the reference, by design:
-- one plan end-to-end (no per-pair driver loop, no repeated uncached
-  ``count()`` actions — SURVEY §4 anti-patterns);
-- the write is per-partition idempotent, so re-running a day is safe;
-- the DQ gate runs as DataFrame aggregation, not psycopg2 row loops.
+- one scan: bars join the broadcast leg dimension and ONE shuffle on
+  (pair, timestamp) aligns every pair (no per-pair driver loop);
+- one write action over that plan: an ``Observation`` on the written
+  frame counts its rows and collects its trading days, in place of
+  repeated ``isEmpty()``/``count()`` actions (SURVEY §4 anti-patterns);
+- the DQ gate aggregates a read-back of just the written partitions
+  (dynamic overwrite makes them exactly this run's rows), as the
+  reference's validate stage queries the table it has just loaded;
+- the write is per-partition idempotent, so re-running a day is safe.
 """
 
 from __future__ import annotations
@@ -24,12 +28,12 @@ from pyspark.sql import functions as F
 from quant_market_data_pipeline_spark.operators.dq import (
     completeness_report,
     run_summary,
+    write_with_observation,
 )
 from quant_market_data_pipeline_spark.operators.pair import (
-    align_pair,
-    fold_pairs,
-    project_legs,
-    with_log_spread,
+    align_legs,
+    explode_legs,
+    leg_dimension,
 )
 from quant_market_data_pipeline_spark.operators.rolling import (
     with_rolling_zscore,
@@ -39,7 +43,30 @@ from quant_market_data_pipeline_spark.sources.json_bronze import (
     explode_to_bars,
     read_raw_json,
 )
-from quant_market_data_pipeline_spark.sources.sink import write_partitioned
+from quant_market_data_pipeline_spark.sources.sink import _partition_dir_name
+
+
+def daily_legs(
+    spark: SparkSession,
+    raw_dir: str,
+    pairs: list[tuple[str, str]],
+    rth: bool = True,
+) -> DataFrame:
+    """The lake rows of one run: ``symbol, timestamp, close, spread,
+    z_score``, one row per leg per aligned bar, over one bronze scan."""
+    bars = explode_to_bars(read_raw_json(spark, raw_dir))
+    if rth:
+        bars = filter_rth(bars, ts="timestamp")
+    bars = bars.select(
+        "symbol", "timestamp", F.col("close").cast("double").alias("close")
+    )
+    tagged = bars.join(F.broadcast(leg_dimension(spark, pairs)), "symbol")
+    aligned = align_legs(tagged)
+    spread = aligned.withColumn("spread", F.log("close1") - F.log("close2"))
+    scored = with_rolling_zscore(
+        spread, partition_by=["pair_name", "sym1", "sym2"], order_by=["timestamp"]
+    )
+    return explode_legs(scored).drop("pair_name")
 
 
 def run_daily_etl(
@@ -54,40 +81,31 @@ def run_daily_etl(
     """Execute the full daily pipeline; returns the DQ summary row as a
     dict plus the gate verdict (``ok`` False == the reference's exit 1).
     """
-    raw = read_raw_json(spark, raw_dir)
-    bars = explode_to_bars(raw)
-    if rth:
-        bars = filter_rth(bars, ts="timestamp")
-
-    def leg_frame(sym: str) -> DataFrame:
-        return bars.filter(F.col("symbol") == sym).select(
-            "timestamp", F.col("close").cast("double").alias("close")
-        )
-
-    frames: list[DataFrame] = []
-    for s1, s2 in pairs:
-        aligned = align_pair(leg_frame(s1), leg_frame(s2), ts="timestamp")
-        spread = with_log_spread(aligned).withColumn(
-            "pair_name", F.lit(f"{s1}_{s2}")
-        )
-        scored = with_rolling_zscore(
-            spread, partition_by=["pair_name"], order_by=["timestamp"]
-        )
-        frames.append(project_legs(scored, s1, s2, leg_cols=("close",)))
-    result = fold_pairs(frames)
-
-    # Guard then idempotent write (transform_data.py:194-209, minus the
-    # constraint-dropping full overwrite).
-    if result.isEmpty():
+    result = daily_legs(spark, raw_dir, pairs, rth)
+    # Idempotent write (transform_data.py:194-209, minus the
+    # constraint-dropping full overwrite).  A zero-row write replaces no
+    # partition under dynamic overwrite, so the emptiness guard can
+    # follow it.
+    observed = write_with_observation(
+        result,
+        out_path,
+        {"rows": F.count(F.lit(1)), "days": F.collect_set(F.to_date("timestamp"))},
+    )
+    if observed["rows"] == 0:
         return {"ok": False, "reason": "empty result", "rows": 0}
-    write_partitioned(result, out_path, ts_col="timestamp")
 
+    base = out_path.rstrip("/")
+    days = [
+        f"{base}/{_partition_dir_name(spark, 'trading_date', d)}"
+        for d in observed["days"]
+    ]
+    written = spark.read.schema(result.schema).option("basePath", base).parquet(*days)
     report = completeness_report(
-        result, expected_bars=expected_bars, tolerance=tolerance
+        written, expected_bars=expected_bars, tolerance=tolerance
     )
     summary = run_summary(report).first().asDict()
     summary["ok"] = summary["run_status"] != "FAIL"
-    summary["rows"] = result.count()
+    summary["rows"] = observed["rows"]
     return summary
 
 

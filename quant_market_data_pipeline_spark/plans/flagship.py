@@ -29,11 +29,13 @@ loop (which re-scans the source once per pair):
 
 from __future__ import annotations
 
-from itertools import chain
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from quant_market_data_pipeline_spark.operators.pair import (
+    explode_legs,
+    leg_dimension,
+)
 from quant_market_data_pipeline_spark.operators.rolling import with_rolling_zscore
 
 
@@ -56,20 +58,8 @@ def pair_zscore(
     below ``min_periods`` (``:145-153``); leg 2 carries the negated
     spread/z-score (``:176-177``).
     """
-    spark = ticks.sparkSession
-
-    # Leg-membership dimension: one row per (symbol, pair, leg).  A symbol
-    # appearing in many pairs fans out here — exactly the multiplicity the
-    # computation needs, applied map-side via broadcast.
-    leg_rows = list(
-        chain.from_iterable(
-            ((s1, f"{s1}_{s2}", s1, s2, 1), (s2, f"{s1}_{s2}", s1, s2, 2))
-            for s1, s2 in pairs
-        )
-    )
-    leg_map = spark.createDataFrame(
-        leg_rows, ["symbol", "pair_name", "sym1", "sym2", "leg"]
-    )
+    # Leg-membership dimension, applied map-side via broadcast.
+    leg_map = leg_dimension(ticks.sparkSession, pairs)
 
     # Validity gate: zero/negative prices are data errors for a log-price
     # model (clean_data's null-drop spirit, transform_data.py:65) — and
@@ -108,29 +98,4 @@ def pair_zscore(
         min_periods=min_periods,
     )
 
-    leg_structs = F.array(
-        F.struct(
-            F.col("sym1").alias("symbol"),
-            F.col("close1").alias("close"),
-            F.lit(1.0).alias("sign"),
-        ),
-        F.struct(
-            F.col("sym2").alias("symbol"),
-            F.col("close2").alias("close"),
-            F.lit(-1.0).alias("sign"),
-        ),
-    )
-    return scored.select(
-        F.explode(leg_structs).alias("leg"),
-        "timestamp",
-        "spread",
-        "z_score",
-        "pair_name",
-    ).select(
-        F.col("leg.symbol").alias("symbol"),
-        "timestamp",
-        F.col("leg.close").alias("close"),
-        (F.col("spread") * F.col("leg.sign")).alias("spread"),
-        (F.col("z_score") * F.col("leg.sign")).alias("z_score"),
-        "pair_name",
-    )
+    return explode_legs(scored)

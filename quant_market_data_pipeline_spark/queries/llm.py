@@ -4189,7 +4189,7 @@ WITH {_PQ_TRAINED}, {_sql_argmin("codes", "sub", "cb")},
     "from the data alone — the oracle unrolls the fixed iteration "
     "count as a chained CTE, the engine runs the MLlib-style driver "
     "loop re-literalizing the 64-row centroid frame per step "
-    "(llm/similarity.py pq_train_codebooks).  The audit reports "
+    "(llm/similarity.py lloyd_train).  The audit reports "
     "recall@3 of the seed-codebook ADC, the trained-codebook ADC, and "
     "the trained top-32 re-rank side by side per query — the uplift "
     "the r12 verdict asked to measure (VERDICT r12 #3).  Scale shape: "
@@ -5355,7 +5355,7 @@ CROSS JOIN skews sk
     doc="Adaptive IVF+PQ with a k-means-TRAINED coarse quantizer and a "
     "CAPPED-OVERFLOW assignment (VERDICT r13 #2): the r13 Lloyd "
     "machinery pointed at the 64-dim coarse level (llm/similarity.py "
-    "ivf_train_centroids — same determinism contract as the PQ "
+    "lloyd_train(n_cells=) — same determinism contract as the PQ "
     "trainer: round-6 L2 argmin, lower-ccid tiebreak, round-6 means, "
     "empty-keeps-prev, training bounded to the first greatest(1024, "
     "32*n_cells) vectors by id, the FAISS ~30-points-per-centroid "

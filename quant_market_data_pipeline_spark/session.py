@@ -19,6 +19,13 @@ import os
 from pyspark.sql import SparkSession
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
+
+def default_driver_mem() -> str:
+    """24g, or half the host's physical memory if less (two sessions fit)."""
+    phys_mib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(24 * 1024, phys_mib // 2)}m"
+
+
 # Static (must be set before the JVM starts) and runtime-mutable confs are
 # kept separate: `configure_runtime` can be applied to a session we did not
 # create (e.g. the verify driver's), `get_spark` applies both.
@@ -26,9 +33,10 @@ _STATIC_CONF: dict[str, str] = {
     # local-mode JVM heap: driver and executors share one JVM, so the
     # default 1g driver heap is the budget for ALL 32 task threads' sort /
     # hash-agg buffers — the x16 docscale probe OOMs there.  Size it for
-    # the harness (128 GiB box); on a real cluster this conf is ignored in
-    # favor of spark-submit's --driver-memory / --executor-memory.
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
+    # the harness, at most half the host; on a real cluster this conf is
+    # ignored in favor of spark-submit's --driver-memory / --executor-memory.
+    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    or default_driver_mem(),
     # AQE: runtime partition coalescing, skew-join splitting, broadcast
     # demotion — all essential at 100 TB where static planning guesses wrong.
     "spark.sql.adaptive.enabled": "true",

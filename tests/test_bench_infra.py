@@ -12,6 +12,7 @@
 4. Streaming scratch: per-process roots, one creation helper for every
    query, and the age backstop on the stale-scratch sweep; every engine
    stream starts through ``session.start_stream``.
+5. Session sizing: the default driver heap fits the host.
 """
 
 from __future__ import annotations
@@ -314,3 +315,16 @@ def test_scratch_sweep_age_backstop(tmp_path, monkeypatch):
     assert bad_name.exists(), "unparseable dir name swept"
     assert not alive_recycled.exists(), "ancient recycled-pid dir kept"
     assert not fresh_alive.exists(), "dead-pid dir kept"
+
+
+# --- 5. session sizing ------------------------------------------------------
+def test_default_driver_mem_fits_the_host():
+    """Unset ``SPARK_GRAFT_DRIVER_MEM`` gives at most 24g and at most half
+    the physical memory, so two sessions at once fit the host."""
+    from quant_market_data_pipeline_spark.session import default_driver_mem
+
+    with open("/proc/meminfo") as f:
+        phys_mib = int(f.readline().split()[1]) // 1024
+    got = default_driver_mem()
+    assert re.fullmatch(r"\d+m", got), got
+    assert 0 < int(got[:-1]) <= min(24 * 1024, phys_mib // 2 + 1)

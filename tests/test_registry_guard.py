@@ -213,3 +213,21 @@ print("SUBPROCESS_OK")
         timeout=300,
     )
     assert "SUBPROCESS_OK" in r.stdout, r.stdout + r.stderr
+
+
+def test_registered_docs_name_live_similarity_functions():
+    """A registered doc that points a reader at ``llm/similarity.py NAME``
+    names something that module still defines."""
+    import re
+
+    from quant_market_data_pipeline_spark.llm import similarity
+    from quant_market_data_pipeline_spark.queries import load_all
+
+    cited = {
+        (name, m.group(1))
+        for name, spec in load_all().items()
+        for m in re.finditer(r"llm/similarity\.py[:\s]+([A-Za-z_]\w*)", spec.doc)
+    }
+    assert cited, "no registered doc cites llm/similarity.py"
+    stale = sorted((q, ident) for q, ident in cited if not hasattr(similarity, ident))
+    assert not stale, stale
