@@ -92,7 +92,8 @@ TOUCHED = [
     "sq8_recall_audit",
     "opq_rotation_recall_audit",
     # started through session.start_stream (per-core state partitions);
-    # the five sketch sinks also write one file per batch leaf
+    # the five sketch sinks also write one file per batch leaf; then
+    # moved onto the shared batch_id_sink / drain / kill_and_resume
     "stream_attribution_e2e",
     "stream_bars_5min_e2e",
     "stream_bloom_e2e",

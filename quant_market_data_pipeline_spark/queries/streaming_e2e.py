@@ -1,13 +1,20 @@
-"""Driver-gated end-to-end streaming query (SURVEY §2.8 surface).
+"""Driver-gated end-to-end streaming queries (SURVEY §2.8 surface).
 
-The one mandated extension with no oracle signal until round 3: every
-streaming operator was pytest-gated only.  This module registers a query
-that drives the REAL Structured Streaming path — file-source readStream
-over a landing dir, stateful ``dropDuplicatesWithinWatermark``, the
-watermarked tumbling-window bar aggregate, and the idempotent
-``foreachBatch`` parquet sink — under ``Trigger.AvailableNow``, then
-returns the materialized bars so the DuckDB oracle can hash-check them
-against the equivalent batch SQL.
+Each ``stream_*_e2e`` query lands a bounded copy of a fixture table as
+parquet files, drives the REAL Structured Streaming path over them under
+``Trigger.AvailableNow`` and returns the materialized result, so the
+DuckDB oracle can hash-check it against the equivalent batch SQL.  A
+query keeps only its landing, its operator, its per-batch fold and its
+read-out; the plumbing is shared:
+
+- the file stream is read with the landed frame's own schema
+  (:func:`_landed_stream`);
+- stateful operators write through Spark's native append parquet sink
+  (``streaming/bars_stream.py:parquet_append_sink``), per-batch sketch
+  and index partials through the one idempotent ``batch_id`` sink
+  (``batch_id_sink``), and the bars chain through ``parquet_bar_sink``;
+- every drain starts through ``streaming/pipeline.py:drain`` and every
+  crash query through ``kill_and_resume``.
 
 Determinism contract (what makes a streaming query oracle-checkable):
 
@@ -18,11 +25,14 @@ Determinism contract (what makes a streaming query oracle-checkable):
   drain the output set is exactly {windows with end <= terminal
   watermark} — independent of how the drain was split into
   micro-batches.
-- To keep the comparison away from the watermark boundary (ms-precision
-  edge), BOTH sides filter to ``bar_ts <= max(ts) - 20 minutes``: four
-  bar-widths below the 10-minute watermark horizon, so every compared
-  window is provably emitted and every emitted-but-boundary window is
-  excluded on both sides identically.
+- To keep the bar comparison away from the watermark boundary
+  (ms-precision edge), BOTH sides filter to ``bar_ts <= max(ts) - 20
+  minutes``: four bar-widths below the 10-minute watermark horizon, so
+  every compared window is provably emitted and every
+  emitted-but-boundary window is excluded on both sides identically.
+- Stateful operators that depend on per-key event-time order land
+  time-sliced (:func:`_land_time_sliced`); merge-only folds land
+  hash-sliced (:func:`_land_hash_sliced`).
 
 The landing copy is written by a bounded batch job at query build time
 (the fixture parquet stores nanosecond timestamps the streaming file
@@ -34,16 +44,26 @@ from __future__ import annotations
 
 import os
 import shutil
+import time
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from quant_market_data_pipeline_spark.queries import register
-from quant_market_data_pipeline_spark.session import configure_runtime, start_stream
+from quant_market_data_pipeline_spark.session import configure_runtime
 from quant_market_data_pipeline_spark.sources.tables import load_table
-from quant_market_data_pipeline_spark.streaming.bars_stream import TICK_SCHEMA
-from quant_market_data_pipeline_spark.streaming.pipeline import run_live_bars
+from quant_market_data_pipeline_spark.streaming.bars_stream import (
+    TICK_SCHEMA,
+    batch_id_sink,
+    parquet_append_sink,
+    read_tick_stream,
+)
+from quant_market_data_pipeline_spark.streaming.pipeline import (
+    drain,
+    kill_and_resume,
+    live_bars_writer,
+)
 
 # Repo-local scratch root (wiped per run): the driver's session owns no
 # tmp dir contract, and /root/repo is the only writable surface we claim.
@@ -114,9 +134,93 @@ def _sweep_stale_scratch(max_age_sec: float = 86400.0) -> None:
 _sweep_stale_scratch()
 
 
-@register(
-    "stream_bars_5min_e2e",
-    oracle="""
+def _landed_stream(
+    spark: SparkSession,
+    landed: DataFrame,
+    landing: str,
+    per_trigger: int | None = 1,
+) -> DataFrame:
+    """File stream over the parquet ``landing`` dir, read with the schema
+    of the frame ``landed`` there (the file source forces every field
+    nullable, so nullability cannot differ), at most ``per_trigger``
+    files per micro-batch (``None``: the whole landing in one)."""
+    return read_tick_stream(
+        spark,
+        landing,
+        schema=landed.schema,
+        fmt="parquet",
+        max_files_per_trigger=per_trigger,
+    )
+
+
+def _land_time_sliced(
+    df: DataFrame, ts_col: str, landing: str, n_slices: int
+) -> None:
+    """Write ``df`` as ``n_slices`` single-file parquet slices, slice i
+    strictly before slice i+1 in event time, in ascending-mtime order —
+    so a file-source stream with ``maxFilesPerTrigger=1`` processes the
+    data in event-time order across micro-batches (the per-key ordering
+    the stateful operators' ring buffers depend on), and the watermark
+    after slice i (max(ts_i) - delay) sits strictly below all later
+    slices' data (no late drops, deterministic emission)."""
+    us = F.unix_micros(F.col(ts_col))
+    bounds = [
+        int(b)
+        for b in df.select(
+            F.percentile_approx(
+                us, [i / n_slices for i in range(1, n_slices)], 10000
+            ).alias("b")
+        ).collect()[0]["b"]
+    ]
+    edges = [None, *bounds, None]
+    # The file source replays files in mtime order; on filesystems with
+    # coarse mtime granularity two back-to-back writes can share an
+    # mtime and be picked up out of event-time order, breaking the
+    # per-key ordering the stateful ring buffers require.  Stamp each
+    # slice's files with an explicit strictly-increasing mtime (1 s
+    # apart, anchored 1 h in the past so restamped files never sort
+    # after genuinely newer ones).
+    t0 = time.time() - 3600.0
+    seen: set[str] = set()
+    for i in range(n_slices):
+        sl = df
+        if edges[i] is not None:
+            sl = sl.filter(us >= F.lit(edges[i]))
+        if edges[i + 1] is not None:
+            sl = sl.filter(us < F.lit(edges[i + 1]))
+        sl.coalesce(1).write.mode("append").parquet(landing)
+        for fname in os.listdir(landing):
+            path = os.path.join(landing, fname)
+            if fname.endswith(".parquet") and path not in seen:
+                os.utime(path, (t0 + i, t0 + i))
+                seen.add(path)
+
+
+def _land_hash_sliced(
+    df: DataFrame, seed: str, key: str, landing: str
+) -> None:
+    """Write ``df`` as 4 single-file parquet slices, slice =
+    ``seeded_md5_long(seed, key) % 4``: disjoint arrival batches in an
+    arbitrary order.  Only order-independent folds read such a landing,
+    so unlike :func:`_land_time_sliced` no mtime choreography is
+    needed."""
+    from quant_market_data_pipeline_spark.llm.hashing import seeded_md5_long
+
+    sliced = df.withColumn("slice", seeded_md5_long(seed, F.col(key)) % 4)
+    for i in range(4):
+        (
+            sliced.filter(F.col("slice") == i)
+            .drop("slice")
+            .coalesce(1)
+            .write.mode("append")
+            .parquet(landing)
+        )
+
+
+# ---------------------------------------------------------------------------
+# The live bar chain (streaming/pipeline.py), end to end.
+# ---------------------------------------------------------------------------
+_BARS_5MIN_ORACLE = """
 SELECT event_type AS symbol,
        time_bucket(INTERVAL '5 minutes', ts) AS bar_ts,
        arg_min(value, ts) AS open,
@@ -128,7 +232,36 @@ FROM events
 WHERE time_bucket(INTERVAL '5 minutes', ts)
       <= (SELECT max(ts) - INTERVAL 20 minutes FROM events)
 GROUP BY 1, 2
-""",
+"""
+
+
+def _bar_ticks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return load_table(spark, "events", sf_dir).select(
+        "event_id",
+        "ts",
+        F.col("event_type").alias("symbol"),
+        F.col("value").alias("price"),
+    )
+
+
+def _bars_past_watermark(
+    spark: SparkSession, ticks: DataFrame, out: str
+) -> DataFrame:
+    """The lake's bars up to the deterministic comparison cutoff (see
+    the module docstring)."""
+    cutoff = ticks.agg(
+        (F.max("ts") - F.expr("INTERVAL 20 minutes")).alias("c")
+    ).collect()[0]["c"]
+    return (
+        spark.read.parquet(out)
+        .filter(F.col("bar_ts") <= F.lit(cutoff))
+        .select("symbol", "bar_ts", "open", "high", "low", "close", "volume")
+    )
+
+
+@register(
+    "stream_bars_5min_e2e",
+    oracle=_BARS_5MIN_ORACLE,
     doc="End-to-end Structured Streaming gate: readStream over a landing "
     "copy of the ticks -> dropDuplicatesWithinWatermark(symbol,event_id) "
     "-> watermarked 5-min tumbling OHLCV -> foreachBatch idempotent "
@@ -140,44 +273,22 @@ GROUP BY 1, 2
 )
 def q_stream_bars_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     configure_runtime(spark)
-    ticks = load_table(spark, "events", sf_dir).select(
-        "event_id",
-        "ts",
-        F.col("event_type").alias("symbol"),
-        F.col("value").alias("price"),
-    )
+    ticks = _bar_ticks(spark, sf_dir)
 
     base = _query_scratch(sf_dir, "")
     landing = str(base / "landing")
-    out = str(base / "bars")
-    ckpt = str(base / "ckpt")
+    out, ckpt = str(base / "bars"), str(base / "ckpt")
 
     # land the ticks (8 files so maxFilesPerTrigger=4 forces a genuine
     # multi-batch drain), then run the live chain to completion
     ticks.repartition(8).write.mode("overwrite").parquet(landing)
-    query = run_live_bars(
+    drain(
         spark,
-        landing_dir=landing,
-        out_dir=out,
-        checkpoint_dir=ckpt,
-        schema=TICK_SCHEMA,
-        fmt="parquet",
-        width="5 minutes",
-        watermark_delay="10 minutes",
-        available_now=True,
-        max_files_per_trigger=4,
+        live_bars_writer(
+            spark, landing, out, ckpt, TICK_SCHEMA, max_files_per_trigger=4
+        ),
     )
-    query.awaitTermination()
-
-    # deterministic comparison cutoff — see module docstring
-    cutoff = ticks.agg(
-        (F.max("ts") - F.expr("INTERVAL 20 minutes")).alias("c")
-    ).collect()[0]["c"]
-
-    bars = spark.read.parquet(out)
-    return bars.filter(F.col("bar_ts") <= F.lit(cutoff)).select(
-        "symbol", "bar_ts", "open", "high", "low", "close", "volume"
-    )
+    return _bars_past_watermark(spark, ticks, out)
 
 
 @register(
@@ -202,8 +313,6 @@ WHERE v.event_type = 'view' AND p.event_type = 'purchase'
     "the lambda architecture promises, checked by hash.",
 )
 def q_stream_attribution_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
     from quant_market_data_pipeline_spark.streaming.bars_stream import (
         stream_stream_attribution,
     )
@@ -215,35 +324,20 @@ def q_stream_attribution_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     v_dir, p_dir = str(base / "views"), str(base / "purchases")
     out, ckpt = str(base / "out"), str(base / "ckpt")
 
-    ev.filter(F.col("event_type") == "view").select(
-        "event_id", "ts", "user_id", "value"
-    ).coalesce(2).write.parquet(v_dir)
-    ev.filter(F.col("event_type") == "purchase").select(
-        "event_id", "ts", "user_id", "value"
-    ).coalesce(2).write.parquet(p_dir)
+    cols = ("event_id", "ts", "user_id", "value")
+    views = ev.filter(F.col("event_type") == "view").select(*cols)
+    purchases = ev.filter(F.col("event_type") == "purchase").select(*cols)
+    views.coalesce(2).write.parquet(v_dir)
+    purchases.coalesce(2).write.parquet(p_dir)
 
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-    views = spark.readStream.schema(schema).parquet(v_dir)
-    purchases = spark.readStream.schema(schema).parquet(p_dir)
     joined = stream_stream_attribution(
-        views, purchases, key="user_id", ts="ts", horizon="1 hour"
+        _landed_stream(spark, views, v_dir, per_trigger=None),
+        _landed_stream(spark, purchases, p_dir, per_trigger=None),
+        key="user_id",
+        ts="ts",
+        horizon="1 hour",
     )
-    query = start_stream(
-        spark,
-        joined.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True),
-    )
-    query.awaitTermination()
+    drain(spark, parquet_append_sink(joined, out, ckpt))
 
     return spark.read.parquet(out).select(
         "view_id",
@@ -292,11 +386,6 @@ GROUP BY user_id, sid
     "just built-in windowed aggregation.",
 )
 def q_stream_sessionize_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
-    from quant_market_data_pipeline_spark.streaming.bars_stream import (
-        read_tick_stream,
-    )
     from quant_market_data_pipeline_spark.streaming.stateful import (
         sessionize_with_state,
     )
@@ -319,24 +408,9 @@ def q_stream_sessionize_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     out, ckpt = str(base / "out"), str(base / "ckpt")
     corpus.repartition(4).write.parquet(landing)
 
-    schema = T.StructType(
-        [
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-    stream = read_tick_stream(spark, landing, schema=schema, fmt="parquet")
+    stream = _landed_stream(spark, corpus, landing, per_trigger=None)
     sessions = sessionize_with_state(stream, gap="30 minutes")
-    query = start_stream(
-        spark,
-        sessions.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True),
-    )
-    query.awaitTermination()
+    drain(spark, parquet_append_sink(sessions, out, ckpt))
 
     sentinel_keys = sentinels.select(
         "user_id", F.col("ts").alias("session_start")
@@ -357,9 +431,7 @@ def q_stream_sessionize_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Custom stateful streaming rolling z-score, end to end.
 # ---------------------------------------------------------------------------
-@register(
-    "stream_zscore_e2e",
-    oracle="""
+_ZSCORE_ORACLE = """
 WITH bars AS (
   SELECT event_type AS symbol,
          time_bucket(INTERVAL '5 minutes', ts) AS bar_ts,
@@ -378,7 +450,51 @@ SELECT symbol, bar_ts, close,
        round(CASE WHEN n >= 30 AND sd > 0
                   THEN (close - m) / sd END, 6) AS z_score
 FROM w
-""",
+"""
+
+
+def _zscore_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The 5-minute close series the z-score streams run over."""
+    from quant_market_data_pipeline_spark.operators.bars import build_bars
+
+    return build_bars(
+        load_table(spark, "events", sf_dir),
+        key="event_type",
+        ts="ts",
+        price="value",
+        width="5 minutes",
+        tiebreak="event_id",
+    ).select(F.col("event_type").alias("symbol"), "bar_ts", "close")
+
+
+def _zscore_sink(stream: DataFrame, out: str, ckpt: str):
+    from quant_market_data_pipeline_spark.streaming.stateful import (
+        rolling_zscore_stream,
+    )
+
+    z = rolling_zscore_stream(
+        stream,
+        window_bars=60,
+        min_periods=30,
+        key="symbol",
+        ts="bar_ts",
+        value="close",
+    )
+    return parquet_append_sink(z, out, ckpt)
+
+
+def _zscore_rows(spark: SparkSession, out: str) -> DataFrame:
+    return spark.read.parquet(out).select(
+        F.col("pair_name").alias("symbol"),
+        F.col("timestamp").alias("bar_ts"),
+        F.col("spread").alias("close"),
+        F.round("z_score", 6).alias("z_score"),
+    )
+
+
+@register(
+    "stream_zscore_e2e",
+    oracle=_ZSCORE_ORACLE,
     doc="Driver gate for the stateful streaming z-score "
     "(streaming/stateful.py rolling_zscore_stream): the materialized "
     "5-min close series streams through the applyInPandasWithState "
@@ -392,152 +508,32 @@ FROM w
     "carry-over is pinned separately in tests/test_stateful_streaming.",
 )
 def q_stream_zscore_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
-    from quant_market_data_pipeline_spark.operators.bars import build_bars
-    from quant_market_data_pipeline_spark.streaming.bars_stream import (
-        read_tick_stream,
-    )
-    from quant_market_data_pipeline_spark.streaming.stateful import (
-        rolling_zscore_stream,
-    )
-
     configure_runtime(spark)
-    ticks = load_table(spark, "events", sf_dir)
-    bars = build_bars(
-        ticks,
-        key="event_type",
-        ts="ts",
-        price="value",
-        width="5 minutes",
-        tiebreak="event_id",
-    ).select(
-        F.col("event_type").alias("symbol"), "bar_ts", "close"
-    )
+    bars = _zscore_bars(spark, sf_dir)
 
     base = _query_scratch(sf_dir, "_zscore")
     landing = str(base / "landing")
     out, ckpt = str(base / "out"), str(base / "ckpt")
     bars.repartition(4).write.parquet(landing)
 
-    schema = T.StructType(
-        [
-            T.StructField("symbol", T.StringType()),
-            T.StructField("bar_ts", T.TimestampType()),
-            T.StructField("close", T.DoubleType()),
-        ]
-    )
-    stream = read_tick_stream(spark, landing, schema=schema, fmt="parquet")
-    z = rolling_zscore_stream(
-        stream,
-        window_bars=60,
-        min_periods=30,
-        key="symbol",
-        ts="bar_ts",
-        value="close",
-    )
-    query = start_stream(
-        spark,
-        z.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True),
-    )
-    query.awaitTermination()
-
-    return spark.read.parquet(out).select(
-        F.col("pair_name").alias("symbol"),
-        F.col("timestamp").alias("bar_ts"),
-        F.col("spread").alias("close"),
-        F.round("z_score", 6).alias("z_score"),
-    )
+    stream = _landed_stream(spark, bars, landing, per_trigger=None)
+    drain(spark, _zscore_sink(stream, out, ckpt))
+    return _zscore_rows(spark, out)
 
 
 # ---------------------------------------------------------------------------
 # Crash-recovery: kill the stream mid-flight, restart from the checkpoint.
 # ---------------------------------------------------------------------------
-def _land_time_sliced(
-    df: DataFrame, ts_col: str, landing: str, n_slices: int
-) -> None:
-    """Write ``df`` as ``n_slices`` single-file parquet slices, slice i
-    strictly before slice i+1 in event time, in ascending-mtime order —
-    so a file-source stream with ``maxFilesPerTrigger=1`` processes the
-    data in event-time order across micro-batches (the per-key ordering
-    the stateful operators' ring buffers depend on), and the watermark
-    after slice i (max(ts_i) - delay) sits strictly below all later
-    slices' data (no late drops, deterministic emission)."""
-    us = F.unix_micros(F.col(ts_col))
-    bounds = [
-        int(b)
-        for b in df.select(
-            F.percentile_approx(
-                us, [i / n_slices for i in range(1, n_slices)], 10000
-            ).alias("b")
-        ).collect()[0]["b"]
-    ]
-    edges = [None, *bounds, None]
-    # The file source replays files in mtime order; on filesystems with
-    # coarse mtime granularity two back-to-back writes can share an
-    # mtime and be picked up out of event-time order, breaking the
-    # per-key ordering the stateful ring buffers require.  Stamp each
-    # slice's files with an explicit strictly-increasing mtime (1 s
-    # apart, anchored 1 h in the past so restamped files never sort
-    # after genuinely newer ones).
-    import os
-    import time
-
-    t0 = time.time() - 3600.0
-    seen: set[str] = set()
-    for i in range(n_slices):
-        sl = df
-        if edges[i] is not None:
-            sl = sl.filter(us >= F.lit(edges[i]))
-        if edges[i + 1] is not None:
-            sl = sl.filter(us < F.lit(edges[i + 1]))
-        sl.coalesce(1).write.mode("append").parquet(landing)
-        for fname in os.listdir(landing):
-            path = os.path.join(landing, fname)
-            if fname.endswith(".parquet") and path not in seen:
-                os.utime(path, (t0 + i, t0 + i))
-                seen.add(path)
-
-
-def _kill_after_batches(query, min_batches: int = 2, deadline_s: int = 180) -> int:
-    """Poll a running continuous stream until >= ``min_batches``
-    data-carrying micro-batches have committed, then ``stop()`` it
-    immediately — a genuine mid-flight interrupt (whatever batch is in
-    progress is cut; its replay on restart is the recovery under test).
-    Returns the committed data-batch count at the kill."""
-    import time
-
-    batches = 0
-    deadline = time.time() + deadline_s
-    while time.time() < deadline:
-        batches = sum(
-            1 for p in query.recentProgress if p.get("numInputRows", 0) > 0
-        )
-        if batches >= min_batches:
-            break
-        time.sleep(0.03)
-    query.stop()
-    query.awaitTermination()
-    return batches
-
-
 def _run_crash_recovery(spark: SparkSession, sf_dir: str):
-    """Run the live-bars chain in two phases with a mid-flight kill.
+    """Run the live-bars chain through ``kill_and_resume``.
 
-    Phase 1 starts the CONTINUOUS stream (default trigger, 1 landing file
-    per micro-batch), waits until >= 2 data-carrying micro-batches have
-    committed, then ``stop()``s immediately — a genuine interrupt at a
+    Phase 1 runs the CONTINUOUS stream (1 landing file per micro-batch)
+    and is killed after >= 2 committed data batches, at a
     nondeterministic point (a batch may be mid-write in the foreachBatch
-    sink).  Phase 2 restarts the identical chain from the SAME checkpoint
-    under ``availableNow`` and drains the remainder.  Exactly-once makes
-    the FINAL output independent of where the kill landed: an uncommitted
-    batch replays with the same batch_id and dynamically overwrites its
-    own partitions (``streaming/bars_stream.py:parquet_bar_sink``), and
-    dedup/window state reloads from the checkpoint.
+    sink); phase 2 drains the rest from the SAME checkpoint.  An
+    uncommitted batch replays with the same batch_id and dynamically
+    overwrites its own partitions (``streaming/bars_stream.py:
+    batch_id_sink``), and dedup/window state reloads from the checkpoint.
 
     The landing files are TIME-SLICED (slice i strictly precedes slice
     i+1, written in mtime order so the file source processes them in
@@ -548,85 +544,27 @@ def _run_crash_recovery(spark: SparkSession, sf_dir: str):
     Returns (bars DataFrame filtered to the deterministic cutoff, stats).
     """
     configure_runtime(spark)
-    ticks = load_table(spark, "events", sf_dir).select(
-        "event_id",
-        "ts",
-        F.col("event_type").alias("symbol"),
-        F.col("value").alias("price"),
-    )
+    ticks = _bar_ticks(spark, sf_dir)
 
     base = _query_scratch(sf_dir, "_crash")
     landing = str(base / "landing")
-    out = str(base / "bars")
-    ckpt = str(base / "ckpt")
+    out, ckpt = str(base / "bars"), str(base / "ckpt")
 
     # time-sliced landing: 8 approx-octile slices written sequentially
     # (ascending mtime), each a single file
     _land_time_sliced(ticks, "ts", landing, n_slices=8)
-
-    # phase 1: continuous stream, one file per micro-batch, killed after
-    # >= 2 data-carrying batches committed
-    q1 = run_live_bars(
+    stats = kill_and_resume(
         spark,
-        landing_dir=landing,
-        out_dir=out,
-        checkpoint_dir=ckpt,
-        schema=TICK_SCHEMA,
-        fmt="parquet",
-        width="5 minutes",
-        watermark_delay="10 minutes",
-        available_now=False,
-        max_files_per_trigger=1,
+        lambda: live_bars_writer(
+            spark, landing, out, ckpt, TICK_SCHEMA, max_files_per_trigger=1
+        ),
     )
-    phase1_batches = _kill_after_batches(q1)
-
-    # phase 2: same chain, same checkpoint — replay + drain the rest
-    q2 = run_live_bars(
-        spark,
-        landing_dir=landing,
-        out_dir=out,
-        checkpoint_dir=ckpt,
-        schema=TICK_SCHEMA,
-        fmt="parquet",
-        width="5 minutes",
-        watermark_delay="10 minutes",
-        available_now=True,
-        max_files_per_trigger=1,
-    )
-    q2.awaitTermination()
-    phase2_batches = sum(
-        1 for p in q2.recentProgress if p.get("numInputRows", 0) > 0
-    )
-
-    cutoff = ticks.agg(
-        (F.max("ts") - F.expr("INTERVAL 20 minutes")).alias("c")
-    ).collect()[0]["c"]
-    bars = (
-        spark.read.parquet(out)
-        .filter(F.col("bar_ts") <= F.lit(cutoff))
-        .select("symbol", "bar_ts", "open", "high", "low", "close", "volume")
-    )
-    return bars, {
-        "phase1_batches": phase1_batches,
-        "phase2_batches": phase2_batches,
-    }
+    return _bars_past_watermark(spark, ticks, out), stats
 
 
 @register(
     "stream_crash_recovery_e2e",
-    oracle="""
-SELECT event_type AS symbol,
-       time_bucket(INTERVAL '5 minutes', ts) AS bar_ts,
-       arg_min(value, ts) AS open,
-       max(value) AS high,
-       min(value) AS low,
-       arg_max(value, ts) AS close,
-       count(*) AS volume
-FROM events
-WHERE time_bucket(INTERVAL '5 minutes', ts)
-      <= (SELECT max(ts) - INTERVAL 20 minutes FROM events)
-GROUP BY 1, 2
-""",
+    oracle=_BARS_5MIN_ORACLE,
     doc="Crash-recovery gate (the claim streaming/stateful.py makes but "
     "nothing previously exercised): the live bar stream is killed "
     "mid-flight after >= 2 committed micro-batches, restarted from the "
@@ -662,105 +600,24 @@ def _run_zscore_crash_recovery(spark: SparkSession, sf_dir: str):
     makes a killed batch's orphan files invisible to readers until the
     replay commits them (exactly-once).
     """
-    from pyspark.sql import types as T
-
-    from quant_market_data_pipeline_spark.operators.bars import build_bars
-    from quant_market_data_pipeline_spark.streaming.bars_stream import (
-        read_tick_stream,
-    )
-    from quant_market_data_pipeline_spark.streaming.stateful import (
-        rolling_zscore_stream,
-    )
-
     configure_runtime(spark)
-    ticks = load_table(spark, "events", sf_dir)
-    bars = build_bars(
-        ticks,
-        key="event_type",
-        ts="ts",
-        price="value",
-        width="5 minutes",
-        tiebreak="event_id",
-    ).select(F.col("event_type").alias("symbol"), "bar_ts", "close")
+    bars = _zscore_bars(spark, sf_dir)
 
     base = _query_scratch(sf_dir, "_zcrash")
     landing = str(base / "landing")
     out, ckpt = str(base / "out"), str(base / "ckpt")
     _land_time_sliced(bars, "bar_ts", landing, n_slices=6)
 
-    schema = T.StructType(
-        [
-            T.StructField("symbol", T.StringType()),
-            T.StructField("bar_ts", T.TimestampType()),
-            T.StructField("close", T.DoubleType()),
-        ]
+    stats = kill_and_resume(
+        spark,
+        lambda: _zscore_sink(_landed_stream(spark, bars, landing), out, ckpt),
     )
-
-    def start(available_now: bool):
-        stream = read_tick_stream(
-            spark, landing, schema=schema, fmt="parquet",
-            max_files_per_trigger=1,
-        )
-        z = rolling_zscore_stream(
-            stream,
-            window_bars=60,
-            min_periods=30,
-            key="symbol",
-            ts="bar_ts",
-            value="close",
-        )
-        writer = (
-            z.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return start_stream(spark, writer)
-
-    q1 = start(available_now=False)
-    phase1_batches = _kill_after_batches(q1)
-    q2 = start(available_now=True)
-    q2.awaitTermination()
-    phase2_batches = sum(
-        1 for p in q2.recentProgress if p.get("numInputRows", 0) > 0
-    )
-
-    result = spark.read.parquet(out).select(
-        F.col("pair_name").alias("symbol"),
-        F.col("timestamp").alias("bar_ts"),
-        F.col("spread").alias("close"),
-        F.round("z_score", 6).alias("z_score"),
-    )
-    return result, {
-        "phase1_batches": phase1_batches,
-        "phase2_batches": phase2_batches,
-    }
+    return _zscore_rows(spark, out), stats
 
 
 @register(
     "stream_zscore_crash_e2e",
-    oracle="""
-WITH bars AS (
-  SELECT event_type AS symbol,
-         time_bucket(INTERVAL '5 minutes', ts) AS bar_ts,
-         arg_max(value, ts) AS close
-  FROM events GROUP BY 1, 2
-), w AS (
-  SELECT symbol, bar_ts, close,
-         avg(close) OVER win AS m,
-         stddev_samp(close) OVER win AS sd,
-         count(*) OVER win AS n
-  FROM bars
-  WINDOW win AS (PARTITION BY symbol ORDER BY bar_ts
-                 ROWS BETWEEN 59 PRECEDING AND CURRENT ROW)
-)
-SELECT symbol, bar_ts, close,
-       round(CASE WHEN n >= 30 AND sd > 0
-                  THEN (close - m) / sd END, 6) AS z_score
-FROM w
-""",
+    oracle=_ZSCORE_ORACLE,
     doc="Crash-recovery gate for the CUSTOM stateful operator: the "
     "applyInPandasWithState rolling z-score is killed mid-flight after "
     ">= 2 committed micro-batches and restarted from the same "
@@ -778,6 +635,52 @@ def q_stream_zscore_crash_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Wilder RSI stream, end to end: the recursive stateful operator gate.
 # ---------------------------------------------------------------------------
+def _rsi_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """1-hour closes of the positive ticks over the first 14 days."""
+    from quant_market_data_pipeline_spark.operators.bars import build_bars
+
+    ev = load_table(spark, "events", sf_dir)
+    # cutoff from the UNFILTERED stream, exactly like the oracle's
+    # subquery — deriving it post value-filter would shift the bound if
+    # a fixture's earliest event were non-positive
+    cut = ev.agg(
+        (F.min("ts") + F.expr("INTERVAL 14 DAYS")).alias("c")
+    ).collect()[0]["c"]
+    ticks = ev.filter(F.col("value") > 0)
+    return build_bars(
+        ticks.filter(F.col("ts") < F.lit(cut)),
+        key="event_type",
+        ts="ts",
+        price="value",
+        width="1 hour",
+        tiebreak="event_id",
+    ).select(F.col("event_type").alias("symbol"), "bar_ts", "close")
+
+
+def _rsi_sink(stream: DataFrame, out: str, ckpt: str):
+    from quant_market_data_pipeline_spark.streaming.stateful import (
+        wilder_rsi_stream,
+    )
+
+    rsi = wilder_rsi_stream(
+        stream, period=14, key="symbol", ts="bar_ts", close="close"
+    )
+    return parquet_append_sink(rsi, out, ckpt)
+
+
+def _rsi_rows(spark: SparkSession, out: str) -> DataFrame:
+    return (
+        spark.read.parquet(out)
+        .filter(F.col("rsi").isNotNull())
+        .select(
+            "symbol",
+            "bar_ts",
+            F.round("close", 6).alias("close"),
+            F.round("rsi", 4).alias("rsi"),
+        )
+    )
+
+
 @register(
     "stream_rsi_e2e",
     oracle="""
@@ -827,72 +730,16 @@ WHERE s.rn >= 15
     "16-digit margin.",
 )
 def q_stream_rsi_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
-    from quant_market_data_pipeline_spark.operators.bars import build_bars
-    from quant_market_data_pipeline_spark.streaming.bars_stream import (
-        read_tick_stream,
-    )
-    from quant_market_data_pipeline_spark.streaming.stateful import (
-        wilder_rsi_stream,
-    )
-
     configure_runtime(spark)
-    ev = load_table(spark, "events", sf_dir)
-    # cutoff from the UNFILTERED stream, exactly like the oracle's
-    # subquery — deriving it post value-filter would shift the bound if
-    # a fixture's earliest event were non-positive
-    cut = ev.agg(
-        (F.min("ts") + F.expr("INTERVAL 14 DAYS")).alias("c")
-    ).collect()[0]["c"]
-    ticks = ev.filter(F.col("value") > 0)
-    bars = build_bars(
-        ticks.filter(F.col("ts") < F.lit(cut)),
-        key="event_type",
-        ts="ts",
-        price="value",
-        width="1 hour",
-        tiebreak="event_id",
-    ).select(F.col("event_type").alias("symbol"), "bar_ts", "close")
+    bars = _rsi_bars(spark, sf_dir)
 
     base = _query_scratch(sf_dir, "_rsi")
     landing = str(base / "landing")
     out, ckpt = str(base / "out"), str(base / "ckpt")
     _land_time_sliced(bars, "bar_ts", landing, n_slices=4)
 
-    schema = T.StructType(
-        [
-            T.StructField("symbol", T.StringType()),
-            T.StructField("bar_ts", T.TimestampType()),
-            T.StructField("close", T.DoubleType()),
-        ]
-    )
-    stream = read_tick_stream(
-        spark, landing, schema=schema, fmt="parquet", max_files_per_trigger=1
-    )
-    rsi = wilder_rsi_stream(
-        stream, period=14, key="symbol", ts="bar_ts", close="close"
-    )
-    query = start_stream(
-        spark,
-        rsi.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True),
-    )
-    query.awaitTermination()
-
-    return (
-        spark.read.parquet(out)
-        .filter(F.col("rsi").isNotNull())
-        .select(
-            "symbol",
-            "bar_ts",
-            F.round("close", 6).alias("close"),
-            F.round("rsi", 4).alias("rsi"),
-        )
-    )
+    drain(spark, _rsi_sink(_landed_stream(spark, bars, landing), out, ckpt))
+    return _rsi_rows(spark, out)
 
 
 # ---------------------------------------------------------------------------
@@ -941,11 +788,6 @@ WINDOW wb AS (PARTITION BY symbol ORDER BY bucket_id
     "ring the batch window computes.",
 )
 def q_stream_vpin_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
-    from quant_market_data_pipeline_spark.streaming.bars_stream import (
-        read_tick_stream,
-    )
     from quant_market_data_pipeline_spark.streaming.stateful import (
         vpin_stream,
     )
@@ -964,19 +806,8 @@ def q_stream_vpin_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     out, ckpt = str(base / "out"), str(base / "ckpt")
     _land_time_sliced(ticks, "ts", landing, n_slices=3)
 
-    schema = T.StructType(
-        [
-            T.StructField("symbol", T.StringType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("event_id", T.LongType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-    stream = read_tick_stream(
-        spark, landing, schema=schema, fmt="parquet", max_files_per_trigger=1
-    )
     vpin = vpin_stream(
-        stream,
+        _landed_stream(spark, ticks, landing),
         bucket_size=50,
         window_buckets=5,
         key="symbol",
@@ -984,15 +815,7 @@ def q_stream_vpin_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         tiebreak="event_id",
         value="value",
     )
-    query = start_stream(
-        spark,
-        vpin.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True),
-    )
-    query.awaitTermination()
+    drain(spark, parquet_append_sink(vpin, out, ckpt))
 
     return spark.read.parquet(out).select(
         "symbol",
@@ -1081,14 +904,9 @@ ORDER BY e.symbol
     "batch HLL + exact distinct per symbol.",
 )
 def q_stream_hll_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
     from quant_market_data_pipeline_spark.queries.relational import (
         hll_estimate_from_regs,
         hll_rho_frame,
-    )
-    from quant_market_data_pipeline_spark.streaming.bars_stream import (
-        read_tick_stream,
     )
 
     configure_runtime(spark)
@@ -1101,42 +919,18 @@ def q_stream_hll_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     regs_out, ckpt = str(base / "regs"), str(base / "ckpt")
     _land_time_sliced(ev, "ts", landing, n_slices=4)
 
-    schema = T.StructType(
-        [
-            T.StructField("symbol", T.StringType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("user_id", T.LongType()),
-        ]
-    )
-    stream = read_tick_stream(
-        spark, landing, schema=schema, fmt="parquet", max_files_per_trigger=1
-    )
-
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # per-batch register PARTIALS; the batch_id partition makes a
-        # checkpoint-replayed batch overwrite exactly its own leaves
-        partial = (
+    def fold(batch_df: DataFrame) -> DataFrame:
+        # per-batch register PARTIALS, sketch-sized: one file per
+        # batch_id leaf
+        return (
             hll_rho_frame(batch_df, "user_id", ["symbol"])
             .groupBy("symbol", "bucket")
             .agg(F.max("rho").alias("rho_max"))
-            .withColumn("batch_id", F.lit(batch_id))
-        )
-        (
-            # sketch-sized partial: one file per batch_id leaf
-            partial.coalesce(1)
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(regs_out)
+            .coalesce(1)
         )
 
-    query = start_stream(
-        spark,
-        stream.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True),
-    )
-    query.awaitTermination()
+    stream = _landed_stream(spark, ev, landing)
+    drain(spark, batch_id_sink(stream, fold, regs_out, ckpt))
 
     merged = (
         spark.read.parquet(regs_out)
@@ -1247,15 +1041,11 @@ ORDER BY e.symbol, e.q
 )
 def q_stream_quantile_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
-    from pyspark.sql import types as T
 
     from quant_market_data_pipeline_spark.queries.relational import (
         _QH_BINS,
         _QH_QS,
         qh_bin_expr,
-    )
-    from quant_market_data_pipeline_spark.streaming.bars_stream import (
-        read_tick_stream,
     )
 
     configure_runtime(spark)
@@ -1278,22 +1068,11 @@ def q_stream_quantile_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     hist_out, ckpt = str(base / "hist"), str(base / "ckpt")
     _land_time_sliced(ev, "ts", landing, n_slices=4)
 
-    schema = T.StructType(
-        [
-            T.StructField("symbol", T.StringType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-    stream = read_tick_stream(
-        spark, landing, schema=schema, fmt="parquet", max_files_per_trigger=1
-    )
-
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # per-batch bin-count PARTIALS against the fixed edges; the
-        # batch_id partition makes a checkpoint-replayed batch
-        # overwrite exactly its own leaves (sum stays exact)
-        partial = (
+    def fold(batch_df: DataFrame) -> DataFrame:
+        # per-batch bin-count PARTIALS against the fixed edges (the
+        # batch_id scope keeps the sum exact under replay), sketch-sized:
+        # one file per batch_id leaf
+        return (
             batch_df.join(F.broadcast(edges), "symbol")
             .select(
                 "symbol",
@@ -1303,24 +1082,11 @@ def q_stream_quantile_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .groupBy("symbol", "bin")
             .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-            .withColumn("batch_id", F.lit(batch_id))
-        )
-        (
-            # sketch-sized partial: one file per batch_id leaf
-            partial.coalesce(1)
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(hist_out)
+            .coalesce(1)
         )
 
-    query = start_stream(
-        spark,
-        stream.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True),
-    )
-    query.awaitTermination()
+    stream = _landed_stream(spark, ev, landing)
+    drain(spark, batch_id_sink(stream, fold, hist_out, ckpt))
 
     # SUM-merge of partials == the batch histogram, exactly (integer
     # addition); from here the read-out is the batch audit's cumsum
@@ -1485,15 +1251,11 @@ ORDER BY exact_count DESC, user_key
 )
 def q_stream_countmin_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
-    from pyspark.sql import types as T
 
     from quant_market_data_pipeline_spark.queries.textprep import (
         _CMS_ROWS,
         _CMS_TOPK,
         cms_bucket_expr,
-    )
-    from quant_market_data_pipeline_spark.streaming.bars_stream import (
-        read_tick_stream,
     )
 
     configure_runtime(spark)
@@ -1505,16 +1267,6 @@ def q_stream_countmin_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     landing = str(base / "landing")
     cms_out, ckpt = str(base / "cms"), str(base / "ckpt")
     _land_time_sliced(ev, "ts", landing, n_slices=4)
-
-    schema = T.StructType(
-        [
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("w", T.StringType()),
-        ]
-    )
-    stream = read_tick_stream(
-        spark, landing, schema=schema, fmt="parquet", max_files_per_trigger=1
-    )
 
     def row_buckets(w_col):
         return F.explode(
@@ -1529,32 +1281,19 @@ def q_stream_countmin_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # per-batch counter PARTIALS; the batch_id partition makes a
-        # checkpoint-replayed batch overwrite exactly its own leaves
-        partial = (
+    def fold(batch_df: DataFrame) -> DataFrame:
+        # per-batch counter PARTIALS, sketch-sized: one file per
+        # batch_id leaf
+        return (
             batch_df.select(row_buckets(F.col("w")).alias("h"))
             .select("h.r", "h.bucket")
             .groupBy("r", "bucket")
             .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-            .withColumn("batch_id", F.lit(batch_id))
-        )
-        (
-            # sketch-sized partial: one file per batch_id leaf
-            partial.coalesce(1)
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(cms_out)
+            .coalesce(1)
         )
 
-    query = start_stream(
-        spark,
-        stream.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True),
-    )
-    query.awaitTermination()
+    stream = _landed_stream(spark, ev, landing)
+    drain(spark, batch_id_sink(stream, fold, cms_out, ckpt))
 
     # SUM-merge of partials == the batch sketch, exactly (integer
     # addition); the read-out is the batch audit's probe join.
@@ -1701,14 +1440,9 @@ FROM probed
     "bits/63 lane rows per batch, never the key space.",
 )
 def q_stream_bloom_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
     from quant_market_data_pipeline_spark.queries.relational import (
         _BF_LANE_BITS,
         bf_pos_expr,
-    )
-    from quant_market_data_pipeline_spark.streaming.bars_stream import (
-        read_tick_stream,
     )
 
     configure_runtime(spark)
@@ -1719,19 +1453,10 @@ def q_stream_bloom_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     bf_out, ckpt = str(base / "bloom"), str(base / "ckpt")
     _land_time_sliced(ev, "ts", landing, n_slices=4)
 
-    schema = T.StructType(
-        [
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("user_id", T.LongType()),
-        ]
-    )
-    stream = read_tick_stream(
-        spark, landing, schema=schema, fmt="parquet", max_files_per_trigger=1
-    )
-
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # per-batch (lane, bits) OR-partials; the batch_id partition
-        # keeps the sink idempotent (OR would forgive replays anyway)
+    def fold(batch_df: DataFrame) -> DataFrame:
+        # per-batch (lane, bits) OR-partials (OR would forgive replays
+        # even without the batch_id scope), sketch-sized: one file per
+        # batch_id leaf
         pos = batch_df.select(
             F.explode(
                 F.array(
@@ -1742,7 +1467,7 @@ def q_stream_bloom_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("pos")
         ).distinct()
-        partial = (
+        return (
             pos.select(
                 F.floor(F.col("pos") / _BF_LANE_BITS)
                 .cast("int")
@@ -1753,24 +1478,11 @@ def q_stream_bloom_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .groupBy("lane")
             .agg(F.bit_or("bit").alias("bits"))
-            .withColumn("batch_id", F.lit(batch_id))
-        )
-        (
-            # sketch-sized partial: one file per batch_id leaf
-            partial.coalesce(1)
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(bf_out)
+            .coalesce(1)
         )
 
-    query = start_stream(
-        spark,
-        stream.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True),
-    )
-    query.awaitTermination()
+    stream = _landed_stream(spark, ev, landing)
+    drain(spark, batch_id_sink(stream, fold, bf_out, ckpt))
 
     # OR-merge of partials == the batch-built filter, exactly
     bitmap = (
@@ -1907,18 +1619,12 @@ def _stream_minhash_oracle() -> str:
     "doc per batch, never the shingle stream.",
 )
 def q_stream_minhash_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
     from quant_market_data_pipeline_spark.llm.dedup import (
         lsh_candidate_pairs,
         minhash_signatures,
     )
-    from quant_market_data_pipeline_spark.llm.hashing import seeded_md5_long
     from quant_market_data_pipeline_spark.queries.llm import (
         lsh_corpus_shingled,
-    )
-    from quant_market_data_pipeline_spark.streaming.bars_stream import (
-        read_tick_stream,
     )
 
     configure_runtime(spark)
@@ -1928,56 +1634,15 @@ def q_stream_minhash_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     landing = str(base / "landing")
     sig_out, ckpt = str(base / "sigs"), str(base / "ckpt")
 
-    # hash-sliced landing: slice = h(shingle) % 4, so EVERY doc's
-    # shingle set is split across (up to) all 4 micro-batches and the
-    # MIN merge has real cross-batch work — a doc-sliced landing would
-    # make the merge vacuously single-partial.  MIN is order-
-    # independent, so unlike the stateful queries' time-sliced landing
-    # no mtime choreography is needed.
-    n_slices = 4
-    sliced = shingled.withColumn(
-        "slice", (seeded_md5_long("slice", F.col("sh")) % n_slices)
-    )
-    for i in range(n_slices):
-        (
-            sliced.filter(F.col("slice") == i)
-            .drop("slice")
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(landing)
-        )
+    # hash-sliced by SHINGLE, so EVERY doc's shingle set is split across
+    # (up to) all 4 micro-batches and the MIN merge has real cross-batch
+    # work — a doc-sliced landing would make the merge vacuously
+    # single-partial
+    _land_hash_sliced(shingled, "slice", "sh", landing)
 
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("sh", T.StringType()),
-        ]
-    )
-    stream = read_tick_stream(
-        spark, landing, schema=schema, fmt="parquet", max_files_per_trigger=1
-    )
-
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # the SHARED signature function builds the partial; batch_id
-        # partitioning makes a checkpoint-replayed batch overwrite
-        # exactly its own leaves (idempotent recovery)
-        partial = minhash_signatures(batch_df).withColumn(
-            "batch_id", F.lit(batch_id)
-        )
-        (
-            partial.write.mode("overwrite")
-            .partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(sig_out)
-        )
-
-    query = start_stream(
-        spark,
-        stream.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True),
-    )
-    query.awaitTermination()
+    # the SHARED signature function builds each batch's partial
+    stream = _landed_stream(spark, shingled, landing)
+    drain(spark, batch_id_sink(stream, minhash_signatures, sig_out, ckpt))
 
     # element-wise MIN merge of partials == the batch signature exactly
     merged = (
@@ -2059,15 +1724,11 @@ ORDER BY event_type
 )
 def q_stream_kmv_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
-    from pyspark.sql import types as T
 
     from quant_market_data_pipeline_spark.queries.relational import (
         _KMV_K,
         _kmv_est_expr,
         kmv_hv_expr,
-    )
-    from quant_market_data_pipeline_spark.streaming.bars_stream import (
-        read_tick_stream,
     )
 
     configure_runtime(spark)
@@ -2079,24 +1740,12 @@ def q_stream_kmv_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     landing = str(base / "landing")
     kmv_out, ckpt = str(base / "kmv"), str(base / "ckpt")
     _land_time_sliced(ev, "ts", landing, n_slices=4)
-
-    schema = T.StructType(
-        [
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-        ]
-    )
-    stream = read_tick_stream(
-        spark, landing, schema=schema, fmt="parquet", max_files_per_trigger=1
-    )
     wk = Window.partitionBy("event_type").orderBy("hv")
 
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # per-batch k-min partial: k smallest distinct hashes per type;
-        # the batch_id partition makes a checkpoint-replayed batch
-        # overwrite exactly its own leaves (idempotent recovery)
-        partial = (
+    def fold(batch_df: DataFrame) -> DataFrame:
+        # per-batch k-min partial: k smallest distinct hashes per type,
+        # sketch-sized: one file per batch_id leaf
+        return (
             batch_df.select(
                 "event_type", kmv_hv_expr(F.col("user_id")).alias("hv")
             )
@@ -2104,24 +1753,11 @@ def q_stream_kmv_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("rn", F.row_number().over(wk))
             .filter(F.col("rn") <= _KMV_K)
             .select("event_type", "hv")
-            .withColumn("batch_id", F.lit(batch_id))
-        )
-        (
-            # sketch-sized partial: one file per batch_id leaf
-            partial.coalesce(1)
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(kmv_out)
+            .coalesce(1)
         )
 
-    query = start_stream(
-        spark,
-        stream.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True),
-    )
-    query.awaitTermination()
+    stream = _landed_stream(spark, ev, landing)
+    drain(spark, batch_id_sink(stream, fold, kmv_out, ckpt))
 
     # k-min-of-union merge == the batch sketch exactly (order statistic
     # of the distinct union); the estimator is the shared branch
@@ -2190,6 +1826,7 @@ def _stream_vecidx_oracle() -> str:
     """Batch twin: SQ8 encode + IVF assignment of the WHOLE corpus via
     the shared fragments, sliced by the same md5 convention, aggregated
     to the identical per-slice stats."""
+    from quant_market_data_pipeline_spark.llm.similarity import EMB_DIM
     from quant_market_data_pipeline_spark.queries.llm import (
         SQ8_CODES_CTE,
         SQ8_RECON_CTE,
@@ -2209,7 +1846,7 @@ WITH vecs AS (
 ), cscored AS (
   SELECT a.vec_id, c.ccid,
          round(list_sum([(a.v[i]-c.ccv[i])*(a.v[i]-c.ccv[i])
-                         for i in generate_series(1,64)]), 6) AS cd2
+                         for i in generate_series(1,{EMB_DIM})]), 6) AS cd2
   FROM vecs a CROSS JOIN cents c
 ), assign AS (
   SELECT vec_id, ccid AS cell FROM (
@@ -2219,7 +1856,7 @@ WITH vecs AS (
 ), rerr AS (
   SELECT v.vec_id,
          round(list_sum([(v.v[i]-r.rv[i])*(v.v[i]-r.rv[i])
-                         for i in generate_series(1,64)]), 6) AS e2
+                         for i in generate_series(1,{EMB_DIM})]), 6) AS e2
   FROM vecs v JOIN recon r ON r.vec_id = v.vec_id
 ), corpus_err AS (
   SELECT avg(e2) AS c_err FROM rerr
@@ -2229,7 +1866,7 @@ WITH vecs AS (
               % 4 AS INTEGER) AS slice,
          a.cell, e.e2,
          list_sum([CAST(c.code[i] AS BIGINT) * i
-                   for i in generate_series(1, 64)])
+                   for i in generate_series(1, {EMB_DIM})])
            * (c.vec_id + 1) AS row_sum
   FROM codes c
   JOIN assign a ON a.vec_id = c.vec_id
@@ -2276,21 +1913,17 @@ def q_stream_vector_index_e2e(
     import math
 
     from pyspark.sql import Window
-    from pyspark.sql import types as T
 
     from quant_market_data_pipeline_spark.llm.hashing import (
         seeded_md5_long,
     )
     from quant_market_data_pipeline_spark.llm.similarity import (
+        EMB_DIM,
         as_double,
         l2_sq,
         sq8_codes,
         sq8_dim_stats,
         sq8_recon,
-    )
-    from quant_market_data_pipeline_spark.sources.tables import load_table
-    from quant_market_data_pipeline_spark.streaming.bars_stream import (
-        read_tick_stream,
     )
 
     configure_runtime(spark)
@@ -2315,33 +1948,12 @@ def q_stream_vector_index_e2e(
     landing = str(base / "landing")
     codes_out, ckpt = str(base / "codes"), str(base / "ckpt")
 
-    # hash-sliced landing: 4 disjoint arrival batches (MIN/OR-style
-    # order independence is not needed — every vector arrives exactly
-    # once; the slice hash just makes arrival order arbitrary)
-    n_slices = 4
-    sliced = emb.withColumn(
-        "slice", (seeded_md5_long("vslice", F.col("vec_id")) % n_slices)
-    )
-    for i in range(n_slices):
-        (
-            sliced.filter(F.col("slice") == i)
-            .drop("slice")
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(landing)
-        )
+    # hash-sliced landing: 4 disjoint arrival batches (every vector
+    # arrives exactly once; the slice hash just makes arrival order
+    # arbitrary)
+    _land_hash_sliced(emb, "vslice", "vec_id", landing)
 
-    schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("embedding", T.ArrayType(T.FloatType())),
-        ]
-    )
-    stream = read_tick_stream(
-        spark, landing, schema=schema, fmt="parquet", max_files_per_trigger=1
-    )
-
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def fold(batch_df: DataFrame) -> DataFrame:
         bvecs = batch_df.select(
             "vec_id", as_double(F.col("embedding")).alias("v")
         )
@@ -2359,25 +1971,10 @@ def q_stream_vector_index_e2e(
             .filter(F.col("__rn") == 1)
             .select("vec_id", F.col("ccid").alias("cell"))
         )
-        out = (
-            sq8_codes(bvecs, lo, hi)
-            .join(assign, "vec_id")
-            .withColumn("batch_id", F.lit(batch_id))
-        )
-        (
-            out.write.mode("overwrite")
-            .partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(codes_out)
-        )
+        return sq8_codes(bvecs, lo, hi).join(assign, "vec_id")
 
-    query = start_stream(
-        spark,
-        stream.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True),
-    )
-    query.awaitTermination()
+    stream = _landed_stream(spark, emb, landing)
+    drain(spark, batch_id_sink(stream, fold, codes_out, ckpt))
 
     # ---- read-out: per-slice stats from the STREAMED codes ----------
     streamed = spark.read.parquet(codes_out).select(
@@ -2391,7 +1988,7 @@ def q_stream_vector_index_e2e(
     row_sum = F.aggregate(
         F.zip_with(
             F.col("code").cast("array<bigint>"),
-            F.sequence(F.lit(1), F.lit(64)).cast("array<bigint>"),
+            F.sequence(F.lit(1), F.lit(EMB_DIM)).cast("array<bigint>"),
             lambda cd, i: cd * i,
         ),
         F.lit(0).cast("bigint"),

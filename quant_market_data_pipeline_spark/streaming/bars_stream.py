@@ -14,7 +14,8 @@ Maps the reference's batch semantics onto Structured Streaming
 - ``dropDuplicatesWithinWatermark`` is the stateful dedup (key-only
   subsets still age out of state);
 - ``foreachBatch`` writes idempotent partitioned parquet, replacing the
-  destructive JDBC overwrite (S5).
+  destructive JDBC overwrite (S5): :func:`batch_id_sink` is the one
+  write every foreachBatch stream in the package goes through.
 
 State sizing at scale: the watermark delay bounds the window state to
 (symbols x windows-in-delay); with a 10-minute delay on 5-minute bars
@@ -22,6 +23,8 @@ that's 3 windows per symbol regardless of throughput.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -182,61 +185,94 @@ def stream_bars(
     )
 
 
-def parquet_bar_sink(
-    bars: DataFrame,
+def batch_id_sink(
+    stream: DataFrame,
+    fold: Callable[[DataFrame], DataFrame],
     out_dir: str,
     checkpoint_dir: str,
-    partition_by: str | None = "symbol",
+    partition_cols: Sequence[str] = (),
 ) -> DataStreamWriter:
     """Idempotent partitioned-parquet sink via foreachBatch.
 
-    Append-mode emits each finalized window exactly once, so distinct
-    micro-batches never produce the same (key, bar_ts) — but they DO share
-    trading dates, so the overwrite scope must be batch-granular, not
-    date-granular: overwriting whole ``trading_date`` partitions would let
-    every batch wipe the bars earlier batches wrote for that date (silent
-    data loss in continuous operation or any multi-batch availableNow run).
-    Each write therefore lands under ``(trading_date, .., batch_id)`` with
-    dynamic partition overwrite: a replayed micro-batch (failure/retry with
-    the same checkpoint) rewrites exactly its own ``batch_id`` leaves —
-    exactly-once at the batch level — while other batches' output is
-    untouched.  Readers prune on ``trading_date`` (and ``partition_by``)
-    as before; ``batch_id`` is just the idempotence scope.
+    Every micro-batch writes ``fold(batch)`` plus a ``batch_id`` column
+    under ``(*partition_cols, batch_id)`` with dynamic partition
+    overwrite.  ``batch_id`` is the replay-idempotence scope: a replayed
+    micro-batch (failure/retry with the same checkpoint) rewrites exactly
+    its own ``batch_id`` leaves — exactly-once at the batch level — while
+    every other batch's output is untouched.  The scope must be
+    batch-granular, not ``partition_cols``-granular: distinct
+    micro-batches share partition values (trading dates, for bars), and
+    overwriting whole partitions would let every batch wipe what earlier
+    batches wrote there (silent data loss in continuous operation or any
+    multi-batch availableNow run).  Readers prune on ``partition_cols``
+    as before and merge or union the ``batch_id`` leaves.
 
     Start the returned writer with ``session.start_stream``: the shuffle
     partition count it sets is fixed into a new checkpoint, and a query
     that resumes an existing checkpoint keeps the count recorded there.
     """
 
-    part_cols = ["trading_date"] + ([partition_by] if partition_by else [])
-
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         (
-            batch_df.withColumn("trading_date", F.to_date("bar_ts"))
+            fold(batch_df)
             .withColumn("batch_id", F.lit(batch_id))
-            # r15 (guide §6): cluster the batch by its partition columns
-            # before the write — without this every one of the frame's
-            # shuffle partitions opens a file in every partition leaf it
-            # touches (measured at sf0.1: 4,797 files for 38,900 bar
-            # rows, and the per-batch addBatch wall is file-commit
-            # bound, 42 s for batch 1).  One hash exchange of the
-            # batch's bar rows (dimension-sized: bars, not ticks) makes
-            # each (trading_date, key) leaf exactly one task's output —
-            # same rows, same partition values, ~10x fewer files here
-            # and file count ~ leaf count at any scale.  Hot leaves
-            # stay bounded: a (date, key) pair holds at most one bar
-            # row per window, so single-task leaves cannot skew.
-            .repartition(*part_cols)
             .write.mode("overwrite")
-            .partitionBy(*part_cols, "batch_id")
+            .partitionBy(*partition_cols, "batch_id")
             .option("partitionOverwriteMode", "dynamic")
             .parquet(out_dir)
         )
 
     return (
-        bars.writeStream.outputMode("append")
+        stream.writeStream.outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
         .foreachBatch(write_batch)
+    )
+
+
+def parquet_bar_sink(
+    bars: DataFrame, out_dir: str, checkpoint_dir: str
+) -> DataStreamWriter:
+    """Bars into the lake under ``(trading_date, symbol, batch_id)``.
+
+    Append mode emits each finalized window exactly once, so distinct
+    micro-batches never produce the same (symbol, bar_ts); they do share
+    trading dates, which is why the write goes through
+    :func:`batch_id_sink`.  Readers prune on ``trading_date`` and
+    ``symbol``.
+    """
+    part_cols = ("trading_date", "symbol")
+
+    def fold(batch_df: DataFrame) -> DataFrame:
+        # r15 (guide §6): cluster the batch by its partition columns
+        # before the write — without this every one of the frame's
+        # shuffle partitions opens a file in every partition leaf it
+        # touches (measured at sf0.1: 4,797 files for 38,900 bar rows,
+        # and the per-batch addBatch wall is file-commit bound, 42 s for
+        # batch 1).  One hash exchange of the batch's bar rows
+        # (dimension-sized: bars, not ticks) makes each (trading_date,
+        # symbol) leaf exactly one task's output — same rows, same
+        # partition values, ~10x fewer files here and file count ~ leaf
+        # count at any scale.  Hot leaves stay bounded: a (date, symbol)
+        # pair holds at most one bar row per window, so single-task
+        # leaves cannot skew.
+        return batch_df.withColumn(
+            "trading_date", F.to_date("bar_ts")
+        ).repartition(*part_cols)
+
+    return batch_id_sink(bars, fold, out_dir, checkpoint_dir, part_cols)
+
+
+def parquet_append_sink(
+    frame: DataFrame, out_dir: str, checkpoint_dir: str
+) -> DataStreamWriter:
+    """Spark's native append parquet sink: its ``_spark_metadata``
+    commit log keeps a killed batch's orphan files invisible to readers
+    until the replay commits them (exactly-once without ``batch_id``)."""
+    return (
+        frame.writeStream.format("parquet")
+        .option("path", out_dir)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("append")
     )
 
 

@@ -11,7 +11,8 @@
    lane walls, unclamped warm-min gating, and slim-line headroom.
 4. Streaming scratch: per-process roots, one creation helper for every
    query, and the age backstop on the stale-scratch sweep; every engine
-   stream starts through ``session.start_stream``.
+   stream starts through ``session.start_stream``, and every ``batch_id``
+   write goes through ``bars_stream.batch_id_sink``.
 5. Session sizing: the default driver heap fits the host.
 """
 
@@ -292,6 +293,39 @@ def test_every_engine_stream_starts_via_helper():
     assert [(rel, call) for rel, _, call in sites] == [
         ("quant_market_data_pipeline_spark/session.py", "writer.start()")
     ], f"start streams with session.start_stream: {sites}"
+
+
+def test_every_batch_id_write_goes_through_the_sink():
+    """The only ``partitionBy(..., "batch_id")`` write in the package is
+    the one inside ``bars_stream.batch_id_sink``: every foreachBatch
+    stream keeps one replay-idempotence scope instead of its own copy."""
+    pkg = os.path.join(REPO, "quant_market_data_pipeline_spark")
+    sites = []
+    for root, _, files in os.walk(pkg):
+        for fn in sorted(files):
+            if not fn.endswith(".py"):
+                continue
+            path = os.path.join(root, fn)
+            with open(path) as f:
+                tree = ast.parse(f.read())
+            for top in tree.body:
+                for node in ast.walk(top):
+                    if (
+                        isinstance(node, ast.Call)
+                        and isinstance(node.func, ast.Attribute)
+                        and node.func.attr == "partitionBy"
+                        and any(
+                            isinstance(a, ast.Constant)
+                            and a.value == "batch_id"
+                            for a in node.args
+                        )
+                    ):
+                        rel = os.path.relpath(path, REPO)
+                        sites.append((rel, getattr(top, "name", None)))
+    assert sites == [
+        ("quant_market_data_pipeline_spark/streaming/bars_stream.py",
+         "batch_id_sink")
+    ], f"write batch_id partials through batch_id_sink: {sites}"
 
 
 def test_scratch_sweep_age_backstop(tmp_path, monkeypatch):

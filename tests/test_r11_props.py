@@ -1,5 +1,6 @@
-"""Round-11 property tests: KMV/theta-sketch set operations, the SNM
-candidate family and the streamed Count-Min maintenance — each checked
+"""Round-11 property tests: KMV/theta-sketch set operations and the SNM
+candidate family (the streamed Count-Min and Bloom tests live in
+tests/test_stream_sketches.py) — each checked
 against an INDEPENDENT plain-Python twin that derives every constant
 from the published construction, never from production imports (the
 r10 lesson: a twin that imports the production numerator can only
@@ -210,55 +211,6 @@ def test_snm_jaccard_matches_python_twin(spark):
         assert r.jaccard == pytest.approx(want, abs=1e-6)
 
 
-def test_stream_cms_merged_equals_batch_sketch(spark):
-    """Split-invariance, checked on the ACTUAL partials the streaming
-    query leaves behind: SUM-merging the per-batch (r, bucket) counter
-    partials must reproduce the batch sketch computed in one pass —
-    and the served estimates never undercount."""
-    from pathlib import Path
-
-    from quant_market_data_pipeline_spark.queries import load_all
-    from quant_market_data_pipeline_spark.queries.streaming_e2e import (
-        _SCRATCH,
-    )
-    from quant_market_data_pipeline_spark.queries.textprep import (
-        _CMS_ROWS,
-        cms_bucket_expr,
-    )
-    from quant_market_data_pipeline_spark.sources.tables import load_table
-
-    q = load_all()["stream_countmin_e2e"]
-    rows = q.spark(spark, SF_DIR).collect()
-    assert rows and all(r.overestimate >= 0 for r in rows)
-    assert all(
-        r.cms_estimate == r.exact_count + r.overestimate for r in rows
-    )
-
-    partials = spark.read.parquet(
-        str(_SCRATCH / (Path(SF_DIR).name + "_cms") / "cms")
-    )
-    assert partials.select("batch_id").distinct().count() > 1  # real split
-    merged = {
-        (r.r, r.bucket): r.c
-        for r in partials.groupBy("r", "bucket")
-        .agg(F.sum("c").alias("c"))
-        .collect()
-    }
-    ev = load_table(spark, "events", SF_DIR).select(
-        F.col("user_id").cast("string").alias("w")
-    )
-    batch = {}
-    for r in range(_CMS_ROWS):
-        for row in (
-            ev.select(cms_bucket_expr(r, F.col("w")).alias("bucket"))
-            .groupBy("bucket")
-            .count()
-            .collect()
-        ):
-            batch[(r, row.bucket)] = row["count"]
-    assert merged == batch
-
-
 def test_zorder_morton_interleave_twin(spark):
     # the Morton code expression must equal an independent bit-interleave
     from quant_market_data_pipeline_spark.queries.pipeline_ops import (
@@ -304,67 +256,6 @@ def test_zorder_audit_prunes_better_than_linear(spark):
     assert (
         rows["zorder"].file_skip_ratio > rows["linear"].file_skip_ratio
     )
-
-
-def test_stream_bloom_or_merge_and_no_false_negatives(spark):
-    """OR-merge invariance on the actual partials + the Bloom
-    invariant: members NEVER fail the filter."""
-    from pathlib import Path
-
-    from quant_market_data_pipeline_spark.queries import load_all
-    from quant_market_data_pipeline_spark.queries.relational import (
-        _BF_LANE_BITS,
-        bf_pos_expr,
-    )
-    from quant_market_data_pipeline_spark.queries.streaming_e2e import (
-        _SBF_BITS,
-        _SBF_K,
-        _SCRATCH,
-    )
-    from quant_market_data_pipeline_spark.sources.tables import load_table
-
-    q = load_all()["stream_bloom_e2e"]
-    row = q.spark(spark, SF_DIR).collect()[0]
-    assert row.n_false_neg == 0
-    assert row.n_bloom_pass == row.n_member + row.n_false_pos
-    assert row.n_probes == 2 * row.n_member
-    assert 0.0 < row.fill_ratio < 1.0
-
-    partials = spark.read.parquet(
-        str(_SCRATCH / (Path(SF_DIR).name + "_bloom") / "bloom")
-    )
-    assert partials.select("batch_id").distinct().count() > 1
-    merged = {
-        r.lane: r.bits
-        for r in partials.groupBy("lane")
-        .agg(F.bit_or("bits").alias("bits"))
-        .collect()
-    }
-    ev = load_table(spark, "events", SF_DIR)
-    batch = {
-        r.lane: r.bits
-        for r in ev.select(
-            F.explode(
-                F.array(
-                    *[
-                        bf_pos_expr(r, F.col("user_id"), _SBF_BITS)
-                        for r in range(_SBF_K)
-                    ]
-                )
-            ).alias("pos")
-        )
-        .distinct()
-        .select(
-            F.floor(F.col("pos") / _BF_LANE_BITS).cast("int").alias("lane"),
-            F.expr(
-                f"shiftleft(1L, cast(pos % {_BF_LANE_BITS} as int))"
-            ).alias("bit"),
-        )
-        .groupBy("lane")
-        .agg(F.bit_or("bit").alias("bits"))
-        .collect()
-    }
-    assert merged == batch
 
 
 def test_snm_misses_only_key_displaced_eligible_twins(spark):

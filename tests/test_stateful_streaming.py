@@ -400,12 +400,15 @@ def test_vpin_crash_recovery_state_reloads(spark):
     )
     from quant_market_data_pipeline_spark.queries.streaming_e2e import (
         _SCRATCH,
-        _kill_after_batches,
         _land_time_sliced,
     )
     from quant_market_data_pipeline_spark.sources.tables import load_table
     from quant_market_data_pipeline_spark.streaming.bars_stream import (
+        parquet_append_sink,
         read_tick_stream,
+    )
+    from quant_market_data_pipeline_spark.streaming.pipeline import (
+        kill_and_resume,
     )
     from quant_market_data_pipeline_spark.streaming.stateful import (
         vpin_stream,
@@ -434,7 +437,7 @@ def test_vpin_crash_recovery_state_reloads(spark):
         ]
     )
 
-    def start(available_now: bool):
+    def writer():
         stream = read_tick_stream(
             spark, landing, schema=schema, fmt="parquet",
             max_files_per_trigger=1,
@@ -448,20 +451,9 @@ def test_vpin_crash_recovery_state_reloads(spark):
             tiebreak="event_id",
             value="value",
         )
-        writer = (
-            v.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return start_stream(spark, writer)
+        return parquet_append_sink(v, out, ckpt)
 
-    q1 = start(available_now=False)
-    killed_after = _kill_after_batches(q1)
-    q2 = start(available_now=True)
-    q2.awaitTermination()
+    killed_after = kill_and_resume(spark, writer)["phase1_batches"]
     assert killed_after >= 2
 
     got = {
@@ -476,3 +468,44 @@ def test_vpin_crash_recovery_state_reloads(spark):
     }
     assert got == want
     assert len(got) > 0
+
+
+def test_rsi_crash_recovery_state_reloads(spark):
+    """Kill the Wilder RSI stream mid-flight after >= 2 committed
+    batches and restart from the same checkpoint: the per-key smoothed
+    averages are a recursion over the whole history, so a lost or
+    doubled bar on restart shifts every later RSI value.  The drained
+    output must equal the uninterrupted ``stream_rsi_e2e`` rows."""
+    from conftest import SF_DIR
+
+    from quant_market_data_pipeline_spark.queries import load_all
+    from quant_market_data_pipeline_spark.queries.streaming_e2e import (
+        _land_time_sliced,
+        _landed_stream,
+        _query_scratch,
+        _rsi_bars,
+        _rsi_rows,
+        _rsi_sink,
+    )
+    from quant_market_data_pipeline_spark.streaming.pipeline import (
+        kill_and_resume,
+    )
+
+    bars = _rsi_bars(spark, SF_DIR)
+    base = _query_scratch(SF_DIR, "_rsicrash")
+    landing = str(base / "landing")
+    out, ckpt = str(base / "out"), str(base / "ckpt")
+    _land_time_sliced(bars, "bar_ts", landing, n_slices=6)
+
+    stats = kill_and_resume(
+        spark,
+        lambda: _rsi_sink(_landed_stream(spark, bars, landing), out, ckpt),
+    )
+    assert stats["phase1_batches"] >= 2, stats
+
+    got = sorted(_rsi_rows(spark, out).collect())
+    want = sorted(
+        load_all()["stream_rsi_e2e"].spark(spark, SF_DIR).collect()
+    )
+    assert len(got) == len(want) > 0, (len(got), len(want), stats)
+    assert got == want
